@@ -17,6 +17,8 @@ columns by name).
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
@@ -1167,14 +1169,15 @@ def _sql_fetch_throughput():
 
 
 def q_span_extraction(spark, sf_dir):
-    """X1-X5: span extraction over the synthetic corpus. Oracle = the
-    corpus's ground-truth ordered segment lists (built independently of the
-    regex parse kernel) as SQL VALUES."""
+    """X1-X5: span extraction over the synthetic corpus, through the crawl's
+    own parse kernel and span projection. Oracle = the corpus's
+    ground-truth ordered segment lists (built independently of the regex
+    parse kernel) as SQL VALUES."""
     from nutch_spark.corpus import SyntheticWeb
-    from nutch_spark.operators.parse import extract_spans
+    from nutch_spark.operators.parse import explode_spans, extract_documents_by_mime
 
     tables = SyntheticWeb(n_hosts=6, pages_per_host=3, mega_factor=3).to_spark(spark)
-    return extract_spans(tables["raw_content"]).select(
+    return explode_spans(extract_documents_by_mime(tables["raw_content"])).select(
         "doc_id", "offset", "kind", "text", "media_ref"
     )
 
@@ -1472,18 +1475,17 @@ def _sql_regex_normalize():
 
 def q_items(spark, sf_dir):
     """X11: all 15 platform item extractors over the synthetic corpus
-    (spans -> documents -> config-driven extraction incl. the price-image
-    OCR-lookup analogue). Oracle = the corpus's planted item ground truth."""
+    (parse kernel documents -> config-driven extraction incl. the
+    price-image OCR-lookup analogue). Oracle = the corpus's planted item
+    ground truth."""
     from nutch_spark.corpus import SyntheticWeb
     from nutch_spark.operators.items import extract_items
-    from nutch_spark.operators.parse import extract_spans, spans_to_documents
+    from nutch_spark.operators.parse import extract_documents_by_mime
 
     tables = SyntheticWeb(n_hosts=6, pages_per_host=3, mega_factor=3).to_spark(spark)
-    docs = spans_to_documents(
-        extract_spans(tables["raw_content"]).select(
-            "doc_id", "offset", "kind", "text", "media_ref"
-        )
-    )
+    # documents = the non-empty nested rows, as run_parse commits them
+    docs = extract_documents_by_mime(tables["raw_content"]).filter(
+        F.size("spans") > 0).select("doc_id", "spans")
     items = extract_items(docs, tables["price_images"])
     return items.select(
         "doc_id", "platform", "item_id", "name",
@@ -1503,7 +1505,10 @@ def _sql_items():
 # duplicate clustering
 # ---------------------------------------------------------------------------
 
-_FIXTURE_DIR = "/root/repo/.gate_fixtures"
+# repo-local scratch dir beside the package (git-ignored), so every
+# checkout or copy writes its fixtures into itself
+_FIXTURE_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".gate_fixtures")
 
 
 def q_mime_resolve(spark, sf_dir):
@@ -1643,8 +1648,6 @@ FROM range(200) t(i)
 def _write_arc_gate_fixture() -> str:
     """Deterministic 2-file ARC fixture under the repo-scratch dir
     (idempotent rewrite per call)."""
-    import os
-
     from nutch_spark.sources.arc import write_arc_file
 
     d = os.path.join(_FIXTURE_DIR, "arc")
@@ -1703,8 +1706,6 @@ def _dmoz_gate_rdf(n: int = 600) -> str:
 def q_dmoz_import(spark, sf_dir):
     """S9 DMOZ import (tools/DmozParser.java:54-400): structure walk, adult
     filter, md5-quarter-digest subset sampling (denominator 4)."""
-    import os
-
     from nutch_spark.sources.dmoz import read_dmoz
 
     d = os.path.join(_FIXTURE_DIR, "dmoz")

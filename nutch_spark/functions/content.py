@@ -178,7 +178,9 @@ def _detect_statistical(data: bytes) -> list[tuple[str, int]]:
     confidence first like detectAll(): a BOM is certain (100); strict
     UTF-8 validity with at least one multibyte sequence is unambiguous
     (100); BOM-less UTF-16 shows as NUL-dominated odd/even byte lanes
-    (80). Pure ASCII yields no clue (any single-byte codec fits)."""
+    (100: a NUL-free lane opposite a majority-NUL lane fits no single-byte
+    codec, so a declared charset disagreeing with it is wrong). Pure ASCII
+    yields no clue (any single-byte codec fits)."""
     head = data[:CHUNK_SIZE]
     bom = detect_bom(head)
     if bom:
@@ -212,9 +214,9 @@ def _detect_statistical(data: bytes) -> list[tuple[str, int]]:
         odd = sum(1 for b in head[1::2] if b == 0)
         half = len(head) // 2
         if half and even > half * 0.6 >= 1 and odd == 0:
-            return [("utf-16be", 80)]
+            return [("utf-16be", 100)]
         if half and odd > half * 0.6 >= 1 and even == 0:
-            return [("utf-16le", 80)]
+            return [("utf-16le", 100)]
     return []
 
 

@@ -12,7 +12,7 @@
 Both are debug surfaces over the production kernels, not new computation:
 they call the same run_parse / build_index paths the crawl cycle uses, so
 what they display IS what the pipeline would commit. Input is a content
-DataFrame (url, content[, content_type]) — the sandbox's simulated-fetch
+DataFrame (url, content, content_type) — the sandbox's simulated-fetch
 convention (SURVEY §2.1 S10); with a real protocol stack the content rows
 would come from the fetcher.
 
@@ -54,15 +54,13 @@ def _resolved_content(content: DataFrame,
     shared by both checkers so they dispatch identically."""
     if force_content_type is not None:  # -forceAs (ParserChecker.java:58-60,86-88)
         return content.withColumn("content_type", F.lit(force_content_type))
-    if "content_type" in content.columns:
-        return content.withColumn(
-            "content_type",
-            resolve_mime_udf(
-                F.col("content_type"), F.col("url"),
-                F.col("content").cast("binary"),
-            ),
-        )
-    return content
+    return content.withColumn(
+        "content_type",
+        resolve_mime_udf(
+            F.col("content_type"), F.col("url"),
+            F.col("content").cast("binary"),
+        ),
+    )
 
 
 def check_parse(
@@ -86,11 +84,8 @@ def check_parse(
         F.when(F.col("outlinks").isNull(), F.lit(0))
         .otherwise(F.size("outlinks")).alias("n_outlinks"),
     )
-    out = content.select(
-        "url",
-        *(["content_type"] if "content_type" in content.columns else
-          [F.lit(None).cast("string").alias("content_type")]),
-    ).join(sig, "url", "left").join(pdata, "url", "left")
+    out = content.select("url", "content_type").join(
+        sig, "url", "left").join(pdata, "url", "left")
     if dump_text:
         out = out.join(
             res["parse_text"].select("url", "text"), "url", "left")

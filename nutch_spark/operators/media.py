@@ -1,12 +1,16 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
 with typed metadata; decode/resize/frame-sample as mapInPandas kernels.
 
-Image decode is REAL (round 5): payloads are decoded by the stdlib-only
-codecs in functions/imaging.py (binary PPM, uncompressed 24-bit BMP,
-non-interlaced 8-bit PNG via zlib) and features/resize operate on the
-actual pixel array. Audio/video payloads have no in-container decoder —
-those rows surface decoded=False with zero features, the same contract a
-production ffmpeg/torchaudio swap-in would fill.
+Decode is REAL for all three media kinds, by stdlib-only codecs:
+- images (extract_media_features, resize): binary PPM, uncompressed 24-bit
+  BMP and non-interlaced 8-bit PNG via zlib (functions/imaging.py);
+  features and resize operate on the actual pixel array;
+- audio (extract_audio_features): RIFF/WAVE PCM (functions/audio.py);
+- video (extract_video_frames): uncompressed RIFF/AVI (functions/video.py).
+Only compressed codecs (mp3/aac, h264/vp9, MJPEG ...) stay undecoded: those
+rows surface decoded=False (video: no frames), the contract a production
+ffmpeg/torchaudio swap-in would fill. extract_media_features is the
+image-pixel kernel, so audio/video rows come out of it decoded=False too.
 
 Crawl-side tie-in: media spans in the documents table carry media_ref; the
 media table is keyed by media_ref so span-level joins are equi-joins.
@@ -81,8 +85,9 @@ def synth_media_table(spark, media_refs: list[str], seed: int = 42) -> DataFrame
     REAL files — PPM / BMP / PNG rotating on the ref index, all encoding
     the same synth_pixels(idx) array — so the decode path exercises three
     actual formats while the decoded features stay recomputable in plain
-    SQL. Audio/video payloads stay opaque arithmetic bytes (no decoder in
-    this container)."""
+    SQL. Audio payloads are REAL 8-bit PCM WAV and video payloads REAL
+    uncompressed AVI, whose decoded samples/frames are plain arithmetic
+    too."""
     rows = []
     for ref in media_refs:
         idx = ref_index(ref)

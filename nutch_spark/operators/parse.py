@@ -15,13 +15,19 @@ Reference semantics:
 - signature + linked + redirect rows -> crawl_parse analogue
   (parse/ParseOutputFormat.java:127-290).
 
-The span extractor runs in mapInPandas (Arrow batches, one regex pass per
-document, no JVM round-trips); everything downstream (outlink dedupe/cap,
-score distribution, explode) is native Catalyst.
+One parse path: every record is parsed once, by one mapInPandas kernel
+(extract_documents_by_mime) that groups each Arrow batch by content_type
+family and emits nested documents (doc_id, title, directives, meta, spans)
+— html walks the DOM scan, plain/js assemble their own rows, and every
+binary family (zip, pdf, rtf/odf, swf) shares one row assembler over a
+per-family extract adapter. Flat span rows, documents and parse_text are
+narrow projections of that nested output (explode_spans); everything
+downstream (outlink dedupe/cap, score distribution) is native Catalyst.
 """
 
 from __future__ import annotations
 
+import functools
 import re
 from typing import Iterator
 
@@ -40,6 +46,9 @@ from nutch_spark.functions.signatures import make_text_profile_udf
 from nutch_spark.functions.urls import (
     RegexUrlFilter, host_col, normalize_inline, normalize_url, normalize_url_udf,
 )
+from nutch_spark.operators.officeparse import extract_odf, extract_rtf
+from nutch_spark.operators.pdfparse import extract_pdf, extract_text_outlinks
+from nutch_spark.operators.swfparse import extract_swf
 
 _DEFAULT_NORMALIZERS = ScopedNormalizers()
 
@@ -353,18 +362,6 @@ def parse_meta_directives(content: str, base_url: str):
                     refresh_to = None
     return noindex, nofollow, refresh_to, general
 
-SPAN_ROWS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("offset", T.IntegerType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("media_ref", T.StringType(), True),
-        T.StructField("title", T.StringType(), True),
-    ]
-)
-
-
 DOCS_NESTED_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),
@@ -593,22 +590,6 @@ def extract_documents_pdf(pdf: pd.DataFrame, ignore_tags: tuple = (),
     })
 
 
-def _make_docs_kernel(ignore_tags: tuple = (), form_use_action: bool = True):
-    def _docs_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            res = extract_documents_pdf(pdf, ignore_tags, form_use_action)
-            if len(res):
-                yield res
-    return _docs_kernel
-
-
-def extract_documents(content_df: DataFrame, ignore_tags: tuple = (),
-                      form_use_action: bool = True) -> DataFrame:
-    """(url, content) -> nested documents (doc_id, title, spans) in doc order."""
-    return content_df.select("url", "content").mapInPandas(
-        _make_docs_kernel(ignore_tags, form_use_action), DOCS_NESTED_SCHEMA)
-
-
 def _plain_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     """parse-text analogue: the whole body is one text span, no outlinks,
     no meta (plugin parse-text TextParser semantics)."""
@@ -734,152 +715,105 @@ def extract_zip_parse(data: bytes, url: str):
     return "".join(text_parts), outlinks
 
 
-def _zip_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    """parse-zip as a MIME parser: member texts concatenated in entry order
-    are the parse text (one text span); member outlinks become link spans.
-    Accepts binary or latin-1 string content columns."""
-    rows = []
-    for url, content in zip(pdf["url"], pdf["content"]):
-        if content is None:
-            continue
-        data = (bytes(content) if isinstance(content, (bytes, bytearray))
-                else content.encode("latin-1", "ignore"))
-        parsed = extract_zip_parse(data, url)
-        if parsed is None:
-            continue
-        text, links = parsed
-        spans = [{"kind": "text", "text": text, "media_ref": None, "offset": 0}]
-        for i, (to, anchor) in enumerate(links):
-            spans.append({"kind": "link", "text": anchor,
-                          "media_ref": to, "offset": i + 1})
-        rows.append({"doc_id": url, "title": "", "noindex": False,
-                     "nofollow": False, "refresh_to": None, "meta": {},
-                     "spans": spans})
-    return pd.DataFrame(rows)
+def _binary_family(extract):
+    """One ParseResult row assembler for every binary MIME family (the
+    parse-tika / parse-zip / parse-swf analogues). `extract(data, url)`
+    returns (title, text, [(to_url, anchor)]) or None; the row is one text
+    span followed by the link spans in extractor order. Content arrives
+    binary or as a latin-1 string; None content and None results (the
+    FAILED parse path) produce no document."""
+    def build(pdf: pd.DataFrame) -> pd.DataFrame:
+        rows = []
+        for url, content in zip(pdf["url"], pdf["content"]):
+            if content is None:
+                continue
+            data = (bytes(content) if isinstance(content, (bytes, bytearray))
+                    else content.encode("latin-1", "ignore"))
+            parsed = extract(data, url)
+            if parsed is None:
+                continue
+            title, text, links = parsed
+            spans = [{"kind": "text", "text": text, "media_ref": None, "offset": 0}]
+            spans += [{"kind": "link", "text": anchor, "media_ref": to, "offset": i}
+                      for i, (to, anchor) in enumerate(links, 1)]
+            rows.append({"doc_id": url, "title": title, "noindex": False,
+                         "nofollow": False, "refresh_to": None, "meta": {},
+                         "spans": spans})
+        return pd.DataFrame(rows)
+    return build
 
 
-def _pdf_family(pdf: pd.DataFrame) -> pd.DataFrame:
+def _zip_doc(data: bytes, url: str):
+    """parse-zip: member texts concatenated in entry order are the parse
+    text; member outlinks keep their anchors; title is ''."""
+    parsed = extract_zip_parse(data, url)
+    if parsed is None:
+        return None
+    text, links = parsed
+    return "", text, links
+
+
+def _pdf_doc(data: bytes, url: str):
     """parse-tika analogue for application/pdf (operators/pdfparse.py;
-    TikaParser.java:71-171): extracted text is one text span, the title
-    rides the title column, and — since a PDF yields no DOM anchors —
-    outlinks are the OutlinkExtractor regex sweep over the text
-    (TikaParser.java:157-161), one link span per match in text order.
-    Headerless/unparseable bodies are the FAILED path: no document."""
-    from nutch_spark.operators.pdfparse import extract_pdf
+    TikaParser.java:71-171): extracted text and title; since a PDF yields
+    no DOM anchors, outlinks are the OutlinkExtractor regex sweep over the
+    text (TikaParser.java:157-161). Headerless bodies are the FAILED path."""
+    parsed = extract_pdf(data)
+    if parsed is None:
+        return None
+    title, text, links = parsed
+    return title, text, [(to, "") for to in links]
 
-    rows = []
-    for url, content in zip(pdf["url"], pdf["content"]):
-        if content is None:
-            continue
-        data = (bytes(content) if isinstance(content, (bytes, bytearray))
-                else content.encode("latin-1", "ignore"))
-        parsed = extract_pdf(data)
+
+def _office_doc(extract):
+    """RTF/ODF (operators/officeparse.py): the PDF family's contract —
+    title + text + OutlinkExtractor regex links over the text."""
+    def doc(data: bytes, url: str):
+        parsed = extract(data)
         if parsed is None:
-            continue
-        title, text, links = parsed
-        spans = [{"kind": "text", "text": text, "media_ref": None, "offset": 0}]
-        for i, to in enumerate(links):
-            spans.append({"kind": "link", "text": "",
-                          "media_ref": to, "offset": i + 1})
-        rows.append({"doc_id": url, "title": title, "noindex": False,
-                     "nofollow": False, "refresh_to": None, "meta": {},
-                     "spans": spans})
-    return pd.DataFrame(rows)
+            return None
+        title, text = parsed
+        return title, text, [(to, "") for to in extract_text_outlinks(text)]
+    return doc
 
 
-# MIME dispatch registry (X2; parse/ParseSegment.java:110-141 plugin
-# dispatch by contentType): content_type prefix -> per-frame extractor.
-# Unregistered types are skipped, like ParseSegment's ParserNotFound path.
-# First matching prefix wins (iteration order).
+def _swf_doc(data: bytes, url: str):
+    """parse-swf analogue (SWFParser.java:85-130): text from edit-text
+    fields, glyph runs and action strings; outlinks = the GetURL urls
+    FIRST, then the OutlinkExtractor regex over the text (:102-110); title
+    is always ''. Unreadable bodies (bad magic/deflate, LZMA) are the
+    FAILED path."""
+    parsed = extract_swf(data)
+    if parsed is None:
+        return None
+    text, urls = parsed
+    return "", text, [(to, "") for to in urls + extract_text_outlinks(text)]
+
+
 def _feed_pdf_lazy(pdf: pd.DataFrame) -> pd.DataFrame:
     from nutch_spark.operators.feedparse import _feed_pdf
 
     return _feed_pdf(pdf)
 
 
-def _office_family(pdf: pd.DataFrame, extract) -> pd.DataFrame:
-    """Shared RTF/ODF ParseResult shape (same contract as _pdf_family:
-    title + one text span + OutlinkExtractor regex links over the text,
-    TikaParser.java:157-161). Unparseable bodies -> no document."""
-    from nutch_spark.operators.pdfparse import extract_text_outlinks
+_HTML_FAMILIES = ("text/html", "application/xhtml")
 
-    rows = []
-    for url, content in zip(pdf["url"], pdf["content"]):
-        if content is None:
-            continue
-        data = (bytes(content) if isinstance(content, (bytes, bytearray))
-                else content.encode("latin-1", "ignore"))
-        parsed = extract(data)
-        if parsed is None:
-            continue
-        title, text = parsed
-        spans = [{"kind": "text", "text": text, "media_ref": None, "offset": 0}]
-        for i, to in enumerate(extract_text_outlinks(text)):
-            spans.append({"kind": "link", "text": "",
-                          "media_ref": to, "offset": i + 1})
-        rows.append({"doc_id": url, "title": title, "noindex": False,
-                     "nofollow": False, "refresh_to": None, "meta": {},
-                     "spans": spans})
-    return pd.DataFrame(rows)
-
-
-def _rtf_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    """parse-tika RTF analogue: stdlib control-word walk
-    (operators/officeparse.py)."""
-    from nutch_spark.operators.officeparse import extract_rtf
-
-    return _office_family(pdf, extract_rtf)
-
-
-def _odf_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    """parse-tika OpenDocument analogue (odt/ods/odp): zip + content.xml
-    walk (operators/officeparse.py)."""
-    from nutch_spark.operators.officeparse import extract_odf
-
-    return _office_family(pdf, extract_odf)
-
-
-def _swf_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    """parse-swf analogue (SWFParser.java:85-130): text from edit-text
-    fields, glyph runs and action strings; outlinks = the GetURL urls
-    FIRST, then the OutlinkExtractor regex over the text (:102-110);
-    title is always ''. Unreadable bodies (bad magic/deflate, LZMA) are
-    the FAILED path: no document."""
-    from nutch_spark.operators.pdfparse import extract_text_outlinks
-    from nutch_spark.operators.swfparse import extract_swf
-
-    rows = []
-    for url, content in zip(pdf["url"], pdf["content"]):
-        if content is None:
-            continue
-        data = (bytes(content) if isinstance(content, (bytes, bytearray))
-                else content.encode("latin-1", "ignore"))
-        parsed = extract_swf(data)
-        if parsed is None:
-            continue
-        text, urls = parsed
-        links = urls + extract_text_outlinks(text)
-        spans = [{"kind": "text", "text": text, "media_ref": None, "offset": 0}]
-        for i, to in enumerate(links):
-            spans.append({"kind": "link", "text": "",
-                          "media_ref": to, "offset": i + 1})
-        rows.append({"doc_id": url, "title": "", "noindex": False,
-                     "nofollow": False, "refresh_to": None, "meta": {},
-                     "spans": spans})
-    return pd.DataFrame(rows)
-
-
+# MIME dispatch registry (X2; parse/ParseSegment.java:110-141 plugin
+# dispatch by contentType): content_type prefix -> per-frame extractor.
+# Unregistered types are skipped, like ParseSegment's ParserNotFound path.
+# First matching prefix wins (iteration order).
 MIME_PARSERS = {
-    "text/html": extract_documents_pdf,
-    "application/xhtml": extract_documents_pdf,
+    # html families run with default outlink options here; the dispatch
+    # kernel rebinds them to the crawl config's options
+    **dict.fromkeys(_HTML_FAMILIES, extract_documents_pdf),
     "text/plain": _plain_pdf,
     "application/javascript": _js_pdf,
     "text/javascript": _js_pdf,
     "application/x-javascript": _js_pdf,
-    "application/zip": _zip_pdf,
+    "application/zip": _binary_family(_zip_doc),
     # parse-tika PDF analogue (conf/parse-plugins.xml maps application/pdf
     # to parse-tika); stdlib extractor in operators/pdfparse.py
-    "application/pdf": _pdf_family,
+    "application/pdf": _binary_family(_pdf_doc),
     # parse-feed (plugin/feed FeedParser.java): one parse per entry + the
     # feed doc itself; see operators/feedparse.py
     "application/rss": _feed_pdf_lazy,
@@ -888,12 +822,12 @@ MIME_PARSERS = {
     # parse-tika office slice without the library (operators/officeparse.py):
     # RTF control-word walk; OpenDocument zip+content.xml (covers .text /
     # .spreadsheet / .presentation via the family prefix)
-    "application/rtf": _rtf_pdf,
-    "text/rtf": _rtf_pdf,
-    "application/vnd.oasis.opendocument": _odf_pdf,
+    **dict.fromkeys(("application/rtf", "text/rtf"),
+                    _binary_family(_office_doc(extract_rtf))),
+    "application/vnd.oasis.opendocument": _binary_family(_office_doc(extract_odf)),
     # parse-swf analogue (operators/swfparse.py): FWS/CWS containers,
     # edit-text + glyph-run + ActionScript text, GetURL outlinks
-    "application/x-shockwave-flash": _swf_pdf,
+    "application/x-shockwave-flash": _binary_family(_swf_doc),
 }
 
 _DOCS_NESTED_COLS = ["doc_id", "title", "noindex", "nofollow",
@@ -904,11 +838,14 @@ def _make_dispatch_kernel(ignore_tags: tuple = (), form_use_action: bool = True)
     """Group each Arrow batch by registered MIME family and run the family
     extractor vectorized over its group — one pass over the content stream
     with no per-row Python dispatch (family count is tiny; rows per batch
-    are large). The html families get the outlink knobs; other parsers
-    keep their plain (pdf) signature."""
+    are large). The html families' outlink options are bound here, once."""
+    html = functools.partial(extract_documents_pdf, ignore_tags=ignore_tags,
+                             form_use_action=form_use_action)
+    parsers = {**MIME_PARSERS, **dict.fromkeys(_HTML_FAMILIES, html)}
+
     def family(ct):
         if ct:
-            for m in MIME_PARSERS:
+            for m in parsers:
                 if ct.startswith(m):
                     return m
         return ""
@@ -921,12 +858,7 @@ def _make_dispatch_kernel(ignore_tags: tuple = (), form_use_action: bool = True)
             for fam, grp in pdf.groupby(fams, sort=False):
                 if not fam:
                     continue  # unregistered type: ParserNotFound, no documents
-                fn = MIME_PARSERS[fam]
-                if fn is extract_documents_pdf:
-                    res = fn(grp.reset_index(drop=True), ignore_tags,
-                             form_use_action)
-                else:
-                    res = fn(grp.reset_index(drop=True))
+                res = parsers[fam](grp.reset_index(drop=True))
                 if len(res):
                     yield res[_DOCS_NESTED_COLS]
     return _dispatch_kernel
@@ -935,7 +867,8 @@ def _make_dispatch_kernel(ignore_tags: tuple = (), form_use_action: bool = True)
 def extract_documents_by_mime(content_df: DataFrame, ignore_tags: tuple = (),
                               form_use_action: bool = True) -> DataFrame:
     """Dispatch (url, content, content_type) to the registered extractor per
-    MIME family; unregistered types produce no documents. A single
+    MIME family; unregistered types produce no documents. The one parse
+    path: run_parse and every parse gate query go through it. A single
     mapInPandas pass with group-wise family dispatch inside the kernel:
     the upstream scan/join executes ONCE (the old one-slice-per-family
     design re-executed the whole content subtree once per registered
@@ -945,63 +878,18 @@ def extract_documents_by_mime(content_df: DataFrame, ignore_tags: tuple = (),
         _make_dispatch_kernel(ignore_tags, form_use_action), DOCS_NESTED_SCHEMA)
 
 
-def extract_spans_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One document-order pass per page -> flat span rows."""
-    out: list[dict] = []
-    for url, content in zip(pdf["url"], pdf["content"]):
-        title = None
-        off = 0
-        for ev in _scan_html(content or "", url):
-            if isinstance(ev, tuple):
-                title = ev[1]
-                continue
-            out.append({"doc_id": url, "offset": off, "kind": ev["kind"],
-                        "text": ev["text"], "media_ref": ev["media_ref"],
-                        "title": title})
-            off += 1
-    return pd.DataFrame(out, columns=["doc_id", "offset", "kind", "text", "media_ref", "title"])
-
-
-def _spans_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        res = extract_spans_pdf(pdf)
-        if len(res):
-            yield res
-
-
-def extract_spans(content_df: DataFrame) -> DataFrame:
-    """(url, content) -> flat span rows (doc_id, offset, kind, text, media_ref, title)."""
-    return content_df.select("url", "content").mapInPandas(_spans_kernel, SPAN_ROWS_SCHEMA)
-
-
-def spans_to_documents(span_rows: DataFrame) -> DataFrame:
-    """Flat span rows -> documents(doc_id, spans) in document order."""
-    return span_rows.groupBy("doc_id").agg(
-        F.array_sort(
-            F.collect_list(F.struct("kind", "text", "media_ref", "offset")),
-            lambda a, b: a["offset"] - b["offset"],
-        ).alias("spans")
-    )
-
-
-def parse_text(span_rows: DataFrame) -> DataFrame:
-    """documents -> whitespace-joined text in document order (ParseText analogue)."""
-    txt = span_rows.filter(F.col("kind") == "text")
-    return (
-        txt.groupBy("doc_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("offset", "text")),
-                        lambda a, b: a["offset"] - b["offset"],
-                    ),
-                    lambda s: s["text"],
-                ),
-                " ",
-            ).alias("text")
-        )
-        .withColumnRenamed("doc_id", "url")
+def explode_spans(docs_nested: DataFrame) -> DataFrame:
+    """Nested documents -> flat span rows (doc_id, offset, kind, text,
+    media_ref, title) by a narrow posexplode: no shuffle."""
+    return docs_nested.select(
+        "doc_id", "title", F.posexplode("spans").alias("_pos", "s")
+    ).select(
+        "doc_id",
+        F.col("s.offset").alias("offset"),
+        F.col("s.kind").alias("kind"),
+        F.col("s.text").alias("text"),
+        F.col("s.media_ref").alias("media_ref"),
+        "title",
     )
 
 
@@ -1014,6 +902,9 @@ def run_parse(
     url_meta: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """Full parse stage over this cycle's successful fetches.
+
+    raw_content must carry (url, content, content_type): the type picks
+    the MIME family parser.
 
     Returns dict with: span_rows, documents, parse_text, parse_data,
     parse_updates (linked/signature rows for updatedb).
@@ -1047,28 +938,15 @@ def run_parse(
     # parse the page twice, double documents/parse_text rows, and emit
     # every linked row twice (updatedb SUMS linked scores -> 2x OPIC mass)
     content = ok.select("url").distinct().join(raw_content, "url", "inner")
-    html_opts = (tuple(cfg.parser_html_outlinks_ignore_tags),
-                 cfg.parser_html_form_use_action)
-    if "content_type" in content.columns:
-        docs_nested = extract_documents_by_mime(content, *html_opts).cache()  # X2 dispatch
-    else:
-        docs_nested = extract_documents(content, *html_opts).cache()
+    docs_nested = extract_documents_by_mime(  # X2 dispatch
+        content, tuple(cfg.parser_html_outlinks_ignore_tags),
+        cfg.parser_html_form_use_action).cache()
     # the committed documents table keeps only pages with >=1 span (matching
     # the pre-nested-extractor semantics: span-free pages contribute nothing)
     documents = docs_nested.filter(F.size("spans") > 0).select("doc_id", "spans")
     # flat span rows via narrow explode (no shuffle); parse_text is a pure
-    # array fold over the nested column — the old groupBy+collect_list
-    # re-assembly shuffles are gone
-    span_rows = docs_nested.select(
-        "doc_id", "title", F.posexplode("spans").alias("_pos", "s")
-    ).select(
-        "doc_id",
-        F.col("s.offset").alias("offset"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        "title",
-    )
+    # array fold over the nested column
+    span_rows = explode_spans(docs_nested)
     ptext = docs_nested.select(
         F.col("doc_id").alias("url"),
         F.array_join(
@@ -1088,7 +966,7 @@ def run_parse(
     # HTMLMetaProcessor directives consumed by HtmlParser.getParse)
     nofollow_docs = docs_nested.filter(F.col("nofollow")).select("doc_id")
     # parser.html.outlinks.ignore_tags (DOMContentUtils.java:138-142) is
-    # applied per-tag inside the extraction kernel (html_opts above)
+    # applied per-tag inside the extraction kernel (bound above)
     # broadcast is CYCLE-scoped and bounded: nofollow_docs ⊆ this cycle's
     # fetched pages (topN-capped), and only the robots-nofollow fraction of
     # them — unlike a frontier-scoped set this cannot grow with the crawl

@@ -28,3 +28,28 @@ def corpus_tables(spark, corpus):
     for df in tables.values():
         df.cache().count()
     return tables
+
+
+@pytest.fixture(scope="session")
+def corpus_parsed(corpus_tables):
+    """run_parse over every corpus page as a successful fetch: the crawl's
+    own span_rows / documents / parse_text frames."""
+    from pyspark.sql import functions as F
+
+    from nutch_spark import schemas
+    from nutch_spark.config import CrawlConfig
+    from nutch_spark.operators.parse import run_parse
+
+    raw = corpus_tables["raw_content"]
+    fetch_out = raw.select(
+        "url",
+        F.lit(schemas.STATUS_FETCH_SUCCESS).alias("fetch_status"),
+        F.lit(False).alias("truncated"),
+        F.lit(1.0).cast("float").alias("score"),
+        F.lit(None).cast("string").alias("signature"),
+        F.lit(None).cast("string").alias("redirect_to"),
+    )
+    parsed = run_parse(fetch_out, raw, CrawlConfig())
+    yield parsed
+    parsed["docs_nested"].unpersist()
+    parsed["links"].unpersist()

@@ -139,7 +139,7 @@ def test_file_fetch_non_file_scheme_rejected(spark, tree):
 def test_listing_outlinks_feed_the_parser(spark, tree):
     """The listing is real HTML: the parse kernel extracts its entries as
     outlinks, so a file:// crawl walks directories like the reference."""
-    from nutch_spark.operators.parse import extract_documents
+    from nutch_spark.operators.parse import extract_documents_by_mime
 
     # trailing slash: listing hrefs are relative, and (like the reference)
     # a slashless directory URL resolves children against its PARENT —
@@ -149,8 +149,9 @@ def test_listing_outlinks_feed_the_parser(spark, tree):
     fetched = fetch_file_protocol(
         spark.createDataFrame([(u,)], "url string"), CrawlConfig())
     content = fetched.select(
-        "url", F.col("content").cast("string").alias("content"))
-    docs = extract_documents(content).collect()
+        "url", F.col("content").cast("string").alias("content"),
+        "content_type")  # the listing is typed text/html
+    docs = extract_documents_by_mime(content).collect()
     links = [s["media_ref"] for d in docs for s in d.spans
              if s["kind"] == "link"]
     assert f"file://{tree}/sub/inner.txt" in links

@@ -1,16 +1,12 @@
 """Item-extractor parity: extracted items == corpus ground truth
-(analogue of the fork's 15 ItemParser plugins; FIXTURES.md expected_items)."""
+(analogue of the fork's 15 ItemParser plugins; FIXTURES.md expected_items),
+over the documents frame run_parse commits."""
 
 from nutch_spark.operators.items import extract_items
-from nutch_spark.operators.parse import extract_spans, spans_to_documents
 
 
-def test_items_match_ground_truth(spark, corpus, corpus_tables):
-    docs = spans_to_documents(
-        extract_spans(corpus_tables["raw_content"]).select(
-            "doc_id", "offset", "kind", "text", "media_ref"
-        )
-    )
+def test_items_match_ground_truth(corpus, corpus_tables, corpus_parsed):
+    docs = corpus_parsed["documents"]
     got = {
         r.doc_id: r.asDict()
         for r in extract_items(docs, corpus_tables["price_images"]).collect()

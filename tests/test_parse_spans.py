@@ -1,21 +1,18 @@
 """Span-sequence equality — THE per-row invariant (input_hint):
 extractor output must equal the corpus ground truth in (kind, text,
-media_ref, order). Analogue of parse-html TestDOMContentUtils."""
+media_ref, order). Analogue of parse-html TestDOMContentUtils. Checked on
+the frames run_parse returns, i.e. the path the crawl runs."""
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
-from nutch_spark import schemas
-from nutch_spark.config import CrawlConfig
-from nutch_spark.corpus import render_html
-from nutch_spark.operators.parse import extract_spans, extract_spans_pdf, parse_text, spans_to_documents
+from nutch_spark.operators.parse import extract_documents_pdf
 
 
-def test_span_sequence_equality_all_docs(spark, corpus, corpus_tables):
+def test_span_sequence_equality_all_docs(corpus, corpus_parsed):
     """Every page: extracted spans == generation ground truth, in order."""
     got = (
-        extract_spans(corpus_tables["raw_content"])
+        corpus_parsed["span_rows"]
         .select("doc_id", "offset", "kind", "text", "media_ref")
         .collect()
     )
@@ -51,27 +48,28 @@ def test_extractor_whitespace_collapse():
             "content": ['<html><head><title>T</title></head><body><p>a   b\n\tc</p><img src="http://i/x.jpg"><a href="http://y.com/">link  text</a></body></html>'],
         }
     )
-    out = extract_spans_pdf(pdf)
-    assert list(out["kind"]) == ["text", "media", "link"]
-    assert out["text"].iloc[0] == "a b c"
-    assert out["media_ref"].iloc[1] == "http://i/x.jpg"
-    assert out["text"].iloc[2] == "link text"
-    assert list(out["offset"]) == [0, 1, 2]
+    out = extract_documents_pdf(pdf)
+    assert out["title"].iloc[0] == "T"
+    spans = out["spans"].iloc[0]
+    assert [s["kind"] for s in spans] == ["text", "media", "link"]
+    assert spans[0]["text"] == "a b c"
+    assert spans[1]["media_ref"] == "http://i/x.jpg"
+    assert spans[2]["text"] == "link text"
+    assert [s["offset"] for s in spans] == [0, 1, 2]
 
 
-def test_documents_table_shape(spark, corpus_tables):
+def test_documents_table_shape(corpus_parsed):
     """documents(doc_id, spans) matches the input_hint schema exactly."""
-    docs = spans_to_documents(
-        extract_spans(corpus_tables["raw_content"]).select(
-            "doc_id", "offset", "kind", "text", "media_ref"
-        )
-    )
+    docs = corpus_parsed["documents"]
     schema = docs.schema
+    assert docs.columns == ["doc_id", "spans"]
     assert schema["doc_id"].dataType.typeName() == "string"
     spans_t = schema["spans"].dataType
     assert spans_t.typeName() == "array"
     names = [f.name for f in spans_t.elementType.fields]
     assert names == ["kind", "text", "media_ref", "offset"]
+    # only pages with >= 1 span are committed
+    assert docs.filter(F.size("spans") == 0).count() == 0
     # offsets are dense 0..n-1 per doc
     bad = docs.select(
         F.size("spans").alias("n"),
@@ -82,9 +80,8 @@ def test_documents_table_shape(spark, corpus_tables):
     assert bad.count() == 0
 
 
-def test_parse_text_document_order(spark, corpus, corpus_tables):
-    span_rows = extract_spans(corpus_tables["raw_content"])
-    pt = {r.url: r.text for r in parse_text(span_rows).collect()}
+def test_parse_text_document_order(corpus, corpus_parsed):
+    pt = {r.url: r.text for r in corpus_parsed["parse_text"].collect()}
     # pick a known multi-paragraph page and verify exact order-preserving join
     page = next(p for p in corpus.pages.values() if len([s for s in p.segments if s[0] == "text"]) >= 2)
     want = " ".join(" ".join(s[1].split()) for s in page.segments if s[0] == "text")

@@ -166,13 +166,12 @@ def test_detect_language_known_samples(spark):
     assert got == {1: "en", 2: "de", 3: "fr"}
 
 
-def test_media_pipeline_plumbing(spark, corpus_tables):
-    """Multimodal: synth media for corpus media refs -> features -> span join.
-    Image decode is REAL (PPM/BMP/PNG codecs); audio/video payloads have no
-    in-container decoder and must surface decoded=False, not fail."""
-    from nutch_spark.operators.parse import extract_spans, spans_to_documents
-
-    spans = extract_spans(corpus_tables["raw_content"])
+def test_media_pipeline_plumbing(spark, corpus_parsed):
+    """Multimodal: synth media for the parse's media refs -> features ->
+    span join. extract_media_features is the image-pixel kernel (REAL
+    PPM/BMP/PNG decode); audio (WAV) and video (AVI) payloads decode in
+    their own kernels, so here they must surface decoded=False, not fail."""
+    spans = corpus_parsed["span_rows"]
     refs = [r.media_ref for r in
             spans.filter(F.col("kind") == "media").select("media_ref").distinct().limit(20).collect()]
     media = synth_media_table(spark, refs + ["http://x.com/v.mp4"])
@@ -187,8 +186,7 @@ def test_media_pipeline_plumbing(spark, corpus_tables):
     frames = sample_video_frames(media, every_ms=500)
     assert frames.count() > 0
     # span-level join back onto documents
-    docs = spans_to_documents(spans.select("doc_id", "offset", "kind", "text", "media_ref"))
-    joined = media_span_join(docs, feats)
+    joined = media_span_join(corpus_parsed["documents"], feats)
     assert joined.filter(F.col("feature").isNotNull()).count() > 0
 
 

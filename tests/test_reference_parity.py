@@ -431,7 +431,7 @@ def test_html_language_parser_meta_docs(spark):
     document language through the real parse kernel + indexing filter."""
     from nutch_spark.config import CrawlConfig
     from nutch_spark.operators.indexer import build_index
-    from nutch_spark.operators.parse import extract_documents
+    from nutch_spark.operators.parse import extract_documents_by_mime
 
     docs = [
         '<html lang="fi"><head>document 1 title</head>'
@@ -443,8 +443,9 @@ def test_html_language_parser_meta_docs(spark):
     ]
     urls = [f"http://foo.bar/{i}" for i in range(len(docs))]
     cdf = spark.createDataFrame(
-        list(zip(urls, docs)), "url string, content string")
-    parsed = extract_documents(cdf)
+        list(zip(urls, docs)), "url string, content string").withColumn(
+        "content_type", F.lit("text/html"))
+    parsed = extract_documents_by_mime(cdf)
     frontier = spark.createDataFrame(
         [(u, 2, 1.0, 0, "s") for u in urls],
         "url string, status int, score float, fetch_time long, signature string")

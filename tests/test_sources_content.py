@@ -63,6 +63,15 @@ def test_decode_content_roundtrip():
     assert decode_content(None) is None
 
 
+def test_bomless_utf16_beats_wrong_declared_charset():
+    # NUL-lane UTF-16 evidence is certain: a wrong ISO-8859-1 header must
+    # not turn the body into mojibake
+    txt = "<html><body><p>héllo wörld, plain text</p></body></html>"
+    data = txt.encode("utf-16le")
+    assert guess_encoding(data, header_charset="ISO-8859-1") == "utf-16le"
+    assert decode_content(data, header_charset="ISO-8859-1") == txt
+
+
 # ---------------------------------------------------------------------------
 # C9 gzip/deflate
 # ---------------------------------------------------------------------------
