@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship query (one full generate cycle:
-due-gate -> score sort -> salted host-cap window -> politeness
+due-gate -> score sort -> host-cap window -> politeness
 partitioning) over /root/testdata/sf0.001. ``queries()`` /
 ``oracle_sql()`` expose every implemented operator from SURVEY.md
 section 2 with DuckDB oracles where SQL-expressible (see

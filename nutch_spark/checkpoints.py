@@ -11,6 +11,10 @@ SPARK_GRAFT_CONF) every iterative lineage cut becomes a RELIABLE
 `checkpoint()` against that directory instead — the same role HDFS-backed
 intermediate CrawlDb/WebGraph output plays between the reference's
 chained MapReduce passes (scoring/webgraph/LinkRank.java job chain).
+`get_spark` sets `spark.cleaner.referenceTracking.cleanCheckpoints`, so a
+reliable checkpoint's files are deleted once the JVM garbage-collects its
+last reference; Spark reads that conf only when the context starts, so a
+session built elsewhere must set it itself or the directory keeps growing.
 """
 
 from __future__ import annotations
@@ -20,13 +24,22 @@ from pyspark.sql import DataFrame
 CHECKPOINT_DIR_CONF = "spark.nutch_spark.checkpoint.dir"
 
 
+_dir_set: tuple | None = None  # (SparkContext checkpoint dir, conf value)
+
+
 def iter_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     """Cut lineage: reliable checkpoint when CHECKPOINT_DIR_CONF is set,
-    localCheckpoint otherwise. Reliable mode re-applies setCheckpointDir
-    per call (idempotent) so callers need no session setup."""
+    localCheckpoint otherwise. Reliable mode points the context at the
+    configured dir when it is not already, so callers need no session
+    setup. Not on every call: setCheckpointDir makes a fresh UUID subdir
+    each time, and the cleaner deletes `rdd-N` only under the current one."""
+    global _dir_set
     spark = df.sparkSession
     ckpt_dir = spark.conf.get(CHECKPOINT_DIR_CONF, None)
     if ckpt_dir:
-        spark.sparkContext.setCheckpointDir(ckpt_dir)
+        sc = spark.sparkContext
+        if _dir_set != (sc.getCheckpointDir(), ckpt_dir):
+            sc.setCheckpointDir(ckpt_dir)
+            _dir_set = (sc.getCheckpointDir(), ckpt_dir)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)

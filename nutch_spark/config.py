@@ -41,7 +41,6 @@ class CrawlConfig:
     fetcher_queue_mode: str = "byHost"       # fetcher.queue.mode (byHost|byDomain|byIP)
     partition_seed: int = 42                 # partition.url.seed (fixed for reproducibility)
     num_partitions: int = 32                 # reducer count analogue
-    salt_buckets: int = 8                    # explicit skew salting (north_rule P5)
     # frontier storage bucket count (Iceberg bucket(url) spec analogue);
     # sized so one bucket of the 10^10-row frontier fits an executor —
     # at 100 TB this is ~2^13-2^14, locally it matches shuffle partitions

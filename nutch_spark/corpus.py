@@ -5,7 +5,7 @@ index, pagea, pageb, dup_of_pagea, nested_spider_trap, exception, robots.txt
 — used by src/test/org/apache/nutch/fetcher/TestFetcher.java:75-168) plus
 the skew/robots/redirect cases FIXTURES.md §2 requires:
 
-- a mega host with ~100x the median page count (exercises salted partitioning),
+- a mega host with ~100x the median page count (exercises skewed partitions),
 - a duplicate page pair (same signature_seed -> same digest),
 - a nested spider trap (self-deepening chain),
 - an exception URL, redirect chains longer than http.redirect.max,

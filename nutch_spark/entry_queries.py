@@ -2534,9 +2534,9 @@ FROM hits h JOIN counts c USING (doc_id)
 def q_domain_quota_sample(spark, sf_dir):
     """Deterministic per-source quota sampling (domain mixing): at most 7
     docs per source survive, chosen by md5 priority. The oracle restates
-    the selection as one ROW_NUMBER window; the Spark side runs the
-    two-phase salted form and must pick the identical set (the salt phase
-    keeps a superset, so the final per-key top-K is exact)."""
+    the selection as one ROW_NUMBER window, as does the Spark side, whose
+    Partial WindowGroupLimit keeps each map task's per-source top 7 before
+    the shuffle and must not change the selected set."""
     from nutch_spark.operators.sampling import domain_quota_sample
 
     d = load(spark, sf_dir, "documents")

@@ -17,8 +17,9 @@ convention (SURVEY §2.1 S10); with a real protocol stack the content rows
 would come from the fetcher.
 
 Scale note: these run over a handful of URLs by design (the reference is
-strictly single-URL). The result is localCheckpoint()ed so the parse
-kernel's CACHE CONTRACT frames can be unpersisted before returning.
+strictly single-URL). The result is checkpointed (checkpoints.
+iter_checkpoint) so the parse kernel's CACHE CONTRACT frames can be
+unpersisted before returning.
 """
 
 from __future__ import annotations
@@ -26,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from nutch_spark import schemas
+from nutch_spark.checkpoints import iter_checkpoint
 from nutch_spark.config import CrawlConfig
 from nutch_spark.functions.content import resolve_mime_udf
 from nutch_spark.functions.signatures import md5_signature_col
@@ -89,7 +91,7 @@ def check_parse(
     if dump_text:
         out = out.join(
             res["parse_text"].select("url", "text"), "url", "left")
-    out = out.localCheckpoint()  # materialize, then honor the CACHE CONTRACT
+    out = iter_checkpoint(out)  # materialize, then honor the CACHE CONTRACT
     res["docs_nested"].unpersist()
     return out
 
@@ -148,13 +150,12 @@ def check_index(
             parts.append(F.array(F.struct(
                 F.lit(f_.name).alias("field"),
                 F.col(f_.name).cast("string").alias("value"))))
-    out = (
+    out = iter_checkpoint(
         idx.select("url", F.explode(F.concat(*parts)).alias("fv"))
         .select(
             "url", F.col("fv.field").alias("field"),
             F.substring(F.col("fv.value"), 1, 100).alias("value"))
         .filter(F.col("value").isNotNull())
-        .localCheckpoint()
     )
     res["docs_nested"].unpersist()
     return out

@@ -15,10 +15,12 @@ Reference semantics (crawl/Generator.java):
 - intra-partition order (:369-398): byte-reversed 31-hash of the URL so
   same-host URLs spread apart inside a partition.
 
-Scale design: the two selection windows are salted two-phase (rank within
-(partition, salt) keeping a superset, then final rank within partition) so a
-mega-host frontier partition never single-threads a giant sort buffer —
-north_rule P5. Semantics identical; only the physical plan changes.
+Scale design: each selection is one `row_number` window under a rank filter,
+which Spark plans as a Partial `WindowGroupLimit` before the shuffle: every
+map task forwards at most `limit` (or the host allowance) rows per group, so
+a mega-host partition never ships or sorts its whole frontier slice. The
+session raises `spark.sql.optimizer.windowGroupLimitThreshold` so that holds
+for limits above Spark's default of 1,000 (`session.py`).
 """
 
 from __future__ import annotations
@@ -114,60 +116,28 @@ def generate(frontier: DataFrame, cfg: CrawlConfig, cur_time_ms: int,
 
     limit = max(1, cfg.topn // cfg.num_partitions)  # Generator.java:141
 
+    order = [F.desc("score"), F.asc("url")]
     if cfg.gen_max_count > 0:
-        # --- cap-aware salted prefilter (G2/G3/G4/G5 + P5 skew defense) ---
-        # A url-hash salt here is WRONG under the host cap: a mega-host
-        # whose rows top every salt's score order crowds other hosts out
-        # of the phase-1 supersets, yet the cap later demotes most of the
-        # mega-host rows to higher segments — segment 1 comes out
-        # under-filled vs the reference walk (rows it should emit were
-        # pre-dropped). Salting by the CAP KEY keeps each host whole in
-        # one salt, so host_rank and segnum computed inside the salt are
-        # GLOBALLY exact; the per-(salt, segnum) topN is then an exact
-        # prefilter for the final per-(partition, segnum) topN: if any
-        # dropped segment-peer outscored a row, its salt necessarily
-        # retained `limit` rows above that row, so the final rank filter
-        # reaches the same verdict the unsalted walk would. Skew stays
-        # bounded: every rank filter is a WindowGroupLimit (top-K heap per
-        # group, K = allowance or limit), never a full group sort.
+        # per-host/domain cap (G4/G5): a cap key's first max.count rows by
+        # score go to segment 1, the next max.count to segment 2, ... up to
+        # maxNumSegments; rows past that allowance are not generated
         kcol = F.col("domain") if cfg.gen_count_mode == "byDomain" else F.col("host")
         allowance = cfg.gen_max_count * cfg.gen_max_num_segments
-        salt = F.pmod(F.xxhash64(kcol), F.lit(cfg.salt_buckets))
-        order = [F.desc("score"), F.asc("url")]
-        w_cap = Window.partitionBy("partition_id", "salt", kcol).orderBy(*order)
-        w_seg = Window.partitionBy("partition_id", "salt", "segnum").orderBy(*order)
+        w_cap = Window.partitionBy("partition_id", kcol).orderBy(*order)
         df = (
-            df.withColumn("salt", salt)
-            .withColumn("host_rank", F.row_number().over(w_cap))
+            df.withColumn("host_rank", F.row_number().over(w_cap))
             .filter(F.col("host_rank") <= allowance)
             .withColumn(
                 "segnum",
                 (((F.col("host_rank") - 1) / cfg.gen_max_count) + 1).cast("int"),
             )
-            .withColumn("seg_rank", F.row_number().over(w_seg))
-            .filter(F.col("seg_rank") <= limit)
-            .drop("salt", "host_rank", "seg_rank")
+            .drop("host_rank")
         )
-        # final per-(partition, segment) topN — NO re-cap: host_rank/segnum
-        # above are already global-exact (host-complete salts), and
-        # recomputing them on the topN survivors would shift ranks
     else:
-        # --- salted two-phase per-partition topN (no cap: plain G3) ---
-        salt = F.pmod(F.xxhash64(F.col("url")), F.lit(cfg.salt_buckets))
-        w_salt = Window.partitionBy("partition_id", "salt").orderBy(
-            F.desc("score"), F.asc("url")
-        )
-        df = (
-            df.withColumn("salt", salt)
-            .withColumn("salt_rank", F.row_number().over(w_salt))
-            .filter(F.col("salt_rank") <= limit)  # superset: each salt keeps `limit`
-            .drop("salt", "salt_rank")
-            .withColumn("segnum", F.lit(1))
-        )
+        df = df.withColumn("segnum", F.lit(1))
 
-    w_final = Window.partitionBy("partition_id", "segnum").orderBy(
-        F.desc("score"), F.asc("url")
-    )
+    # per-(partition, segment) topN (G3)
+    w_final = Window.partitionBy("partition_id", "segnum").orderBy(*order)
     df = df.withColumn("rank", F.row_number().over(w_final)).filter(
         F.col("rank") <= limit
     ).drop("rank")

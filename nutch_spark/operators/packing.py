@@ -13,13 +13,14 @@ Scale shape: packing is sequential by definition (chunk i depends on the
 total token count before it), so the parallel unit is the PACK GROUP, not
 the corpus. Groups are (group_col, shard) where shard is a deterministic
 md5-derived bucket of the doc id: a mega-source is split across ``shards``
-independent token streams, each packed by one window sort — the same
-skew defense as the generator's salted topN (operators/generate.py:110),
-except here the shard is PART OF THE RESULT (a chunk never crosses a
-shard), so determinism survives any partitioning of the input. Per group
-the plan is one hash-partitioned sort (the unavoidable shuffle) followed
-by pure Catalyst arithmetic + one Generate (explode) — no UDF, no
-driver-side loop.
+independent token streams, each packed by one window sort. A running
+sum needs every row of its group, so Spark's pre-shuffle top-K (which
+bounds the generator's and the quota sampler's mega-groups) cannot help
+here; the shard is a salt, but one that is PART OF THE RESULT (a chunk
+never crosses a shard), so determinism survives any partitioning of the
+input. Per group the plan is one hash-partitioned sort (the unavoidable
+shuffle) followed by pure Catalyst arithmetic + one Generate (explode) —
+no UDF, no driver-side loop.
 
 The shard expression uses only md5/substring/instr arithmetic so an
 engine-independent oracle (DuckDB: strpos) can restate it exactly; same

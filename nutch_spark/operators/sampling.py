@@ -11,20 +11,17 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
 def domain_quota_sample(documents: DataFrame, quota: int,
-                        key_col: str = "source", id_col: str = "doc_id",
-                        salt_buckets: int = 8) -> DataFrame:
+                        key_col: str = "source", id_col: str = "doc_id") -> DataFrame:
     """Keep at most ``quota`` documents per ``key_col`` group, chosen by a
     deterministic md5 priority — uniform pseudo-random but fully
     reproducible, so the sampled corpus is stable across runs and engines.
 
-    Two-phase salted top-K (the same skew defense as the generator's G3
-    topN, operators/generate.py:110-121): phase 1 ranks within
-    (key, salt) so a mega-domain — a 10^8-page host inside a 10^10-doc
-    corpus — never serializes onto one task; each salt keeps ``quota``
-    rows (a guaranteed superset of the true top-K), then phase 2 takes the
-    real per-key top-K over at most salt_buckets x quota survivors per
-    key. Priority ties are impossible (md5 over the unique doc id), so
-    the kept set is exactly reproducible.
+    One ``row_number`` window per key under a ``<= quota`` filter, which
+    Spark plans with a Partial ``WindowGroupLimit`` before the one shuffle:
+    each map task forwards at most ``quota`` rows per key, so a
+    mega-domain never ships or sorts its whole slice on one task. Priority
+    ties are impossible (md5 over the unique doc id), so the kept set is
+    exactly reproducible.
     """
     # coalesce, not concat_ws's silent null-skip: a NULL key must hash the
     # same in both engines (DuckDB's || propagates NULL, concat_ws drops
@@ -33,16 +30,10 @@ def domain_quota_sample(documents: DataFrame, quota: int,
     pri = F.md5(F.concat(
         F.coalesce(F.col(key_col).cast("string"), F.lit("")),
         F.lit(":"), F.col(id_col).cast("string")))
-    salt = F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(salt_buckets))
-    w_salt = Window.partitionBy(key_col, "_salt").orderBy("_pri")
     w_key = Window.partitionBy(key_col).orderBy("_pri")
     return (
         documents
         .withColumn("_pri", pri)
-        .withColumn("_salt", salt)
-        .withColumn("_r", F.row_number().over(w_salt))
-        .filter(F.col("_r") <= quota)
-        .drop("_salt", "_r")
         .withColumn("_r", F.row_number().over(w_key))
         .filter(F.col("_r") <= quota)
         .drop("_r", "_pri")

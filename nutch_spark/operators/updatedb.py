@@ -25,7 +25,7 @@ frontier-side shuffle. Summation order of inlink scores is pinned
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from nutch_spark import schemas
 from nutch_spark.config import CrawlConfig
@@ -35,47 +35,35 @@ from nutch_spark.functions.urls import host_col
 def aggregate_linked(parse_updates: DataFrame, cfg: CrawlConfig) -> DataFrame:
     """Top-K inlinks by score per target, then deterministic-order sum (A3).
 
-    Salted two-phase hash aggregate instead of a row_number window: phase 1
-    caps each (url, salt) group at K (top-K of top-Ks is exact), phase 2
-    flattens (<= salt_buckets x K scores per url — the bounded-priority-
-    queue memory guarantee of CrawlDbReducer.java:300-313, without a sort
-    shuffle; partial aggregation runs map-side). The final sum iterates the
-    ascending-sorted top-K slice so float addition order is pinned —
-    cross-run/core-count bit-equality (SURVEY §7f). The collected arrays
-    hold ONLY the float score: the output (sum of the top-K scores +
-    count) is invariant to which of several rank-K score-ties survives, so
-    carrying from_url for a tie-break (as the first implementation did)
-    only widened the shuffle ~4x with string payloads; the reference's
-    priority queue leaves tie order unspecified too.
+    A ``row_number`` window over url by score desc, filtered to K: Spark
+    plans a Partial ``WindowGroupLimit`` before the shuffle, so every map
+    task forwards at most K scores per url — the bounded-priority-queue
+    memory guarantee of CrawlDbReducer.java:300-313. The window's output
+    is already hash-placed on url, so the groupBy adds no Exchange. The
+    sum iterates the ascending-sorted top-K so float addition order is
+    pinned — cross-run/core-count bit-equality (SURVEY §7f). Only the
+    float score travels: the output (sum of the top-K scores + count) is
+    invariant to which of several rank-K score-ties survives, and the
+    reference's priority queue leaves tie order unspecified too.
     """
-    linked = parse_updates.filter(F.col("kind") == schemas.STATUS_LINKED)
-    k = cfg.db_update_max_inlinks
-
-    def topk_slice(arr):
-        return F.slice(
-            arr, F.greatest(F.size(arr) - F.lit(k) + 1, F.lit(1)), F.lit(k)
-        )
-
-    salted = linked.withColumn(
-        "_salt", F.pmod(F.xxhash64("from_url"), F.lit(cfg.salt_buckets))
+    w = Window.partitionBy("url").orderBy(F.desc("score"))
+    topk = (
+        parse_updates.filter(F.col("kind") == schemas.STATUS_LINKED)
+        .select("url", "score", F.row_number().over(w).alias("_r"))
+        .filter(F.col("_r") <= cfg.db_update_max_inlinks)
+        .groupBy("url")
+        .agg(F.array_sort(F.collect_list("score")).alias("arr"))
     )
-    phase1 = salted.groupBy("url", "_salt").agg(
-        F.array_sort(F.collect_list("score")).alias("arr")
-    ).select("url", topk_slice(F.col("arr")).alias("arr"))
-    phase2 = phase1.groupBy("url").agg(
-        F.array_sort(F.flatten(F.collect_list("arr"))).alias("arr")
-    )
-    topk = topk_slice(F.col("arr"))
-    return phase2.select(
+    return topk.select(
         "url",
         F.aggregate(
-            topk, F.lit(0.0), lambda acc, s: acc + s.cast("double")
+            "arr", F.lit(0.0), lambda acc, s: acc + s.cast("double")
         ).cast("float").alias("link_score"),
-        F.size(topk).cast("long").alias("link_count"),
+        F.size("arr").cast("long").alias("link_count"),
     )
 
 
-def aggregate_linked_meta(parse_updates: DataFrame, cfg: CrawlConfig) -> DataFrame:
+def aggregate_linked_meta(parse_updates: DataFrame) -> DataFrame:
     """Per target: the metadata map of the top-scoring inlink datum.
 
     CrawlDbReducer.java:143-147 — with no fetch datum, `fetch =
@@ -84,24 +72,15 @@ def aggregate_linked_meta(parse_updates: DataFrame, cfg: CrawlConfig) -> DataFra
     urlmeta tags reach never-fetched children (URLMetaScoringFilter
     distributeScoreToOutlinks). The reference leaves score-ties
     unspecified; ties are pinned here by greatest from_url so runs are
-    deterministic. Same salted two-phase shape as aggregate_linked: both
-    phases run map-side partial max_by, no sort shuffle, and only rows
-    that actually carry metadata enter the aggregate (at steady state the
-    urlmeta frontier slice is a tiny fraction of links)."""
+    deterministic. One hash aggregate: max_by runs partially map-side, so
+    each map task ships one row per url, and only rows that actually
+    carry metadata enter it (at steady state the urlmeta frontier slice
+    is a tiny fraction of links)."""
     linked = parse_updates.filter(
         (F.col("kind") == schemas.STATUS_LINKED) & F.col("metadata").isNotNull()
     )
     key = F.struct(F.col("score"), F.col("from_url"))
-    salted = linked.withColumn(
-        "_salt", F.pmod(F.xxhash64("from_url"), F.lit(cfg.salt_buckets))
-    )
-    phase1 = salted.groupBy("url", "_salt").agg(
-        F.max(key).alias("best_key"),
-        F.max_by("metadata", key).alias("meta"),
-    )
-    return phase1.groupBy("url").agg(
-        F.max_by("meta", F.col("best_key")).alias("link_meta")
-    )
+    return linked.groupBy("url").agg(F.max_by("metadata", key).alias("link_meta"))
 
 
 def aggregate_signatures(parse_updates: DataFrame) -> DataFrame:
@@ -158,7 +137,7 @@ def update_frontier(
     # (the column exists only when run_parse was handed a url_meta frame),
     # so the default path adds no join and no shuffle payload
     link_meta = (
-        aggregate_linked_meta(parse_updates, cfg)
+        aggregate_linked_meta(parse_updates)
         if "metadata" in parse_updates.columns else None
     )
 

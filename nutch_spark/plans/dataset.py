@@ -15,7 +15,7 @@ in the order a production pipeline runs them:
 
 Composition is the point at scale: every step is either a map pass (lang,
 quality, scrub, split — they fuse into the parquet scan's projection under
-whole-stage codegen, zero Exchange) or a hash aggregate / salted top-K
+whole-stage codegen, zero Exchange) or a hash aggregate / window top-K
 keyed on a uniform hash (dedup by md5(text), quota by source) — so the
 whole build is scan -> one dedup shuffle -> one quota shuffle, regardless
 of corpus size. Nothing here collects to the driver; the output is a
@@ -93,7 +93,7 @@ def build_dataset(
     # 4. PII scrub (map-only regexp chain)
     d = d.withColumn("text", scrub_pii(F.col("text")))
 
-    # 5. per-source quota (two-phase salted top-K)
+    # 5. per-source quota (one window top-K)
     d = domain_quota_sample(d, quota=quota)
 
     # 6. deterministic hash-bucket split (map-only)

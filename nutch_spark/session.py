@@ -1,7 +1,7 @@
 """SparkSession factory with scale-oriented defaults.
 
 Every knob here is chosen for the 1000-executor / 100 TB target and merely
-*also* works on local[32]:
+*also* works on local[N] (N = this machine's cores by default):
 - AQE on (runtime coalesce + skew-join splitting),
 - Arrow on (all Python crosses the boundary in columnar batches),
 - speculation off (politeness: a host's partition must never run twice
@@ -22,14 +22,14 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS') or os.cpu_count()}]"
     if shuffle_partitions is None:
         # rule of thumb: ~2x cores locally; on a real cluster this is set to
         # ~2-3x total executor cores (or left to AQE coalesce from a high cap)
         try:
             cores = int(master.split("[")[1].rstrip("]*"))
         except (IndexError, ValueError):
-            cores = 32
+            cores = os.cpu_count() or 1
         shuffle_partitions = max(cores, 8)
 
     builder = (
@@ -44,6 +44,13 @@ def get_spark(
         .config("spark.speculation", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # plan the pre-shuffle top-K (Partial WindowGroupLimit) for every
+        # rank filter, not only K <= 1000: the generator's topN/partitions and
+        # db.update.max.inlinks (10,000) are above Spark's default
+        .config("spark.sql.optimizer.windowGroupLimitThreshold", "2147483647")
+        # reliable checkpoints (checkpoints.iter_checkpoint) are deleted once
+        # their DataFrame is garbage-collected; read only at context start
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         # always scan bucketed tables bucket-aligned: the frontier snapshot
         # is bucketed by url precisely so updatedb's merge never shuffles
         # it; auto mode would drop the bucketed scan in plans where the

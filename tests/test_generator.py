@@ -42,7 +42,7 @@ def test_topn_selects_highest_scoring(spark):
     n = 100
     rows = [(f"http://aaa.com/{i:03d}.html", "aaa.com", float(i)) for i in range(n)]
     frontier = mk_frontier(spark, rows)
-    cfg = CrawlConfig(topn=25, num_partitions=1, salt_buckets=4)
+    cfg = CrawlConfig(topn=25, num_partitions=1)
     fl = generate(frontier, cfg, T0)
     got = sorted(r.url for r in fl.collect())
     want = sorted(f"http://aaa.com/{i:03d}.html" for i in range(n - 25, n))
@@ -205,18 +205,18 @@ def test_resolve_urls_report(spark):
 
 
 def test_mega_host_does_not_crowd_out_small_hosts(spark):
-    """The cap-aware salted prefilter must match the reference walk when a
+    """The host-capped selection must match the reference walk when a
     mega-host outscores every other row: the cap demotes mega rows to
-    higher segments, so segment 1 backfills with other hosts' rows. The
-    old url-salted score-only prefilter dropped those rows before the cap
-    ran and under-filled segment 1."""
+    higher segments, so segment 1 backfills with other hosts' rows. A
+    score-only top-K taken before the cap would drop those rows and
+    under-fill segment 1."""
     mega = [(f"http://mega.com/{i:03d}.html", "mega.com", float(100 - i))
             for i in range(50)]
     little = [(f"http://h{i}.com/p.html", f"h{i}.com", float(10 - i))
               for i in range(8)]
     frontier = mk_frontier(spark, mega + little)
     cfg = CrawlConfig(topn=10, num_partitions=1, gen_max_count=3,
-                      gen_max_num_segments=2, salt_buckets=4)
+                      gen_max_num_segments=2)
     fl = generate(frontier, cfg, T0)
     got = {1: set(), 2: set()}
     for r in fl.collect():
@@ -229,3 +229,34 @@ def test_mega_host_does_not_crowd_out_small_hosts(spark):
     seg2 = {f"http://mega.com/{i:03d}.html" for i in (3, 4, 5)}
     assert got[1] == seg1
     assert got[2] == seg2
+
+
+def test_topn_above_window_group_limit_default(spark):
+    """limit = topN / partitions = 1,500 is above Spark's default
+    windowGroupLimitThreshold (1,000): the session conf must still plan the
+    pre-shuffle top-K (WindowGroupLimit), and the selection must equal the
+    reference's per-reducer walk (Generator.java:235-247) with a mega-host
+    holding most of one partition."""
+    from nutch_spark.operators.generate import partition_expr
+
+    mega = [(f"http://mega.com/{i:05d}.html", "mega.com", float(i % 997))
+            for i in range(5000)]
+    little = [(f"http://h{h}.com/{i}.html", f"h{h}.com", float((h * 31 + i) % 50))
+              for h in range(12) for i in range(40)]
+    rows = mega + little
+    cfg = CrawlConfig(topn=3000, num_partitions=2)
+    fl = generate(mk_frontier(spark, rows), cfg, T0)
+    got = {(r.url, r.partition_id) for r in fl.collect()}
+
+    hosts = spark.createDataFrame([(h,) for h in {r[1] for r in rows}], "host string")
+    pid = {r.host: r.p for r in
+           hosts.select("host", partition_expr(F.col("host"), cfg).alias("p")).collect()}
+    by_part = {}
+    for url, host, score in rows:
+        by_part.setdefault(pid[host], []).append((-score, url))
+    want = {(url, p) for p, lst in by_part.items() for _, url in sorted(lst)[:1500]}
+    assert got == want
+    assert len(got) > 1500  # the mega partition is cut, the other is not
+
+    plan = fl._jdf.queryExecution().executedPlan().toString()
+    assert "WindowGroupLimit" in plan

@@ -539,15 +539,15 @@ def test_ngram_contamination_hits_and_broadcast_shape(spark):
 
 def test_domain_quota_sample_deterministic_and_skew_safe(spark):
     """Per-domain quota sampling: each key keeps min(quota, n) rows, the
-    kept set is the exact md5-priority top-K (two-phase salted result ==
-    single-window reference), and re-running yields the identical set."""
+    kept set is the exact md5-priority top-K (equal to a per-key Python
+    reference walk), and re-running yields the identical set."""
     from pyspark.sql import functions as F
 
     from nutch_spark.operators.sampling import domain_quota_sample
 
     rows = [(i, "mega" if i < 200 else f"tail{i % 5}") for i in range(230)]
     df = spark.createDataFrame(rows, "doc_id int, source string")
-    out = domain_quota_sample(df, quota=3, salt_buckets=4)
+    out = domain_quota_sample(df, quota=3)
     got = {(r.doc_id, r.source) for r in out.collect()}
     per_key = {}
     for did, src in got:
@@ -555,7 +555,7 @@ def test_domain_quota_sample_deterministic_and_skew_safe(spark):
     assert per_key["mega"] == 3
     assert all(v <= 3 for v in per_key.values())
 
-    # reference selection: one global window, no salting
+    # reference selection: per key, the quota lowest md5 priorities
     import hashlib
 
     want = {}
@@ -695,7 +695,7 @@ def test_domain_quota_sample_null_key_group(spark):
     rows = [(i, None) for i in range(20)] + [(100 + i, "s") for i in range(5)]
     df = spark.createDataFrame(rows, "doc_id int, source string")
     got = {(r.doc_id, r.source) for r in
-           domain_quota_sample(df, quota=3, salt_buckets=4).collect()}
+           domain_quota_sample(df, quota=3).collect()}
     null_pri = sorted(
         (hashlib.md5(f":{i}".encode()).hexdigest(), i) for i in range(20))
     want_null = {(i, None) for _, i in null_pri[:3]}
@@ -765,7 +765,7 @@ def test_dataset_build_composition(spark):
     """End-to-end build_dataset: every stage bites, dedup removes ALL
     shifted duplicates (so the manifest is invariant to re-unioning them),
     quota and split invariants hold, and the whole build runs in a bounded
-    number of shuffles (dedup agg + the two quota windows)."""
+    number of shuffles (dedup agg + the quota window)."""
     from nutch_spark.plans.dataset import build_dataset
 
     d = (
@@ -797,11 +797,11 @@ def test_dataset_build_composition(spark):
         assert r.n_tokens > 0
     assert max(by_source.values()) <= 20  # quota bound
 
-    # bounded shuffle count: dedup agg + the two salted-quota windows
+    # bounded shuffle count: dedup agg + the quota window
     # (AQE's string includes the Initial Plan too — count the final only)
     plan = out._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
-    assert final.count("+- Exchange") <= 3
+    assert final.count("+- Exchange") <= 2
     # the interpreted lang expression must appear ONCE (barrier held):
     # no copy re-inlined into a Filter predicate
     # (detect_language's CASE holds 2 array_sorts — WHEN + THEN branch;

@@ -203,8 +203,14 @@ def test_reliable_checkpoint_knob_preserves_results(spark, tmp_path):
     cut (linkrank, find_loops, duplicate_clusters) uses RELIABLE
     checkpoint() against the dir instead of executor-stored
     localCheckpoint — same results, and checkpoint files actually land on
-    disk (what survives an executor loss on a real cluster)."""
+    disk (what survives an executor loss on a real cluster). Once their
+    DataFrames are garbage-collected the checkpoints are deleted again
+    (spark.cleaner.referenceTracking.cleanCheckpoints), so the dir does
+    not grow per iteration."""
+    import gc
+    import glob
     import os
+    import time
 
     from pyspark.sql import functions as F
 
@@ -233,6 +239,17 @@ def test_reliable_checkpoint_knob_preserves_results(spark, tmp_path):
         # the knob really switched modes: reliable checkpoint wrote files
         found = any(files for _, _, files in os.walk(ckdir))
         assert found, "no checkpoint files written under the configured dir"
+
+        def n_rdd_dirs():
+            return len(glob.glob(os.path.join(ckdir, "*", "rdd-*")))
+
+        before = n_rdd_dirs()
+        deadline = time.time() + 60
+        while n_rdd_dirs() >= before and time.time() < deadline:
+            gc.collect()
+            spark.sparkContext._jvm.java.lang.System.gc()
+            time.sleep(0.5)
+        assert n_rdd_dirs() < before, "checkpoint dirs never cleaned"
     finally:
         spark.conf.unset(CHECKPOINT_DIR_CONF)
     assert reliable == base
