@@ -13,8 +13,9 @@ politeness clock is virtual, so wall time measures engine dataflow cost).
 Modes:
   python bench.py                 # full suite, one JSON line
   python bench.py --crawl-only    # just the crawl throughput job
-  python bench.py --scaling       # identical crawl job at N=8 and 4N=32
-                                  # cores -> throughput at both + efficiency
+  python bench.py --scaling       # identical crawl job at N and 4N cores
+                                  # (SCALE_N, default 1: N=1 -> 4N=4) ->
+                                  # throughput at both + efficiency
                                   # (sandbox protocol from BASELINE.md)
 """
 

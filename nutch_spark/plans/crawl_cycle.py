@@ -285,14 +285,16 @@ class CrawlDriver:
             # O(frontier) — at 10^10 frontier URLs the full rebuild was a
             # per-cycle scan of the whole crawl history). Source = the pending
             # snapshot's files, column-pruned to (url, is_new) with the filter
-            # pushed to the scan. Crash windows are safe: redo before install
-            # overwrites the same snapshot dir; a sketch committed for a cycle
-            # whose install never happened is a superset of the frontier
-            # (bloom OR is idempotent), same as the previous ordering.
+            # pushed to the scan. Base = the sketch tagged like the frontier
+            # this cycle started from: after a crash past A4 the newest is the
+            # crashed attempt's, which already holds this cycle's new URLs. A
+            # redo's writes reuse the `cycle-N` tags and so replace the crashed
+            # attempt's snapshots (storage install()).
             committed = self.frontier_t.read_pending(self.spark, pending)
+            base = self.sketch_t.by_tag(frontier_snap.tag)
             prev_sketch = sketch_if_current(
-                self.sketch_t.read(self.spark) if self.sketch_t.exists() else None,
-                cfg)
+                self.sketch_t.read(self.spark, snapshot_id=base.snapshot_id)
+                if base else None, cfg)
             if prev_sketch is not None:
                 new_sketch = update_seen_sketch(
                     prev_sketch,

@@ -4,12 +4,15 @@ Production target is Apache Iceberg (atomic commits, snapshot tags,
 time travel) — this sandbox has no Iceberg runtime jars, so SnapshotTable
 reproduces the subset of semantics the engine needs over plain parquet:
 
-- each commit writes a new immutable snapshot directory, then atomically
-  installs it by `os.replace` of a small JSON pointer file — the exact
-  analogue of the reference's rename-swap install
-  (crawl/CrawlDb.java:148-164) and of an Iceberg metadata-pointer swap;
+- every write is prepare() then install(): prepare() writes a new
+  immutable snapshot directory under a fresh id, install() adds it to the
+  log by `os.replace` of a small JSON pointer file — the exact analogue of
+  the reference's rename-swap install (crawl/CrawlDb.java:148-164) and of
+  an Iceberg metadata-pointer swap;
 - snapshots carry tags (cycle markers) so a killed crawl resumes from the
-  last committed cycle;
+  last committed cycle. Installs are keyed by tag: a snapshot whose tag is
+  already on the newest one replaces it in the same swap, so a redone
+  cycle's writes leave each table as if the cycle had run once;
 - readers always see a complete snapshot (never a partial write).
 
 Swapping this class for `spark.read/writeTo("catalog.db.table")` is a
@@ -95,9 +98,23 @@ class SnapshotTable:
         return f"{self.name}_{h}_snap{sid:06d}"
 
     def commit(self, df: DataFrame, tag: str | None = None,
-               partition_by: list[str] | None = None,
                bucket_by: tuple[str, int] | None = None) -> Snapshot:
-        """Write df as a new snapshot and atomically install it.
+        """Write df as a new full snapshot and atomically install it."""
+        return self.install(self.prepare(df, tag=tag, bucket_by=bucket_by))
+
+    def prepare(self, data: DataFrame | list[dict], tag: str | None = None,
+                bucket_by: tuple[str, int] | None = None,
+                append: bool = False) -> dict:
+        """Phase 1 of every write (the Iceberg write protocol: data files
+        first, metadata-pointer swap last): the only place a snapshot id is
+        minted. Writes data (a DataFrame, or driver-side rows) WITHOUT
+        touching the log, so readers cannot see it until install(). Lets a
+        caller use the snapshot write itself as a plan's single
+        materialization (instead of a .cache() columnar copy) and keep the
+        pointer swap, the completeness marker, as its last step. A crash
+        before install() leaves an unlisted dir with id newest+1, which the
+        redo's prepare() writes over. append=True: read() unions the
+        snapshot with every append since the last full commit.
 
         bucket_by=(col, n) writes a hash-bucketed layout (the Iceberg
         `bucket(n, col)` partition-spec analogue, realized as a Spark
@@ -110,38 +127,21 @@ class SnapshotTable:
         col (as the updatedb merge output is), each task holds exactly one
         bucket and emits one bucket-tagged file; misaligned input merely
         yields more files per bucket, never wrong results."""
-        return self.install(self.prepare(df, tag=tag, partition_by=partition_by,
-                                         bucket_by=bucket_by))
-
-    def prepare(self, df: DataFrame, tag: str | None = None,
-                partition_by: list[str] | None = None,
-                bucket_by: tuple[str, int] | None = None) -> dict:
-        """Phase 1 of a two-phase commit (the Iceberg write protocol: data
-        files first, metadata-pointer swap last). Writes the snapshot's data
-        WITHOUT installing the pointer — invisible to readers until
-        install(). Lets a caller use the snapshot write itself as a plan's
-        single materialization (instead of a .cache() columnar copy) and
-        still keep the pointer swap — the completeness marker — as the last
-        step. A crash before install() leaves only an orphan data dir; a
-        redo recomputes the same snapshot id and overwrites it in place."""
         log = self._load_log()
-        sid = (log[-1]["snapshot_id"] + 1) if log else 1
+        parent = log[-1]["snapshot_id"] if log else None
+        sid = (parent or 0) + 1
         path = os.path.join(self.root, f"snap-{sid:06d}")
-        snap = {
-            "snapshot_id": sid,
-            "tag": tag,
-            "path": path,
-            "committed_at_ms": int(time.time() * 1000),
-            "parent_id": log[-1]["snapshot_id"] if log else None,
-            "append": False,
-        }
-        if bucket_by:
+        snap = {"snapshot_id": sid, "tag": tag, "path": path,
+                "committed_at_ms": int(time.time() * 1000),
+                "parent_id": parent, "append": append}
+        if isinstance(data, list):
+            self._write_rows(data, path, log)
+        elif bucket_by:
             col, n = bucket_by
             tname = self._table_name(sid)
-            spark = df.sparkSession
-            spark.sql(f"DROP TABLE IF EXISTS {tname}")
+            data.sparkSession.sql(f"DROP TABLE IF EXISTS {tname}")
             (
-                df.write.mode("overwrite")
+                data.write.mode("overwrite")
                 .format("parquet")
                 .option("path", path)
                 .bucketBy(n, col)
@@ -150,66 +150,18 @@ class SnapshotTable:
             )
             snap.update(bucket_col=col, bucket_n=n, table_name=tname)
         else:
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(path)
+            data.write.mode("overwrite").parquet(path)
         return snap
 
-    def read_pending(self, spark: SparkSession, pending: dict) -> DataFrame:
-        """Scan a prepare()d-but-not-installed snapshot's data files."""
-        snap = Snapshot(**pending)
-        if snap.bucket_col:
-            return self._read_bucketed(spark, snap)
-        return spark.read.parquet(snap.path)
-
-    def install(self, pending: dict) -> Snapshot:
-        """Phase 2: atomically install a prepare()d snapshot (pointer swap).
-        Refuses if another snapshot landed since prepare() — the id (and
-        with it the data path) would collide."""
-        log = self._load_log()
-        expected = (log[-1]["snapshot_id"] + 1) if log else 1
-        if pending["snapshot_id"] != expected:
-            raise RuntimeError(
-                f"install({self.name}): snapshot id {pending['snapshot_id']} is "
-                f"stale (next id is {expected}); a commit landed since prepare()")
-        pending["committed_at_ms"] = int(time.time() * 1000)
-        log.append(pending)
-        self._install_log(log)
-        return Snapshot(**pending)
-
-    def append(self, df: DataFrame, tag: str | None = None) -> Snapshot:
-        """Append-only commit (fast path for logs: lineage, metrics).
-        Readers union all appended snapshots since the last full commit."""
-        log = self._load_log()
-        sid = (log[-1]["snapshot_id"] + 1) if log else 1
-        path = os.path.join(self.root, f"snap-{sid:06d}")
-        df.write.mode("overwrite").parquet(path)
-        snap = {
-            "snapshot_id": sid,
-            "tag": tag,
-            "path": path,
-            "committed_at_ms": int(time.time() * 1000),
-            "parent_id": log[-1]["snapshot_id"] if log else None,
-            "append": True,
-        }
-        log.append(snap)
-        self._install_log(log)
-        return Snapshot(**snap)
-
-    def append_rows(self, rows: list[dict], tag: str | None = None) -> Snapshot:
-        """Append tiny driver-side log rows (lineage, per-partition metrics)
-        without a Spark write job: one pyarrow file + pointer swap. A Spark
-        parquet write costs task launch + the output-committer rename dance
-        per cycle — pure serial driver time for a ~36-row table, i.e.
-        exactly the fraction the N->4N scaling criterion punishes."""
+    def _write_rows(self, rows: list[dict], path: str, log: list[dict]) -> None:
+        """Tiny driver-side log rows (lineage, per-partition metrics) go out
+        without a Spark write job: one pyarrow file. A Spark parquet write
+        costs task launch + the output-committer rename dance per cycle —
+        pure serial driver time for a ~36-row table, i.e. exactly the
+        fraction the N->4N scaling criterion punishes."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        log = self._load_log()
-        sid = (log[-1]["snapshot_id"] + 1) if log else 1
-        path = os.path.join(self.root, f"snap-{sid:06d}")
-        os.makedirs(path, exist_ok=True)
         table = pa.Table.from_pylist(rows)
         # pin physical types to the table's existing parquet layout:
         # read() unions every append since the last full commit into ONE
@@ -226,18 +178,53 @@ class SnapshotTable:
                     f"append_rows({self.name}): columns {null_cols} are all-None and "
                     "no prior snapshot pins their type; pass typed values"
                 )
+        os.makedirs(path, exist_ok=True)
         pq.write_table(table, os.path.join(path, "part-00000.parquet"))
-        snap = {
-            "snapshot_id": sid,
-            "tag": tag,
-            "path": path,
-            "committed_at_ms": int(time.time() * 1000),
-            "parent_id": log[-1]["snapshot_id"] if log else None,
-            "append": True,
-        }
-        log.append(snap)
-        self._install_log(log)
-        return Snapshot(**snap)
+
+    def read_pending(self, spark: SparkSession, pending: dict) -> DataFrame:
+        """Scan a prepare()d-but-not-installed snapshot's data files."""
+        snap = Snapshot(**pending)
+        if snap.bucket_col:
+            return self._read_bucketed(spark, snap)
+        return spark.read.parquet(snap.path)
+
+    def install(self, pending: dict) -> Snapshot:
+        """Phase 2 of every write: add a prepare()d snapshot to the log in
+        one atomic pointer swap. Keyed by tag, so a redo is idempotent: if
+        the newest snapshot already carries the pending tag (a crashed
+        cycle's write), the same swap replaces it, and its data dir and
+        catalog table are dropped afterwards. The replacement has a fresh id
+        and path, so installed files are never overwritten in place. Refuses
+        a tag that an older snapshot carries, and a pending snapshot that
+        another install overtook since prepare() (its id is stale)."""
+        log = self._load_log()
+        expected = (log[-1]["snapshot_id"] + 1) if log else 1
+        if pending["snapshot_id"] != expected:
+            raise RuntimeError(
+                f"install({self.name}): snapshot id {pending['snapshot_id']} is "
+                f"stale (next id is {expected}); a commit landed since prepare()")
+        tag = pending["tag"]
+        old = log.pop() if tag is not None and log and log[-1]["tag"] == tag else None
+        if tag is not None and any(e["tag"] == tag for e in log):
+            raise RuntimeError(
+                f"install({self.name}): tag {tag!r} is on an older snapshot; "
+                "only the newest snapshot can be replaced")
+        if old is not None:
+            pending["parent_id"] = old["parent_id"]
+        pending["committed_at_ms"] = int(time.time() * 1000)
+        self._install_log(log + [pending])
+        if old is not None:
+            self._drop([old], SparkSession.getActiveSession())
+        return Snapshot(**pending)
+
+    def append(self, df: DataFrame, tag: str | None = None) -> Snapshot:
+        """Append-only commit (logs: lineage, metrics, fetch status).
+        Readers union all appended snapshots since the last full commit."""
+        return self.install(self.prepare(df, tag=tag, append=True))
+
+    def append_rows(self, rows: list[dict], tag: str | None = None) -> Snapshot:
+        """append() for tiny driver-side rows, written without a Spark job."""
+        return self.install(self.prepare(rows, tag=tag, append=True))
 
     def read(self, spark: SparkSession, tag: str | None = None, snapshot_id: int | None = None) -> DataFrame:
         if snapshot_id is not None:
@@ -307,32 +294,41 @@ class SnapshotTable:
             )
         return spark.table(tname)
 
+    def _drop(self, entries: list[dict], spark: SparkSession | None) -> None:
+        """Delete the data dirs of snapshots no longer in the log; with a
+        session, also deregister their bucketed catalog tables (the
+        in-memory catalog is session-scoped, so this is best-effort)."""
+        for e in entries:
+            if spark is not None and e.get("table_name"):
+                spark.sql(f"DROP TABLE IF EXISTS {e['table_name']}")
+            shutil.rmtree(e["path"], ignore_errors=True)
+
     def expire_snapshots(self, keep: int = 3, spark: SparkSession | None = None) -> int:
-        """Drop all but the newest `keep` snapshots (GC; Iceberg expire analogue).
-        Pass spark to also deregister dead bucketed snapshots' catalog tables
-        (the in-memory catalog is session-scoped, so this is best-effort)."""
+        """Drop all but the newest `keep` snapshots (GC; Iceberg expire
+        analogue; keep=0 keeps all). Also deletes orphans: snapshot dirs
+        with an id at or below the newest logged one that the log does not
+        list, left by a crash between an earlier swap and its deletes. A
+        pending prepare() has id newest+1, so it is never touched. Returns
+        the number of snapshots expired plus orphans deleted."""
         log = self._load_log()
-        if len(log) <= keep:
-            return 0
-        dead, live = log[:-keep], log[-keep:]
+        cut = len(log) - keep if 0 < keep < len(log) else 0
         # append chains: a retained APPEND snapshot is a logical union of
         # every snapshot back to (and including) its base full commit —
         # expiring any of those would silently drop their rows from read().
         # Walk back from the oldest retained snapshot to its chain base and
         # keep everything from there on.
-        while dead and live and live[0].get("append"):
-            live.insert(0, dead.pop())
-        if not dead:
-            return 0
-        self._install_log(live)
-        n = 0
-        for e in dead:
-            if spark is not None and e.get("table_name"):
-                spark.sql(f"DROP TABLE IF EXISTS {e['table_name']}")
-            if os.path.isdir(e["path"]):
-                shutil.rmtree(e["path"], ignore_errors=True)
-                n += 1
-        return n
+        while cut > 0 and log[cut].get("append"):
+            cut -= 1
+        dead, live = log[:cut], log[cut:]
+        if dead:
+            self._install_log(live)
+        self._drop(dead, spark)
+        newest = live[-1]["snapshot_id"] if live else 0
+        listed = {os.path.basename(e["path"]) for e in live}
+        orphans = [d for d in os.listdir(self.root) if d.startswith("snap-")
+                   and d not in listed and int(d[5:]) <= newest]
+        self._drop([{"path": os.path.join(self.root, d)} for d in orphans], None)
+        return len(dead) + len(orphans)
 
 
 class Catalog:

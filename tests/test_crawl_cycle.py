@@ -1,11 +1,14 @@
 """Multi-cycle crawl + resume-from-checkpoint (north_rule requirements)."""
 
+import traceback
+
 import pytest
 from pyspark.sql import functions as F
 
-from nutch_spark import schemas
+from nutch_spark import schemas, storage
 from nutch_spark.config import CrawlConfig
-from nutch_spark.plans.crawl_cycle import CrawlDriver, crawl
+from nutch_spark.plans.crawl_cycle import (CYCLE_VIRTUAL_MS, T0_DEFAULT,
+                                           CrawlDriver, crawl)
 from nutch_spark.storage import Catalog
 
 
@@ -74,54 +77,192 @@ def test_crawl_ordering_deterministic(spark, corpus_tables, cfg, tmp_path):
     assert run(str(tmp_path / "r1")) == run(str(tmp_path / "r2"))
 
 
-def test_resume_mid_cycle_crash_windows(spark, corpus_tables, cfg, tmp_path):
-    """Two-phase frontier commit crash windows (storage.prepare/install).
+# Crash points of the sweep below: the driver-side write that raises, in
+# cycle order (A1 fetch append, A2 documents commit, A3 frontier write,
+# A4 sketch commit, A5 metrics collect, A6 frontier install).
+CRASH_POINTS = (
+    ("documents_t", "commit"),          # after A1
+    ("frontier_t", "prepare"),          # after A1, A2
+    ("sketch_t", "commit"),             # after A1-A3, A5
+    ("metrics_t", "append_rows"),       # after A4
+    ("lineage_t", "append_rows"),       # after the metrics append
+    ("frontier_t", "install"),          # after the log appends (window B)
+    ("frontier_t", "expire_snapshots"),  # shutil.rmtree raises: cycle installed
+)
+FRONTIER_COLS = ["url", "status", "retries", "fetch_interval", "signature"]
+# table -> measured columns, which differ between any two runs
+CATALOG_TABLES = {"frontier": (), "seen_sketch": (), "documents": (),
+                  "fetch_status": ("kernel_wall_ms",), "lineage": (),
+                  "fetch_metrics": ("wall_ms",)}
 
-    Window A: crash after the frontier data write but before any commit —
-    redo recomputes the same snapshot id and overwrites in place.
-    Window B: crash after the sketch commit but before the frontier pointer
-    install — the sketch is a SUPERSET of the installed frontier (bloom OR
-    is idempotent), so redoing the cycle keeps sketch ⊇ frontier and lands
-    the same final state as an uninterrupted run."""
-    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+
+def _injected_crash(*a, **kw):
+    raise RuntimeError("injected crash")
+
+
+def _crash_at(table, method: str):
+    """Make one write of `table` raise; for expire_snapshots, make it raise
+    from its first shutil.rmtree, after the shortened log is installed."""
+    if method != "expire_snapshots":
+        return _injected_crash
+    real = table.expire_snapshots
+
+    def expire(*a, **kw):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(storage.shutil, "rmtree", _injected_crash)
+            return real(*a, **kw)
+    return expire
+
+
+def _catalog_state(spark, root: str) -> dict:
+    """Per table: the latest read as a multiset of rows (measured columns
+    dropped), its snapshot tags, and whether the snapshot dirs on disk are
+    exactly the logged ones."""
+    import os
+    from collections import Counter
+
+    state = {}
+    for name, measured in CATALOG_TABLES.items():
+        t = Catalog(root).table(name)
+        df = t.read(spark).drop(*measured)
+        rows = Counter(r[0] for r in df.select(
+            F.to_json(F.struct(*df.columns))).collect())
+        snaps = t.snapshots()
+        on_disk = {d for d in os.listdir(t.root) if d.startswith("snap-")}
+        live = {os.path.basename(s.path) for s in snaps}
+        state[name] = {"rows": rows, "tags": [s.tag for s in snaps],
+                       "dirs": on_disk == live}
+    return state
+
+
+def _crash_and_resume(spark, corpus_tables, cfg, root, table_attr, method,
+                      want) -> list[str]:
+    """Run cycle 1, crash cycle 2 at one write, resume to depth 3; return
+    how the catalog differs from the uninterrupted run's `want`."""
+    from nutch_spark.operators.seen import probe_seen_flags
+
+    point = f"{table_attr}.{method}"
     args = (corpus_tables["seeds"], corpus_tables["web_graph"],
             corpus_tables["robots"], corpus_tables["raw_content"])
-
-    crawl(spark, a, cfg, *args, depth=2)  # uninterrupted run to compare
-
-    # run cycle 1 normally, then simulate a cycle-2 crash in window B:
-    # frontier PREPARED + sketch COMMITTED, pointer never installed
-    crawl(spark, b, cfg, *args, depth=1)
-    drv = CrawlDriver(spark, b, cfg, corpus_tables["web_graph"],
-                      corpus_tables["robots"], corpus_tables["raw_content"])
-    orig_install = drv.frontier_t.install
-    drv.frontier_t.install = lambda pending: (_ for _ in ()).throw(
-        RuntimeError("injected crash before pointer install"))
+    crawl(spark, root, cfg, *args, depth=1)
+    drv = CrawlDriver(spark, root, cfg, *args[1:])
+    table = getattr(drv, table_attr)
+    setattr(table, method, _crash_at(table, method))
     with pytest.raises(RuntimeError, match="injected crash"):
         drv.run_cycle(2)
-    drv.frontier_t.install = orig_install
-    # the crash left cycle 1 as the last COMPLETE cycle
-    assert drv.last_completed_cycle() == 1
-    # sketch is ahead of the frontier pointer (window B) — still a superset
+    delattr(table, method)
+    # only a crash after the A6 install leaves cycle 2 complete
+    installed = method == "expire_snapshots"
+    assert drv.last_completed_cycle() == (2 if installed else 1)
 
-    resumed = crawl(spark, b, cfg, *args, depth=2)  # redo cycle 2
-    assert [r.cycle for r in resumed] == [2]
+    resumed = crawl(spark, root, cfg, *args, depth=3)
+    assert [r.cycle for r in resumed] == ([3] if installed else [2, 3])
 
-    fa = Catalog(a).table("frontier").read(spark)
-    fb = Catalog(b).table("frontier").read(spark)
-    cols = ["url", "status", "retries", "fetch_interval", "signature"]
-    assert ({tuple(r) for r in fa.select(*cols).collect()}
-            == {tuple(r) for r in fb.select(*cols).collect()})
-
-    # sketch ⊇ frontier invariant after the redo: probing every frontier
-    # URL against the committed sketch yields zero bloom false negatives
-    from nutch_spark.operators.seen import probe_seen_flags
-    cat = Catalog(b)
-    sketch = cat.table("seen_sketch").read(spark)
-    frontier_urls = fb.select("url")
-    misses = (probe_seen_flags(frontier_urls, sketch, cfg)
+    fb = Catalog(root).table("frontier").read(spark)
+    assert want["frontier_cols"] == {tuple(r) for r in fb.select(*FRONTIER_COLS).collect()}
+    # sketch ⊇ frontier after the redo: zero bloom false negatives
+    sketch = Catalog(root).table("seen_sketch").read(spark)
+    misses = (probe_seen_flags(fb.select("url"), sketch, cfg)
               .filter(~F.col("maybe_seen")).count())
     assert misses == 0
+
+    got = _catalog_state(spark, root)
+    diffs = []
+    for name in CATALOG_TABLES:
+        g, w = got[name], want[name]
+        if g["rows"] != w["rows"]:
+            diffs.append(f"{point}: {name} rows {g['rows'].total()} "
+                         f"(uninterrupted {w['rows'].total()}), "
+                         f"{(g['rows'] - w['rows']).total()} extra")
+        if g["tags"] != w["tags"]:
+            diffs.append(f"{point}: {name} tags {g['tags']} (uninterrupted {w['tags']})")
+        if not g["dirs"]:
+            diffs.append(f"{point}: {name} has snapshot dirs its log does not list")
+    return diffs
+
+
+def test_resume_mid_cycle_crash_windows(spark, corpus_tables, cfg, tmp_path):
+    """Crash-point sweep over the prepare -> install write protocol.
+
+    For each crash point, run cycle 1, let one write of cycle 2 raise,
+    then resume to depth 3. Each redone write installs under the same
+    `cycle-2` tag, so it replaces the crashed attempt's snapshot instead of
+    adding a second one, and the sketch update ORs into the sketch of the
+    frontier the cycle started from, not the crashed attempt's own. So
+    every catalog table must equal the uninterrupted run: the same rows
+    (as a multiset), the same snapshot tags, and no snapshot dir on disk
+    that its log does not list (a crash halfway through expiry leaves
+    orphans that the next expiry deletes). The sketch also keeps
+    sketch ⊇ frontier. Every point runs, and the failure lists them all."""
+    gc_cfg = CrawlConfig(**{**cfg.__dict__, "snapshot_keep": 2})
+    a = str(tmp_path / "uninterrupted")
+    crawl(spark, a, gc_cfg, corpus_tables["seeds"], corpus_tables["web_graph"],
+          corpus_tables["robots"], corpus_tables["raw_content"], depth=3)
+    want = _catalog_state(spark, a)  # shared by every crash point
+    fa = Catalog(a).table("frontier").read(spark)
+    want["frontier_cols"] = {tuple(r) for r in fa.select(*FRONTIER_COLS).collect()}
+
+    failures = []
+    for table_attr, method in CRASH_POINTS:
+        root = str(tmp_path / f"{table_attr}.{method}")
+        try:
+            failures += _crash_and_resume(spark, corpus_tables, gc_cfg, root,
+                                          table_attr, method, want)
+        except Exception:  # noqa: BLE001 - report every point, not the first
+            failures.append(f"{table_attr}.{method}: {traceback.format_exc()}")
+    assert not failures, "\n".join(failures)
+
+
+def _frontier_side_of_join(df) -> list[str]:
+    """Run df, then return its executed plan's nodes from the file scan up
+    to (not including) the first join above it. df must have exactly one
+    file scan."""
+    df.collect()
+    plan = (df._jdf.queryExecution().executedPlan().toString()
+            .split("== Initial Plan ==")[0].splitlines())
+    scans = [i for i, line in enumerate(plan) if "FileScan" in line]
+    assert len(scans) == 1, plan
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    chain, d = [], depth(plan[scans[0]])
+    for line in reversed(plan[:scans[0]]):
+        if depth(line) < d:
+            d = depth(line)
+            if "Join" in line:
+                return chain
+            chain.append(line.strip())
+    raise AssertionError(f"no join above the file scan: {plan}")
+
+
+def test_updatedb_merge_shuffles_no_frontier_side(spark, corpus_tables, cfg, tmp_path):
+    """The point of the bucketed frontier write (PLANS §6.9): a scan of a
+    bucketed snapshot reports HashPartitioning(url, n), so the updatedb
+    merge's join shuffles only the updates side. The same merge over the
+    same files read as plain parquet needs an Exchange on the frontier
+    side, which shows the check can fail."""
+    from nutch_spark.operators.parse import run_parse
+    from nutch_spark.operators.updatedb import update_frontier
+
+    root = str(tmp_path / "cat")
+    crawl(spark, root, cfg, corpus_tables["seeds"], corpus_tables["web_graph"],
+          corpus_tables["robots"], corpus_tables["raw_content"], depth=1)
+    drv = CrawlDriver(spark, root, cfg, corpus_tables["web_graph"],
+                      corpus_tables["robots"], corpus_tables["raw_content"])
+    fetched = drv.fetch_t.read(spark)  # driver-side rows: the frontier is the only file scan
+    fetch_out = spark.createDataFrame(fetched.collect(), fetched.schema)
+    parsed = run_parse(fetch_out, corpus_tables["raw_content"], cfg, cache_links=False)
+
+    def merge(frontier):
+        return update_frontier(frontier, fetch_out, parsed["parse_updates"], cfg,
+                               T0_DEFAULT + 2 * CYCLE_VIRTUAL_MS)
+
+    bucketed = _frontier_side_of_join(merge(drv.frontier()))
+    assert not any("Exchange" in n for n in bucketed), bucketed
+    plain = spark.read.parquet(drv.frontier_t.latest().path).drop("is_new")
+    assert any("Exchange" in n for n in _frontier_side_of_join(merge(plain)))
+    parsed["docs_nested"].unpersist()
 
 
 def test_snapshot_expiry_keeps_resume_intact(spark, corpus_tables, cfg, tmp_path):
@@ -185,6 +326,26 @@ def test_expire_snapshots_preserves_append_chain(spark, tmp_path):
              tag="full2")
     assert t.expire_snapshots(keep=1) > 0
     assert {r.url for r in t.read(spark).collect()} == {"u9"}
+
+
+def test_install_is_keyed_by_tag(spark, tmp_path):
+    """A write whose tag is on the newest snapshot replaces it in the same
+    log swap, under a fresh id, and its old dir is deleted; a tag on an
+    older snapshot is refused."""
+    import os
+
+    t = Catalog(str(tmp_path / "cat")).table("log")
+    t.append_rows([{"cycle": 1, "n": 1}], tag="cycle-1")
+    first = t.append_rows([{"cycle": 2, "n": 1}], tag="cycle-2")
+    redo = t.append_rows([{"cycle": 2, "n": 2}], tag="cycle-2")
+    assert [s.tag for s in t.snapshots()] == ["cycle-1", "cycle-2"]
+    assert redo.snapshot_id > first.snapshot_id
+    assert redo.parent_id == first.parent_id
+    assert not os.path.exists(first.path)
+    assert sorted((r.cycle, r.n) for r in t.read(spark).collect()) == [(1, 1), (2, 2)]
+    with pytest.raises(RuntimeError, match="older snapshot"):
+        t.append_rows([{"cycle": 1, "n": 3}], tag="cycle-1")
+    assert [s.tag for s in t.snapshots()] == ["cycle-1", "cycle-2"]
 
 
 def test_bench_corpus_host_ids_above_9999_do_not_collide(spark):

@@ -7,10 +7,11 @@ at the pre-change commit to compare shapes.
 usage: python tools/probe_outlink_shuffle.py [n_hosts] [pages_per_host]
 """
 import json
+import os
 import sys
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def shuffle_write_bytes() -> int:

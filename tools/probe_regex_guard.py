@@ -6,10 +6,11 @@ Usage: python tools/probe_regex_guard.py CORES [DIRTY_PCT]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 GUARD = r"(?i:sid|phpsessid|sessionid)=|/(?i:index|default)\.|#|\?&|&{2,}|[?&.]$"
 

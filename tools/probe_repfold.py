@@ -8,10 +8,11 @@ actual wall delta on the bench corpus. Run on an otherwise-idle host:
 
     python tools/probe_repfold.py [A B A B reps, default 2]
 """
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import Window, functions as F  # noqa: E402
 

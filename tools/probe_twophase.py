@@ -13,12 +13,13 @@ from __future__ import annotations
 
 import io
 import json
+import os
 import sys
 import time
 import urllib.request
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def shuffle_write_bytes() -> int:
