@@ -103,13 +103,13 @@ BENCH_QUERIES = [
 ]
 
 
-def _spark(cpus: int):
+def _spark(cpus: int, shuffle_partitions: int):
     from nutch_spark.session import get_spark
 
     return get_spark(
         "bench",
         master=f"local[{cpus}]",
-        shuffle_partitions=max(2 * cpus, 16),
+        shuffle_partitions=shuffle_partitions,
     )
 
 
@@ -191,7 +191,7 @@ def run_query_suite(spark) -> dict:
 
 
 def main_bench(crawl_only: bool) -> dict:
-    spark = _spark(CPUS)
+    spark = _spark(CPUS, max(2 * CPUS, 16))
     t_total = time.time()
     crawl_stats = run_crawl_throughput(spark, num_partitions=CPUS)
     timings = {} if crawl_only else run_query_suite(spark)
@@ -276,9 +276,10 @@ def _stream(_i: int) -> int:
 def main_scaling() -> dict:
     """North-rule evidence: identical job, identical input, N vs 4N cores.
 
-    Partitioning is held constant (num_partitions pinned) so both runs
-    execute the same physical plan over the same partitions; only available
-    cores differ. efficiency = (thr_4N / thr_N) / 4, target >= 0.8.
+    Partitioning is held constant (num_partitions and the shuffle
+    partitions pinned to BENCH_PARTS) so both runs execute the same physical
+    plan over the same partitions, frontier bucket layout included; only
+    available cores differ. efficiency = (thr_4N / thr_N) / 4, target >= 0.8.
     SCALE_N picks the pair (default N=1 -> 4N=4: the pair where this
     sandbox's hardware actually delivers ~4x capacity; see cpu_capacity).
     hw_normalized_efficiency divides by the measured hardware capacity
@@ -343,10 +344,11 @@ if __name__ == "__main__":
     if "--scaling" in sys.argv:
         result = main_scaling()
     else:
-        # in scaling sub-runs BENCH_PARTS pins the partition count
+        # in scaling sub-runs BENCH_PARTS pins the partition count, and the
+        # shuffle partitions with it (they also size the frontier buckets)
         if os.environ.get("BENCH_PARTS"):
             CPUS_PART = int(os.environ["BENCH_PARTS"])
-            spark = _spark(CPUS)
+            spark = _spark(CPUS, CPUS_PART)
             t0 = time.time()
             stats = run_crawl_throughput(spark, num_partitions=CPUS_PART)
             spark.stop()

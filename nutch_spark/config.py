@@ -41,10 +41,6 @@ class CrawlConfig:
     fetcher_queue_mode: str = "byHost"       # fetcher.queue.mode (byHost|byDomain|byIP)
     partition_seed: int = 42                 # partition.url.seed (fixed for reproducibility)
     num_partitions: int = 32                 # reducer count analogue
-    # frontier storage bucket count (Iceberg bucket(url) spec analogue);
-    # sized so one bucket of the 10^10-row frontier fits an executor —
-    # at 100 TB this is ~2^13-2^14, locally it matches shuffle partitions
-    frontier_buckets: int = 32
     # state-table snapshot retention (CrawlDb.install keeps current + old
     # in the reference; Iceberg expire_snapshots analogue). 0 = keep all
     # (safest default; resumable from any cycle). Applies only to the

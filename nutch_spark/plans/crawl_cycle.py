@@ -76,10 +76,6 @@ class CrawlDriver:
             return int(snap.tag.split("-")[1])
         return 0  # inject tag
 
-    def _bucket_spec(self) -> tuple[str, int] | None:
-        n = self.cfg.frontier_buckets
-        return ("url", n) if n and n > 0 else None
-
     def frontier(self) -> DataFrame:
         # is_new is a cycle-internal column (rides each snapshot so the
         # sketch update can re-read it); consumers never see it
@@ -95,7 +91,7 @@ class CrawlDriver:
         obs = Observation()
         pending = self.frontier_t.prepare(
             frontier.observe(obs, F.count(F.lit(1)).alias("n")),
-            tag="inject", bucket_by=self._bucket_spec())
+            tag="inject", bucket_by="url")
         n = int(obs.get["n"])
         pending["row_count"] = n
         self.frontier_t.install(pending)
@@ -262,7 +258,7 @@ class CrawlDriver:
 
             def _frontier_write() -> dict:
                 p = self.frontier_t.prepare(front_df, tag=f"cycle-{cycle}",
-                                            bucket_by=self._bucket_spec())
+                                            bucket_by="url")
                 # snapshot summary: next cycle's frontier_n
                 p["row_count"] = int(obs_front.get["n"])
                 return p
@@ -328,11 +324,8 @@ class CrawlDriver:
 
             _mark("A5b:log_appends")
             # atomic install — THE pointer swap that marks the cycle complete.
-            # Bucketed by url: next cycle's scan reports HashPartitioning(url),
-            # so updatedb's merge shuffles only the topN-bounded updates side —
-            # never the 10^10-row frontier. The data files were written in A3
-            # (already hash-placed on url: one bucket-tagged file per task, no
-            # exchange); this step is a driver-side JSON rename, no Spark job.
+            # The bucketed data files were written in A3; this step is a
+            # driver-side JSON rename, no Spark job.
             self.frontier_t.install(pending)
             _mark("A6:frontier_install")
 

@@ -25,7 +25,8 @@ def get_spark(
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS') or os.cpu_count()}]"
     if shuffle_partitions is None:
         # rule of thumb: ~2x cores locally; on a real cluster this is set to
-        # ~2-3x total executor cores (or left to AQE coalesce from a high cap)
+        # ~2-3x total executor cores (or left to AQE coalesce from a high cap);
+        # also the frontier's url bucket count (SnapshotTable.prepare)
         try:
             cores = int(master.split("[")[1].rstrip("]*"))
         except (IndexError, ValueError):
@@ -59,11 +60,13 @@ def get_spark(
         # report bucket SORT order from bucketed scans (pre-3.0 behavior).
         # Spark disabled this by default because it only applies when every
         # bucket is exactly one file — which the frontier snapshot write
-        # guarantees (merge output is hash-placed on url: one task, one
-        # bucket, one file). With it, the updatedb merge's frontier side is
-        # Scan -> SortMergeJoin with NO per-cycle re-sort of the 10^10-row
-        # table (Spark still verifies the one-file condition per scan, so a
-        # multi-file bucket safely falls back to sorting)
+        # gives while the shuffle partitions stay put (merge output is
+        # hash-placed on url: one task, one bucket, one file). With it, the
+        # updatedb merge's frontier side is Scan -> SortMergeJoin with NO
+        # per-cycle re-sort of the 10^10-row table. A cycle resumed under
+        # fewer shuffle partitions writes several files per bucket; Spark
+        # checks the one-file condition per scan, so the next cycle sorts
+        # that side once
         .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))

@@ -97,14 +97,12 @@ class SnapshotTable:
         h = hashlib.md5(self.root.encode()).hexdigest()[:8]
         return f"{self.name}_{h}_snap{sid:06d}"
 
-    def commit(self, df: DataFrame, tag: str | None = None,
-               bucket_by: tuple[str, int] | None = None) -> Snapshot:
+    def commit(self, df: DataFrame, tag: str | None = None) -> Snapshot:
         """Write df as a new full snapshot and atomically install it."""
-        return self.install(self.prepare(df, tag=tag, bucket_by=bucket_by))
+        return self.install(self.prepare(df, tag=tag))
 
     def prepare(self, data: DataFrame | list[dict], tag: str | None = None,
-                bucket_by: tuple[str, int] | None = None,
-                append: bool = False) -> dict:
+                bucket_by: str | None = None, append: bool = False) -> dict:
         """Phase 1 of every write (the Iceberg write protocol: data files
         first, metadata-pointer swap last): the only place a snapshot id is
         minted. Writes data (a DataFrame, or driver-side rows) WITHOUT
@@ -116,7 +114,7 @@ class SnapshotTable:
         redo's prepare() writes over. append=True: read() unions the
         snapshot with every append since the last full commit.
 
-        bucket_by=(col, n) writes a hash-bucketed layout (the Iceberg
+        bucket_by=col writes a hash-bucketed layout (the Iceberg
         `bucket(n, col)` partition-spec analogue, realized as a Spark
         bucketed datasource table). The payoff is join-side: a scan of a
         bucketed snapshot reports HashPartitioning(col, n), so an equi-join
@@ -126,7 +124,13 @@ class SnapshotTable:
         no exchange either: when the incoming df is already hash-placed on
         col (as the updatedb merge output is), each task holds exactly one
         bucket and emits one bucket-tagged file; misaligned input merely
-        yields more files per bucket, never wrong results."""
+        yields more files per bucket, never wrong results. n is the writing
+        session's spark.sql.shuffle.partitions: EnsureRequirements keeps a
+        bucketed join side whose bucket count is >= the shuffle partitions,
+        so n equal to them keeps the next merge's bucketed side free of any
+        Exchange. A session resumed under a larger setting shuffles that
+        side once (a smaller one sorts it once); either way the snapshot it
+        writes is at the new n, and reads follow each snapshot's bucket_n."""
         log = self._load_log()
         parent = log[-1]["snapshot_id"] if log else None
         sid = (parent or 0) + 1
@@ -137,18 +141,19 @@ class SnapshotTable:
         if isinstance(data, list):
             self._write_rows(data, path, log)
         elif bucket_by:
-            col, n = bucket_by
+            spark = data.sparkSession
+            n = int(spark.conf.get("spark.sql.shuffle.partitions"))
             tname = self._table_name(sid)
-            data.sparkSession.sql(f"DROP TABLE IF EXISTS {tname}")
+            spark.sql(f"DROP TABLE IF EXISTS {tname}")
             (
                 data.write.mode("overwrite")
                 .format("parquet")
                 .option("path", path)
-                .bucketBy(n, col)
-                .sortBy(col)
+                .bucketBy(n, bucket_by)
+                .sortBy(bucket_by)
                 .saveAsTable(tname)
             )
-            snap.update(bucket_col=col, bucket_n=n, table_name=tname)
+            snap.update(bucket_col=bucket_by, bucket_n=n, table_name=tname)
         else:
             data.write.mode("overwrite").parquet(path)
         return snap

@@ -41,16 +41,41 @@ def test_three_cycle_crawl_discovers_web(spark, corpus_tables, cfg, tmp_path):
 
 def test_resume_from_checkpoint_identical_seen_set(spark, corpus_tables, cfg, tmp_path):
     """Kill after cycle 1, resume, final seen set == uninterrupted run
-    (SURVEY §5 resume test)."""
+    (SURVEY §5 resume test). The resume runs under twice the shuffle
+    partitions: each frontier snapshot is bucketed at its writing session's
+    count, one file per bucket, and the crawl output does not depend on it."""
+    import os
+
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
     args = (corpus_tables["seeds"], corpus_tables["web_graph"],
             corpus_tables["robots"], corpus_tables["raw_content"])
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    assert parts == "8"
 
     crawl(spark, a, cfg, *args, depth=3)                       # uninterrupted
 
     crawl(spark, b, cfg, *args, depth=1)                       # "killed" after c1
-    resumed = crawl(spark, b, cfg, *args, depth=3)             # resume
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    try:
+        resumed = crawl(spark, b, cfg, *args, depth=3)         # resume
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
     assert [r.cycle for r in resumed] == [2, 3]                # c1 skipped
+
+    snaps = Catalog(b).table("frontier").snapshots()
+    assert [(s.tag, s.bucket_n) for s in snaps] == [
+        ("inject", 8), ("cycle-1", 8), ("cycle-2", 16), ("cycle-3", 16)]
+    for s in snaps:
+        files = [f for f in os.listdir(s.path) if f.endswith(".parquet")]
+        # bucketed file names end in _<bucket id>.c000...parquet
+        buckets = sorted(int(f.split(".")[0].rsplit("_", 1)[1]) for f in files)
+        assert buckets == list(range(s.bucket_n)), (s.tag, files)
+
+    def fetch_order(root):
+        fs = Catalog(root).table("fetch_status").read(spark)
+        return sorted((r.url, r.partition_id, r.seq) for r in fs.collect())
+
+    assert fetch_order(a) == fetch_order(b)
 
     fa = Catalog(a).table("frontier").read(spark)
     fb = Catalog(b).table("frontier").read(spark)

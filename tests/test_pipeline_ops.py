@@ -37,6 +37,8 @@ from nutch_spark.operators.media import (
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
+# the ANN recall locks need sf0.1's embeddings: SF_DIR's sibling
+SF01_DIR = os.path.join(os.path.dirname(os.path.normpath(SF_DIR)), "sf0.1")
 
 
 @pytest.fixture(scope="module")
@@ -293,7 +295,7 @@ def test_simhash_banding_planted_recall(spark):
     assert len(bounds) == 7 and sum(w for _, w in bounds) == 64
 
 
-def test_ann_planted_recall_at_scale_params():
+def test_ann_planted_recall_at_scale_params(spark):
     """ANN recall lock (sf0.1): queries are perturbed copies of 100 real
     vectors, so each query's true nearest neighbor is its source vector at
     cosine ~0.99. Multi-table LSH (8 tables x 12 planes, bucket_cap=500)
@@ -305,10 +307,8 @@ def test_ann_planted_recall_at_scale_params():
     import numpy as np
 
     from nutch_spark.functions.similarity import ann_cosine_topk
-    from nutch_spark.session import get_spark
 
-    spark = get_spark("ann-recall", master="local[8]", shuffle_partitions=8)
-    e = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
+    e = spark.read.parquet(f"{SF01_DIR}/embeddings.parquet")
     base = e.orderBy("vec_id").limit(100).collect()
     rng = np.random.default_rng(7)
     qrows = []
@@ -405,7 +405,7 @@ def test_ivf_kmeans_refinement_purity_and_determinism(spark):
     assert {c for cl in by_list.values() for c in cl} == {0, 1, 2, 3}
 
 
-def test_ivf_planted_recall_at_scale_params():
+def test_ivf_planted_recall_at_scale_params(spark):
     """IVF recall lock (sf0.1): queries are perturbed copies of 100 real
     vectors (true NN = source at cosine ~0.99). 64 lists / 4 probes must
     recover >=90%: a small perturbation rarely crosses the Voronoi boundary
@@ -413,10 +413,8 @@ def test_ivf_planted_recall_at_scale_params():
     import numpy as np
 
     from nutch_spark.functions.similarity import ivf_cosine_topk
-    from nutch_spark.session import get_spark
 
-    spark = get_spark("ivf-recall", master="local[8]", shuffle_partitions=8)
-    e = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
+    e = spark.read.parquet(f"{SF01_DIR}/embeddings.parquet")
     base = e.orderBy("vec_id").limit(100).collect()
     rng = np.random.default_rng(7)
     qrows = []
