@@ -215,11 +215,6 @@ class CrawlConfig:
     retry_delay_ms: int = 24 * 3600 * 1000    # 1 day added per retry
     gone_backoff_factor: float = 1.5          # gone: interval *= 1.5
 
-    # --- seen-set sketch ---
-    seen_bits_per_bucket: int = 1 << 22      # 4 Mbit bitmap per host bucket
-    seen_num_hashes: int = 5
-    seen_buckets: int = 64
-
     # --- misc ---
     signature_impl: str = "md5"              # md5 | text_profile
     # db.signature.text_profile.* (TextProfileSignature.java:67-68)

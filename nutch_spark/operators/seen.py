@@ -9,39 +9,40 @@ The north_rule demands the explicit performance layer:
 - a partitioned bloom bitmap (numpy uint8, k hashes via h1 + i*h2
   double-hashing over two JVM-computed xxhash64 lanes — the lanes are
   whole-stage-codegen columns, so NO per-row Python hashing crosses the
-  Arrow boundary; the v1 format hashed md5 per url in a Python loop at
-  ~3.4 s/M urls/callsite), one bitmap row per bucket, built and
-  UPDATED incrementally with a cogroup kernel — each cycle ORs only the
-  new URLs into the previous cycle's bitmaps (no full-frontier rebuild);
+  Arrow boundary), one bitmap row per bucket, built and UPDATED
+  incrementally with a cogroup kernel — each cycle ORs only the new URLs
+  into the previous cycle's bitmaps (no full-frontier rebuild);
 - probe: COGROUP candidates with the sketch on bucket — the bucket's
   bitmap crosses into the Arrow kernel ONCE PER BUCKET, never per row
-  (the round-1 per-row broadcast-join attach was ~bitmap_size x n_rows
-  of Arrow traffic — a scale-killer at 10^8 candidates/cycle);
+  (a per-row attach is ~bitmap_size x n_rows of Arrow traffic);
 - routing: bloom-NEGATIVE candidates are definitely new (no join needed);
   bloom-POSITIVE candidates go to the exact left-anti join against the
   frontier, so bloom false positives are recovered, never dropped. The
   frontier anti-join's left side shrinks by the novelty rate.
 
+Sizing: `SketchParams.for_urls(n)` takes a capacity that is a power of two
+>= 2n (at least 64) at 8 bits per slot, so a sketch holds >= 16 bits per
+URL (bloom FP <= ~0.14 % at k = 5), in bitmaps of at most 2^22 bits (512 KiB
+per Arrow row): one bucket up to 2^18 URLs. A cycle ORs into the previous
+sketch while `for_urls` of the new frontier equals its parameters and
+rebuilds it otherwise; capacity doubles on each rebuild, so rebuilds are
+amortized. Rows carry (fmt, buckets, bits, k); a sketch older than fmt 3
+(md5 lanes, or no parameter columns) reads as unusable and is rebuilt.
+
 Determinism: hashes are seed-fixed; bitmaps are pure functions of the
-inserted URL set, so N-core and 4N-core runs build identical sketches.
+inserted URL set and the parameters, so N-core and 4N-core runs build
+identical sketches.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-from nutch_spark.config import CrawlConfig
-
-# format 3 = xxhash64-lane double hashing (JVM-side) + self-describing
-# parameters: each row carries (buckets, bits, k) so a resumed crawl can
-# VERIFY compatibility instead of OR-ing positions computed under different
-# parameters into stale bitmaps (bloom false negatives — the one failure
-# mode the routing contract forbids). A catalog whose sketch predates the
-# fmt column is a v1 (md5-lane) sketch; fmt=2 lacked the parameter columns.
-# Readers rebuild from the frontier on ANY mismatch (crawl_cycle does).
 SKETCH_FMT = 3
 
 SKETCH_SCHEMA = T.StructType(
@@ -61,9 +62,32 @@ SKETCH_SCHEMA = T.StructType(
 # the k probe positions correlate, inflating the false-positive rate
 _SEED_H1, _SEED_H2 = 1042, 2043
 
+_K = 5
+_MIN_CAPACITY = 64
+_BITS_PER_SLOT = 8
+_MAX_BUCKET_BITS = 1 << 22
 
-def _bucket_col(cfg: CrawlConfig):
-    return F.pmod(F.xxhash64(F.col("url"), F.lit(1)), F.lit(cfg.seen_buckets)).cast("int")
+
+@dataclass(frozen=True)
+class SketchParams:
+    """`buckets` bitmaps of `bits` bits, `k` hashes. A URL's positions depend
+    on all three: OR-ing or probing under other parameters than the
+    sketch's own gives false negatives."""
+    buckets: int
+    bits: int
+    k: int
+
+    @classmethod
+    def for_urls(cls, n: int) -> SketchParams:
+        """Parameters for a sketch holding up to n URLs (see module doc)."""
+        capacity = max(_MIN_CAPACITY, 1 << (2 * n - 1).bit_length())
+        total_bits = capacity * _BITS_PER_SLOT
+        buckets = max(1, total_bits // _MAX_BUCKET_BITS)
+        return cls(buckets, total_bits // buckets, _K)
+
+
+def _bucket_col(buckets: int):
+    return F.pmod(F.xxhash64(F.col("url"), F.lit(1)), F.lit(buckets)).cast("int")
 
 
 def _lane_cols():
@@ -86,15 +110,17 @@ def _positions_from_lanes(h1: pd.Series, h2: pd.Series, bits: int, k: int) -> np
 
 
 def update_seen_sketch(sketch: DataFrame | None, new_urls_df: DataFrame,
-                       cfg: CrawlConfig) -> DataFrame:
-    """OR new URLs' bits into the previous sketch (incremental). With
-    sketch=None this is the full build. One cogroup kernel call per bucket;
-    buckets without new URLs pass their bitmap through untouched."""
-    bits, k = cfg.seen_bits_per_bucket, cfg.seen_num_hashes
+                       params: SketchParams) -> DataFrame:
+    """OR new URLs' bits into the previous sketch (incremental), which must
+    have been built at `params`. With sketch=None this is the full build.
+    One cogroup kernel call per bucket; buckets without new URLs pass their
+    bitmap through untouched."""
+    bits, k = params.bits, params.k
     spark = new_urls_df.sparkSession
     if sketch is None:
         sketch = spark.createDataFrame([], SKETCH_SCHEMA)
-    urls_b = new_urls_df.select("url", *_lane_cols()).withColumn("bucket", _bucket_col(cfg))
+    urls_b = (new_urls_df.select("url", *_lane_cols())
+              .withColumn("bucket", _bucket_col(params.buckets)))
 
     def build(key, url_pdf: pd.DataFrame, sk_pdf: pd.DataFrame) -> pd.DataFrame:
         if len(sk_pdf):
@@ -109,7 +135,7 @@ def update_seen_sketch(sketch: DataFrame | None, new_urls_df: DataFrame,
         return pd.DataFrame(
             {"bucket": [int(key[0])], "bitmap": [bitmap.tobytes()],
              "n_urls": [n_prev + len(url_pdf)], "fmt": [SKETCH_FMT],
-             "buckets": [cfg.seen_buckets], "bits": [bits], "k": [k]}
+             "buckets": [params.buckets], "bits": [bits], "k": [k]}
         )
 
     return (
@@ -119,45 +145,39 @@ def update_seen_sketch(sketch: DataFrame | None, new_urls_df: DataFrame,
     )
 
 
-def sketch_if_current(sketch: DataFrame | None,
-                      cfg: CrawlConfig | None = None) -> DataFrame | None:
-    """None unless `sketch` is in the CURRENT wire format AND (when cfg is
-    given) was built with cfg's sketch parameters. A v1 (md5-lane) sketch
-    has no `fmt` column; fmt=2 lacked the parameter columns; and a sketch
-    built under different (buckets, bits, k) maps URLs to different bit
-    positions — OR-ing new positions into it (or probing it) yields bloom
-    FALSE NEGATIVES, routing already-seen URLs past the exact anti-join.
-    Any mismatch -> None, so callers rebuild from the frontier."""
+def sketch_params(sketch: DataFrame | None) -> SketchParams | None:
+    """The parameters `sketch` was built at, read from one row (one small
+    Spark job). None for no sketch, an empty one, or one in another format
+    than SKETCH_FMT: its positions cannot be reproduced, so OR-ing into it
+    or probing it would give false negatives."""
     if sketch is None or not {"fmt", "buckets", "bits", "k"} <= set(sketch.columns):
         return None
     row = sketch.limit(1).collect()
-    if row:  # an empty sketch is compatible with any parameters
-        r = row[0]
-        # fmt is gated even without cfg: a future format bump keeping the
-        # same columns must not be accepted and OR'd into (stale-bitmap
-        # false negatives) just because the caller omitted cfg
-        if r["fmt"] != SKETCH_FMT:
-            return None
-        if cfg is not None and (
-                r["buckets"] != cfg.seen_buckets
-                or r["bits"] != cfg.seen_bits_per_bucket
-                or r["k"] != cfg.seen_num_hashes):
-            return None
-    return sketch
+    if not row or row[0]["fmt"] != SKETCH_FMT:
+        return None
+    r = row[0]
+    return SketchParams(r["buckets"], r["bits"], r["k"])
 
 
-def build_seen_sketch(frontier: DataFrame, cfg: CrawlConfig) -> DataFrame:
-    """Full build: frontier -> (bucket, bitmap, n_urls), one row per bucket."""
-    return update_seen_sketch(None, frontier, cfg)
+def build_seen_sketch(urls: DataFrame, params: SketchParams) -> DataFrame:
+    """Full build: urls -> (bucket, bitmap, n_urls, ...), one row per bucket."""
+    return update_seen_sketch(None, urls, params)
 
 
-def probe_seen_flags(candidates: DataFrame, sketch: DataFrame, cfg: CrawlConfig) -> DataFrame:
+def probe_seen_flags(candidates: DataFrame, sketch: DataFrame, _cfg=None) -> DataFrame:
     """candidates + boolean `maybe_seen`. False = DEFINITELY new (bloom has
     no false negatives); True = needs the exact check. The cogroup ships
     each bucket's bitmap into the kernel once — probe cost per candidate is
-    k bit tests on JVM-precomputed hash lanes, independent of bitmap size."""
-    bits, k = cfg.seen_bits_per_bucket, cfg.seen_num_hashes
-    cand = candidates.select("*", *_lane_cols()).withColumn("bucket", _bucket_col(cfg))
+    k bit tests on JVM-precomputed hash lanes, independent of bitmap size.
+    The parameters come from the sketch (`sketch_params`); without them
+    every candidate needs the exact check. The third argument is unused,
+    kept for callers that still pass a config positionally."""
+    params = sketch_params(sketch)
+    if params is None:
+        return candidates.withColumn("maybe_seen", F.lit(True))
+    bits, k = params.bits, params.k
+    cand = (candidates.select("*", *_lane_cols())
+            .withColumn("bucket", _bucket_col(params.buckets)))
     cols = candidates.columns
     out_schema = T.StructType(
         list(candidates.schema.fields) + [T.StructField("maybe_seen", T.BooleanType(), False)]
@@ -183,16 +203,7 @@ def probe_seen_flags(candidates: DataFrame, sketch: DataFrame, cfg: CrawlConfig)
     )
 
 
-def probe_seen_sketch(candidates: DataFrame, sketch: DataFrame, cfg: CrawlConfig) -> DataFrame:
-    """Back-compat: return only the definitely-new candidates (bloom
-    negatives). False positives are NOT in this set — use probe_seen_flags
-    + new_urls for the exact routing."""
-    return probe_seen_flags(candidates, sketch, cfg).filter(
-        ~F.col("maybe_seen")
-    ).drop("maybe_seen")
-
-
-def new_urls(candidates: DataFrame, frontier: DataFrame, cfg: CrawlConfig,
+def new_urls(candidates: DataFrame, frontier: DataFrame,
              sketch: DataFrame | None = None) -> DataFrame:
     """Exact novelty. With a sketch: bloom-negatives short-circuit (definite
     new, no join); bloom-positives — true hits AND false positives — take
@@ -200,7 +211,7 @@ def new_urls(candidates: DataFrame, frontier: DataFrame, cfg: CrawlConfig,
     exactly while the join's left side shrinks by the novelty rate."""
     if sketch is None:
         return candidates.join(frontier.select("url"), "url", "left_anti")
-    flagged = probe_seen_flags(candidates, sketch, cfg)
+    flagged = probe_seen_flags(candidates, sketch)
     definite_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
     needs_check = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
     checked = needs_check.join(frontier.select("url"), "url", "left_anti")

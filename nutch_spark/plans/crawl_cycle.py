@@ -23,8 +23,8 @@ from nutch_spark.operators.fetch import fetch_metrics, run_fetch
 from nutch_spark.operators.generate import generate, mark_generated
 from nutch_spark.operators.inject import inject
 from nutch_spark.operators.parse import run_parse
-from nutch_spark.operators.seen import (build_seen_sketch, sketch_if_current,
-                                        update_seen_sketch)
+from nutch_spark.operators.seen import (SketchParams, build_seen_sketch,
+                                        sketch_params, update_seen_sketch)
 from nutch_spark.operators.updatedb import update_frontier
 from nutch_spark.storage import Catalog
 
@@ -85,8 +85,7 @@ class CrawlDriver:
     def bootstrap(self, seeds: DataFrame) -> int:
         """Inject seeds (idempotent: skipped if already committed)."""
         if self.frontier_t.exists():
-            snap = self.frontier_t.latest()
-            return snap.row_count if snap.row_count is not None else self.frontier().count()
+            return self.frontier_t.latest().row_count
         frontier = inject(None, seeds, self.cfg, self.t0_ms)
         obs = Observation()
         pending = self.frontier_t.prepare(
@@ -98,7 +97,8 @@ class CrawlDriver:
         # seed the seen sketch: the incremental per-cycle OR requires the
         # invariant sketch ⊇ frontier (bloom negatives short-circuit the
         # exact join, so the sketch must cover every frontier URL)
-        self.sketch_t.commit(build_seen_sketch(self.frontier(), self.cfg), tag="inject")
+        self.sketch_t.commit(build_seen_sketch(self.frontier(), SketchParams.for_urls(n)),
+                             tag="inject")
         return n
 
     def run_cycle(self, cycle: int) -> CycleResult:
@@ -146,9 +146,7 @@ class CrawlDriver:
         # never a count() scan.
         frontier_snap = self.frontier_t.latest()
         frontier = self.frontier()
-        frontier_n = (frontier_snap.row_count
-                      if frontier_snap and frontier_snap.row_count is not None
-                      else frontier.count())  # legacy snapshots only
+        frontier_n = frontier_snap.row_count
 
         obs_gen, obs_fetch = Observation(), Observation()
         fetchlist = (
@@ -285,20 +283,19 @@ class CrawlDriver:
             # this cycle started from: after a crash past A4 the newest is the
             # crashed attempt's, which already holds this cycle's new URLs. A
             # redo's writes reuse the `cycle-N` tags and so replace the crashed
-            # attempt's snapshots (storage install()).
+            # attempt's snapshots (storage install()). A base not sized for
+            # the new frontier (outgrown, shrunk, old format) or no base at
+            # all: rebuild from the whole snapshot, restoring sketch ⊇ frontier.
             committed = self.frontier_t.read_pending(self.spark, pending)
             base = self.sketch_t.by_tag(frontier_snap.tag)
-            prev_sketch = sketch_if_current(
-                self.sketch_t.read(self.spark, snapshot_id=base.snapshot_id)
-                if base else None, cfg)
-            if prev_sketch is not None:
+            prev_sketch = (self.sketch_t.read(self.spark, snapshot_id=base.snapshot_id)
+                           if base else None)
+            want = SketchParams.for_urls(new_n)
+            if sketch_params(prev_sketch) == want:
                 new_sketch = update_seen_sketch(
-                    prev_sketch,
-                    committed.filter(F.col("is_new")).select("url"),
-                    cfg,
-                )
-            else:  # no/legacy sketch: restore the ⊇-frontier invariant
-                new_sketch = build_seen_sketch(committed, cfg)
+                    prev_sketch, committed.filter(F.col("is_new")).select("url"), want)
+            else:
+                new_sketch = build_seen_sketch(committed, want)
             self.sketch_t.commit(new_sketch, tag=f"cycle-{cycle}")
             _mark("A4:sketch_commit")
 

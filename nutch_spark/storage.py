@@ -287,11 +287,7 @@ class SnapshotTable:
         the in-memory catalog is session-scoped, the parquet layout is not."""
         tname = snap.table_name
         if not spark.catalog.tableExists(tname):
-            sch = spark.read.parquet(snap.path).schema
-            try:
-                ddl = sch.toDDL()
-            except AttributeError:  # classic-mode fallback
-                ddl = spark.createDataFrame([], sch)._jdf.schema().toDDL()
+            ddl = spark.read.parquet(snap.path).schema.toDDL()
             spark.sql(
                 f"CREATE TABLE {tname} ({ddl}) USING PARQUET "
                 f"CLUSTERED BY ({snap.bucket_col}) SORTED BY ({snap.bucket_col}) "

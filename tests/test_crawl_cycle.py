@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from nutch_spark import schemas, storage
 from nutch_spark.config import CrawlConfig
+from nutch_spark.operators.seen import SketchParams, probe_seen_flags, sketch_params
 from nutch_spark.plans.crawl_cycle import (CYCLE_VIRTUAL_MS, T0_DEFAULT,
                                            CrawlDriver, crawl)
 from nutch_spark.storage import Catalog
@@ -15,8 +16,7 @@ from nutch_spark.storage import Catalog
 @pytest.fixture()
 def cfg():
     return CrawlConfig(num_partitions=4, topn=2000, fetcher_threads=4,
-                       fetch_duration_ms=10, fetcher_server_delay_ms=50,
-                       seen_buckets=8, seen_bits_per_bucket=1 << 16)
+                       fetch_duration_ms=10, fetcher_server_delay_ms=50)
 
 
 def test_three_cycle_crawl_discovers_web(spark, corpus_tables, cfg, tmp_path):
@@ -37,6 +37,20 @@ def test_three_cycle_crawl_discovers_web(spark, corpus_tables, cfg, tmp_path):
     # lineage + metrics tables exist with per-partition/stage rows
     assert cat.table("lineage").read(spark).count() >= 12
     assert cat.table("fetch_metrics").read(spark).count() > 0
+    # each sketch is sized for the frontier it covers and covers all of it;
+    # the frontier grows 24 -> 88 rows, past at least one capacity boundary
+    front_t, sketch_t = cat.table("frontier"), cat.table("seen_sketch")
+    params = {}
+    for snap in sketch_t.snapshots():
+        fsnap = front_t.by_tag(snap.tag)
+        sketch = sketch_t.read(spark, snapshot_id=snap.snapshot_id)
+        params[snap.tag] = sketch_params(sketch)
+        assert params[snap.tag] == SketchParams.for_urls(fsnap.row_count), snap.tag
+        urls = front_t.read(spark, snapshot_id=fsnap.snapshot_id).select("url")
+        misses = probe_seen_flags(urls, sketch).filter(~F.col("maybe_seen")).count()
+        assert misses == 0, snap.tag
+    assert list(params) == ["inject", "cycle-1", "cycle-2", "cycle-3"]
+    assert params["inject"] != params["cycle-3"]
 
 
 def test_resume_from_checkpoint_identical_seen_set(spark, corpus_tables, cfg, tmp_path):

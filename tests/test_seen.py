@@ -2,8 +2,10 @@
 
 from pyspark.sql import functions as F
 
-from nutch_spark.config import CrawlConfig
-from nutch_spark.operators.seen import build_seen_sketch, new_urls, probe_seen_sketch
+from nutch_spark.operators.seen import (SketchParams, build_seen_sketch, new_urls,
+                                        probe_seen_flags, sketch_params)
+
+P = SketchParams(buckets=4, bits=1 << 16, k=5)
 
 
 def mk(spark, urls):
@@ -11,32 +13,29 @@ def mk(spark, urls):
 
 
 def test_no_false_negatives(spark):
-    cfg = CrawlConfig(seen_buckets=4, seen_bits_per_bucket=1 << 16)
     seen = [f"http://h{i % 7}.com/p/{i}.html" for i in range(500)]
     frontier = mk(spark, seen)
-    sketch = build_seen_sketch(frontier, cfg).cache()
+    sketch = build_seen_sketch(frontier, P).cache()
     assert sketch.count() <= 4
-    # every seen URL must be filtered out by the probe
-    out = probe_seen_sketch(mk(spark, seen), sketch, cfg)
+    # every seen URL must be flagged maybe_seen by the probe
+    out = probe_seen_flags(mk(spark, seen), sketch).filter(~F.col("maybe_seen"))
     assert out.count() == 0
 
 
 def test_new_urls_exact(spark):
-    cfg = CrawlConfig(seen_buckets=4, seen_bits_per_bucket=1 << 16)
     seen = [f"http://h{i % 7}.com/p/{i}.html" for i in range(300)]
     novel = [f"http://new{i}.com/x.html" for i in range(50)]
     frontier = mk(spark, seen)
-    sketch = build_seen_sketch(frontier, cfg)
-    got = {r.url for r in new_urls(mk(spark, seen + novel), frontier, cfg, sketch).collect()}
+    sketch = build_seen_sketch(frontier, P)
+    got = {r.url for r in new_urls(mk(spark, seen + novel), frontier, sketch).collect()}
     assert got == set(novel)
 
 
 def test_sketch_deterministic(spark):
-    cfg = CrawlConfig(seen_buckets=4, seen_bits_per_bucket=1 << 16)
     urls = [f"http://h{i % 5}.com/p/{i}.html" for i in range(200)]
-    s1 = {(r.bucket, bytes(r.bitmap)) for r in build_seen_sketch(mk(spark, urls), cfg).collect()}
+    s1 = {(r.bucket, bytes(r.bitmap)) for r in build_seen_sketch(mk(spark, urls), P).collect()}
     s2 = {(r.bucket, bytes(r.bitmap)) for r in
-          build_seen_sketch(mk(spark, urls).repartition(7), cfg).collect()}
+          build_seen_sketch(mk(spark, urls).repartition(7), P).collect()}
     assert s1 == s2
 
 
@@ -45,12 +44,11 @@ def test_incremental_update_equals_full_build(spark):
     (the per-cycle incremental path is exact)."""
     from nutch_spark.operators.seen import update_seen_sketch
 
-    cfg = CrawlConfig(seen_buckets=4, seen_bits_per_bucket=1 << 16)
     first = [f"http://h{i % 7}.com/p/{i}.html" for i in range(200)]
     second = [f"http://n{i % 3}.com/q/{i}.html" for i in range(80)]
-    s1 = build_seen_sketch(mk(spark, first), cfg)
-    s2 = update_seen_sketch(s1, mk(spark, second), cfg)
-    full = build_seen_sketch(mk(spark, first + second), cfg)
+    s1 = build_seen_sketch(mk(spark, first), P)
+    s2 = update_seen_sketch(s1, mk(spark, second), P)
+    full = build_seen_sketch(mk(spark, first + second), P)
     got = {(r.bucket, bytes(r.bitmap)) for r in s2.collect()}
     want = {(r.bucket, bytes(r.bitmap)) for r in full.collect()}
     assert got == want
@@ -59,15 +57,12 @@ def test_incremental_update_equals_full_build(spark):
 def test_probe_flags_route_positives_to_exact_check(spark):
     """new_urls must equal the exact sketchless anti-join even when the
     bloom fires false positives (tiny bitmap forces FPs)."""
-    from nutch_spark.operators.seen import probe_seen_flags
-
-    cfg = CrawlConfig(seen_buckets=2, seen_bits_per_bucket=1 << 8,
-                      seen_num_hashes=2)  # 256-bit bitmaps -> many FPs
+    tiny = SketchParams(buckets=2, bits=1 << 8, k=2)  # 256-bit bitmaps -> many FPs
     seen = [f"http://h{i}.com/a.html" for i in range(120)]
     novel = [f"http://x{i}.com/b.html" for i in range(60)]
     frontier = mk(spark, seen)
-    sketch = build_seen_sketch(frontier, cfg)
-    flagged = probe_seen_flags(mk(spark, seen + novel), sketch, cfg)
+    sketch = build_seen_sketch(frontier, tiny)
+    flagged = probe_seen_flags(mk(spark, seen + novel), sketch)
     # invariant: every truly-seen URL must be flagged maybe_seen (no false negs)
     assert flagged.filter(~F.col("maybe_seen")).join(
         frontier, "url", "inner").count() == 0
@@ -76,49 +71,65 @@ def test_probe_flags_route_positives_to_exact_check(spark):
         frontier, "url", "left_anti").count()
     assert n_fp > 0, "fixture did not produce bloom FPs; shrink the bitmap"
     # …and new_urls must nevertheless return exactly the novel set
-    got = {r.url for r in new_urls(mk(spark, seen + novel), frontier, cfg, sketch).collect()}
+    got = {r.url for r in new_urls(mk(spark, seen + novel), frontier, sketch).collect()}
     assert got == set(novel)
 
 
 def test_legacy_sketch_format_rejected(spark):
     """A v1 sketch (no fmt column, md5-lane positions) must not be OR'd into:
-    sketch_if_current returns None so callers rebuild from the frontier."""
+    sketch_params returns None so callers rebuild from the frontier, and a
+    probe flags every candidate for the exact check. A current sketch reads
+    back the parameters it was built at."""
     from pyspark.sql import types as T
 
-    from nutch_spark.operators.seen import build_seen_sketch, sketch_if_current
-
-    cfg = CrawlConfig(seen_buckets=4, seen_bits_per_bucket=1 << 16)
     v1_schema = T.StructType([
         T.StructField("bucket", T.IntegerType(), False),
         T.StructField("bitmap", T.BinaryType(), False),
         T.StructField("n_urls", T.LongType(), False),
     ])
     v1 = spark.createDataFrame([(0, bytearray(8192), 10)], v1_schema)
-    assert sketch_if_current(v1) is None
-    assert sketch_if_current(None) is None
-    cur = build_seen_sketch(mk(spark, ["http://a.com/"]), cfg)
-    assert sketch_if_current(cur) is cur
-    assert sketch_if_current(cur, cfg) is cur  # parameters match
+    assert sketch_params(v1) is None
+    assert sketch_params(None) is None
+    # a probe of an unusable sketch sends every candidate to the exact check
+    flags = probe_seen_flags(mk(spark, ["http://b.com/"]), v1).collect()
+    assert [r.maybe_seen for r in flags] == [True]
+    cur = build_seen_sketch(mk(spark, ["http://a.com/"]), P)
+    assert sketch_params(cur) == P
 
 
 def test_sketch_parameter_mismatch_rejected(spark):
     """A sketch built under different (buckets, bits, k) maps URLs to
     different bit positions; OR-ing or probing it yields bloom FALSE
-    negatives. sketch_if_current(cfg) must reject every mismatch so the
-    caller rebuilds from the frontier (fmt=2 lacked the parameter columns
-    entirely and a resumed crawl silently accepted incompatible bitmaps)."""
-    from nutch_spark.operators.seen import build_seen_sketch, sketch_if_current
-
-    cfg = CrawlConfig(seen_buckets=4, seen_bits_per_bucket=1 << 16,
-                      seen_num_hashes=5)
-    sk = build_seen_sketch(mk(spark, ["http://a.com/"]), cfg)
-    assert sketch_if_current(sk, cfg) is sk
+    negatives. Each changed parameter must compare unequal to the sketch's
+    own, so the crawl rebuilds instead of OR-ing into it (fmt=2 lacked the
+    parameter columns entirely and a resumed crawl silently accepted
+    incompatible bitmaps)."""
+    sk = build_seen_sketch(mk(spark, ["http://a.com/"]), P)
+    assert sketch_params(sk) == P
     for changed in (
-        CrawlConfig(seen_buckets=8, seen_bits_per_bucket=1 << 16,
-                    seen_num_hashes=5),
-        CrawlConfig(seen_buckets=4, seen_bits_per_bucket=1 << 15,
-                    seen_num_hashes=5),
-        CrawlConfig(seen_buckets=4, seen_bits_per_bucket=1 << 16,
-                    seen_num_hashes=7),
+        SketchParams(buckets=8, bits=1 << 16, k=5),
+        SketchParams(buckets=4, bits=1 << 15, k=5),
+        SketchParams(buckets=4, bits=1 << 16, k=7),
     ):
-        assert sketch_if_current(sk, changed) is None
+        assert sketch_params(sk) != changed
+
+
+def test_sketch_params_for_urls():
+    """for_urls sizes a sketch for n URLs: capacity >= 2n slots of 8 bits
+    (>= 16 bits per URL), power-of-two buckets of at most 2^22 bits each,
+    and never smaller for a larger n."""
+    ns = [0, 1, 2, 3, 24, 31, 32, 33, 57, 88, 4680, 1 << 18, (1 << 18) + 1,
+          10 ** 6, 10 ** 10]
+    prev = None
+    for n in ns:
+        p = SketchParams.for_urls(n)
+        total = p.buckets * p.bits
+        assert total // 8 >= 2 * n, (n, p)
+        assert p.buckets & (p.buckets - 1) == 0, (n, p)
+        assert 0 < p.bits <= 1 << 22 and p.bits % 8 == 0, (n, p)
+        assert p.k == 5
+        if prev is not None:
+            assert p.buckets >= prev.buckets and total >= prev.buckets * prev.bits, (n, p)
+        prev = p
+    assert SketchParams.for_urls(1 << 18).buckets == 1
+    assert SketchParams.for_urls((1 << 18) + 1).buckets == 2

@@ -90,7 +90,6 @@ def test_seed_meta_reaches_depth2_page(spark, corpus, tmp_path):
     )
     cfg = CrawlConfig(num_partitions=4, topn=2000, fetcher_threads=4,
                       fetch_duration_ms=10, fetcher_server_delay_ms=50,
-                      seen_buckets=8, seen_bits_per_bucket=1 << 16,
                       urlmeta_tags=("dept",))
     crawl(spark, str(tmp_path / "cat"), cfg, seeds, tables["web_graph"],
           tables["robots"], tables["raw_content"], depth=3)
