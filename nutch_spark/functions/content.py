@@ -500,14 +500,6 @@ def charset_udf(content: pd.Series, header_charset: pd.Series) -> pd.Series:
     )
 
 
-@F.pandas_udf(StringType())
-def decode_content_udf(content: pd.Series, header_charset: pd.Series) -> pd.Series:
-    return pd.Series(
-        [decode_content(c, h) for c, h in zip(content, header_charset)],
-        index=content.index,
-    )
-
-
 @F.pandas_udf(BinaryType())
 def unzip_udf(content: pd.Series) -> pd.Series:
     return pd.Series([unzip_best_effort(c) for c in content], index=content.index)

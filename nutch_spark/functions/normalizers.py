@@ -225,14 +225,14 @@ class ScopedNormalizers:
         return url
 
     def post_basic_col(self, url_col: Column, scope: str = "default") -> Column:
-        """The native Host+Regex tail of the chain (callers run the basic
-        normalizer first via urls.normalize_split's hybrid path). loop_count
-        > 1 composes the tail that many times — equivalent to the reference's
-        break-at-fixpoint loop because re-applying a chain to a stable url is
-        a no-op (the basic stage is not repeated here: its output is
-        idempotent, and a regex rule rewriting into basic-unnormal form is a
-        rule-authoring bug; the scalar `normalize` path repeats the full
-        chain exactly)."""
+        """The native Host+Regex tail of the chain, which
+        normalize_chain_split (the one DataFrame path) runs after the basic
+        stage. loop_count > 1 composes the tail that many times — equivalent
+        to the reference's break-at-fixpoint loop because re-applying a
+        chain to a stable url is a no-op (the basic stage is not repeated
+        here: its output is idempotent, and a regex rule rewriting into
+        basic-unnormal form is a rule-authoring bug; the scalar `normalize`
+        path repeats the full chain exactly)."""
         regex = self.regex_for(scope)
         col = url_col
         for _ in range(self.loop_count):
@@ -270,16 +270,20 @@ def with_column_once(df: DataFrame, name: str, expr: Column) -> DataFrame:
 
 
 def normalize_chain_split(df: DataFrame, in_col: str, out_col: str,
-                          scope: str = "default",
-                          normalizers: ScopedNormalizers | None = None) -> DataFrame:
-    """Full scoped chain over a DataFrame column: basic normalization via
-    the single-pass fast/slow path (urls.normalize_inline), then the
+                          scope: str, loop_count: int = 1) -> DataFrame:
+    """The one DataFrame path for the full scoped chain
+    (URLNormalizers(conf, scope).normalize): basic normalization via the
+    single-pass fast/slow path (urls.normalize_inline), then the
     host+regex tail as native regexp_replace pinned behind a Generate
-    barrier — the whole hot path stays JVM-side for already-normal URLs
-    and the regexp chain runs exactly once per row. NULL in_col rows yield
-    NULL out_col (normalize_split used to drop them; callers filter)."""
+    barrier — already-normal URLs never cross into Python, and the regexp
+    chain runs exactly once per row however many filter rules read it.
+    Callers: inject (prepare_seeds, scope inject), outlinks (run_parse,
+    scope outlink), redirect targets (build_redirect_chains, scope
+    fetcher) and ARC import (arc_to_segment, scope fetcher). loop_count is
+    urlnormalizer.loop.count. NULL or rejected in_col rows yield NULL
+    out_col."""
     from nutch_spark.functions.urls import normalize_inline
 
-    ns = normalizers or normalizers_for_loop_count(1)  # cached default
+    ns = normalizers_for_loop_count(loop_count)
     out = normalize_inline(df, in_col, out_col)
     return with_column_once(out, out_col, ns.post_basic_col(F.col(out_col), scope))

@@ -83,11 +83,6 @@ def _bucket_col(vec_col, table_planes: np.ndarray):
     return bucket
 
 
-def lsh_bucket_col(vec_col, planes) -> "F.Column":
-    """Back-compat single-table bucket (planes: list[list[float]])."""
-    return _bucket_col(vec_col, np.asarray(planes))
-
-
 def _bucketed(df: DataFrame, id_name: str, vec_name: str, planes: np.ndarray,
               bucket_cap: int | None = None) -> DataFrame:
     """Explode each vector to (tbl, bucket) rows — one per table. The explode

@@ -108,34 +108,20 @@ def normalize_url_series(urls: pd.Series) -> pd.Series:
 def is_normal_form_col(url_col):
     """Native (JVM, codegen) test that normalization maps a URL to itself —
     the same predicate pair as the pandas fast path (Java regex semantics
-    match for these patterns). Lets callers run the Python normalizer only
-    on the rows that fail it (hot paths: outlink pipeline, inject)."""
+    match for these patterns). Lets normalize_inline run the Python
+    normalizer only on the rows that fail it."""
     return url_col.rlike(_FAST_OK_PATTERN + r"\z") & ~url_col.rlike(_NEEDS_WORK_RE.pattern)
 
 
-def normalize_split(df, in_col: str, out_col: str):
-    """Split-normalize: already-normal rows pass through JVM-side; only the
-    rest cross into Python. Returns a DataFrame with `out_col` added.
-    (A `when(fast, col).otherwise(udf(col))` would NOT help — Spark extracts
-    Python UDFs and evaluates them on every row regardless of the branch.)
-    NULL in_col rows are dropped (normalize(null) is null and every caller
-    filters nulls next anyway).
-    """
-    c = F.col(in_col)
-    normal = df.filter(is_normal_form_col(c)).withColumn(out_col, c)
-    weird = df.filter(~is_normal_form_col(c)).withColumn(out_col, normalize_url_udf(c))
-    return normal.unionByName(weird)
-
-
 def normalize_inline(df, in_col: str, out_col: str):
-    """Single-pass split-normalize. normalize_split's two-branch union
-    re-evaluates the whole upstream subtree once per branch (the source
-    appears twice in the physical plan); here the plan stays one linear
-    scan. The Python normalizer still only does real work on the weird
-    rows: its input is NULLed out for already-normal rows, so the Arrow
-    exchange ships ~only the weird rows' bytes and the pandas kernel
-    passes nulls through. NULL in_col rows yield NULL out_col (callers
-    filter nulls next — same end state as normalize_split's drop).
+    """Single-pass split-normalize, the basic stage of
+    normalizers.normalize_chain_split: already-normal rows pass through
+    JVM-side, and the plan stays one linear scan (a filter/union split
+    re-evaluates the upstream subtree once per branch). The Python
+    normalizer only does real work on the weird rows: its input is NULLed
+    out for already-normal rows, so the Arrow exchange ships ~only the
+    weird rows' bytes and the pandas kernel passes nulls through. NULL
+    in_col rows yield NULL out_col.
 
     The is-normal rlike pair rides a named column so it is evaluated ONCE
     per row: inlining `fast` into both branch tests made the pair run
@@ -244,11 +230,6 @@ def extract_domain_series(urls: pd.Series) -> pd.Series:
 
 
 @F.pandas_udf(StringType())
-def host_udf(urls: pd.Series) -> pd.Series:
-    return extract_host_series(urls)
-
-
-@F.pandas_udf(StringType())
 def domain_udf(urls: pd.Series) -> pd.Series:
     return extract_domain_series(urls)
 
@@ -301,16 +282,11 @@ class RegexUrlFilter:
         return False
 
     def accepts_series(self, urls: pd.Series) -> pd.Series:
-        # vectorized: start all-unknown, decide by first matching rule
-        decided = pd.Series(False, index=urls.index)
-        result = pd.Series(False, index=urls.index)
-        notnull = urls.notna()
-        for sign, pat in self.rules:
-            m = ~decided & notnull & urls.str.contains(pat, regex=True, na=False)
-            if sign == "+":
-                result |= m
-            decided |= m
-        return result
+        # per-row search, as str.contains does for object columns, but
+        # stopping at the first matching rule and without its per-call
+        # warning on rules with capturing groups
+        return pd.Series([isinstance(u, str) and self.accepts(u) for u in urls],
+                         index=urls.index, dtype=bool)
 
     def udf(self):
         rules = [(s, p.pattern) for s, p in self.rules]

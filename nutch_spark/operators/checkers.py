@@ -77,7 +77,7 @@ def check_parse(
     cfg = cfg or CrawlConfig()
     content = _resolved_content(content, force_content_type)
     fetch_out = _fabricate_fetch(content)
-    res = run_parse(fetch_out, content, cfg, cache_links=False)
+    res = run_parse(fetch_out, content, cfg)
     sig = res["parse_updates"].filter(
         F.col("kind") == schemas.STATUS_SIGNATURE
     ).select("url", "signature")
@@ -112,7 +112,7 @@ def check_index(
     cfg = cfg or CrawlConfig()
     content = _resolved_content(content, force_content_type)
     fetch_out = _fabricate_fetch(content)
-    res = run_parse(fetch_out, content, cfg, cache_links=False)
+    res = run_parse(fetch_out, content, cfg)
     # blank datum (IndexingFiltersChecker.java:77): unfetched-equivalent
     # state, default score/interval; signature from the parse
     sig = res["parse_updates"].filter(

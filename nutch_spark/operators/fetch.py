@@ -89,25 +89,18 @@ def build_redirect_chains(seed: DataFrame, wg: DataFrame, rb: DataFrame,
     `handleRedirect == null` stop. Scale: every hop frame holds redirect
     rows only (a sliver of the fetchlist), so the per-hop content-store
     joins are small-side equi-joins."""
-    from nutch_spark.functions.normalizers import (
-        normalizers_for_loop_count,
-        with_column_once,
-    )
-    from nutch_spark.functions.urls import RegexUrlFilter, normalize_inline
+    from nutch_spark.functions.normalizers import normalize_chain_split
+    from nutch_spark.functions.urls import RegexUrlFilter
 
-    ns = normalizers_for_loop_count(cfg.urlnormalizer_loop_count)
     flt = RegexUrlFilter()
     cur = seed.filter(F.col("page_status").isin("redir_perm", "redir_temp")).select(
         F.col("url").alias("src"), F.col("redirect_to").alias("raw")
     )
     hop_frames = []
     for hop in range(1, cfg.http_redirect_max + 2):
-        t = with_column_once(
-            normalize_inline(cur, "raw", "t_url"),
-            "t_url",
-            ns.post_basic_col(F.col("t_url"), "fetcher"),
-        )
-        t = t.filter(F.col("t_url").isNotNull()).filter(flt.col(F.col("t_url")))
+        t = normalize_chain_split(cur, "raw", "t_url", "fetcher",
+                                  cfg.urlnormalizer_loop_count)
+        t = t.filter(flt.col(F.col("t_url")))
         t = (
             t.select("src", F.col("t_url").alias("url"))
             .join(wg, "url", "left")

@@ -127,7 +127,6 @@ def fetch_with_outlink_following(
         nxt = iter_checkpoint(nxt, eager=True)  # materialize the next fetchlist...
         # ...then release this depth's parse caches (recomputable from the
         # still-cached fetch output if the caller reads parsed_by_depth)
-        parsed["links"].unpersist()
         parsed["docs_nested"].unpersist()
         seen = seen.unionByName(nxt.select("url")).distinct()
         fl = nxt
@@ -139,7 +138,6 @@ def fetch_with_outlink_following(
         for f in fetch_outs:
             f.unpersist()
         for p in parsed_all:
-            p["links"].unpersist()
             p["docs_nested"].unpersist()
 
     return {"fetch_out": out, "parsed_by_depth": parsed_all, "cleanup": cleanup}

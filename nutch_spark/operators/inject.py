@@ -27,40 +27,21 @@ from pyspark.sql import DataFrame, functions as F
 
 from nutch_spark import schemas
 from nutch_spark.config import CrawlConfig
-from nutch_spark.functions.normalizers import (
-    ScopedNormalizers,
-    normalizers_for_loop_count,
-    with_column_once,
-)
-from nutch_spark.functions.urls import RegexUrlFilter, host_col, normalize_inline
+from nutch_spark.functions.normalizers import normalize_chain_split
+from nutch_spark.functions.urls import RegexUrlFilter, host_col
 
 RESERVED_KEYS = ("nutch.score", "nutch.fetchInterval", "nutch.fetchInterval.fixed")
 
-_DEFAULT_NORMALIZERS = ScopedNormalizers()
 
-
-def prepare_seeds(seeds: DataFrame, cfg: CrawlConfig, cur_time_ms: int,
-                  url_filter: RegexUrlFilter | None = None,
-                  normalizers: ScopedNormalizers | None = None) -> DataFrame:
+def prepare_seeds(seeds: DataFrame, cfg: CrawlConfig, cur_time_ms: int) -> DataFrame:
     """Normalize/filter seeds and build injected frontier rows (map side).
-    The scope='inject' chain (basic split path + native host/regex tail,
-    Injector.java:95 URLNormalizers(conf, SCOPE_INJECT)) runs before the
-    filter chain, matching the reference's normalize-then-filter order."""
-    url_filter = url_filter or RegexUrlFilter()
-    ns = normalizers or (
-        _DEFAULT_NORMALIZERS if cfg.urlnormalizer_loop_count <= 1
-        else normalizers_for_loop_count(cfg.urlnormalizer_loop_count))
-    s = (
-        with_column_once(
-            normalize_inline(
-                seeds.withColumnRenamed("url", "_raw_url"), "_raw_url", "url"
-            ).drop("_raw_url"),
-            "url",
-            ns.post_basic_col(F.col("url"), "inject"),
-        )
-        .filter(F.col("url").isNotNull())
-        .filter(url_filter.col(F.col("url")))
-    )
+    The scope='inject' chain (Injector.java:95 URLNormalizers(conf,
+    SCOPE_INJECT)) runs before the filter chain, matching the reference's
+    normalize-then-filter order."""
+    s = normalize_chain_split(
+        seeds.withColumnRenamed("url", "_raw_url"), "_raw_url", "url", "inject",
+        cfg.urlnormalizer_loop_count,
+    ).drop("_raw_url").filter(RegexUrlFilter().col(F.col("url")))
     meta = F.coalesce(F.col("metadata"), F.create_map().cast("map<string,string>"))
     score = F.coalesce(
         F.element_at(meta, "nutch.score").cast("float"), F.lit(float(cfg.db_score_injected))
@@ -83,10 +64,10 @@ def prepare_seeds(seeds: DataFrame, cfg: CrawlConfig, cur_time_ms: int,
     ).dropDuplicates(["url"])
 
 
-def inject(frontier: DataFrame | None, seeds: DataFrame, cfg: CrawlConfig, cur_time_ms: int,
-           url_filter: RegexUrlFilter | None = None) -> DataFrame:
+def inject(frontier: DataFrame | None, seeds: DataFrame, cfg: CrawlConfig,
+           cur_time_ms: int) -> DataFrame:
     """Merge injected seeds into the frontier (InjectReducer:175-242)."""
-    injected = prepare_seeds(seeds, cfg, cur_time_ms, url_filter)
+    injected = prepare_seeds(seeds, cfg, cur_time_ms)
     if frontier is None:
         return injected
     # NOTE: no broadcast hint — Spark cannot broadcast a side of a

@@ -37,20 +37,12 @@ from pyspark.sql import types as T
 
 from nutch_spark import schemas
 from nutch_spark.config import CrawlConfig
-from nutch_spark.functions.normalizers import (
-    ScopedNormalizers,
-    normalizers_for_loop_count,
-    with_column_once,
-)
+from nutch_spark.functions.normalizers import normalize_chain_split
 from nutch_spark.functions.signatures import make_text_profile_udf
-from nutch_spark.functions.urls import (
-    RegexUrlFilter, host_col, normalize_inline, normalize_url, normalize_url_udf,
-)
+from nutch_spark.functions.urls import RegexUrlFilter, host_col, normalize_url_udf
 from nutch_spark.operators.officeparse import extract_odf, extract_rtf
 from nutch_spark.operators.pdfparse import extract_pdf, extract_text_outlinks
 from nutch_spark.operators.swfparse import extract_swf
-
-_DEFAULT_NORMALIZERS = ScopedNormalizers()
 
 # one ordered scan = the document-order DOM walk (DOMContentUtils.getText /
 # getOutlinks, parse-html/.../DOMContentUtils.java:160-221,369-452). The
@@ -897,8 +889,6 @@ def run_parse(
     fetch_out: DataFrame,
     raw_content: DataFrame,
     cfg: CrawlConfig,
-    url_filter: RegexUrlFilter | None = None,
-    cache_links: bool = True,
     url_meta: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """Full parse stage over this cycle's successful fetches.
@@ -917,13 +907,12 @@ def run_parse(
     children with it; when None (plugin off) the column is absent and the
     parse_updates shuffle stays narrow.
 
-    CACHE CONTRACT: the returned `docs_nested` and `links` frames are
-    .cache()d (they feed multiple outputs). Every caller that materializes
-    any output MUST unpersist both once done with the cycle's results —
-    crawl_cycle does; ad-hoc callers (bench/queries/tests) must too, or
-    cached blocks leak across a long run.
+    CACHE CONTRACT: the returned `docs_nested` frame is .cache()d (it
+    feeds multiple outputs). Every caller that materializes any output
+    MUST unpersist it once done with the cycle's results — crawl_cycle
+    does; ad-hoc callers (bench/queries/tests) must too, or cached blocks
+    leak across a long run.
     """
-    url_filter = url_filter or RegexUrlFilter()
     ok = fetch_out.filter(
         F.col("fetch_status") == schemas.STATUS_FETCH_SUCCESS
     )
@@ -980,17 +969,13 @@ def run_parse(
             F.substring(F.col("text"), 1, cfg.db_max_anchor_length).alias("anchor"),
         )
     )
-    # scope='outlink' regex/host chain (ParseOutputFormat.java:119
-    # URLNormalizers SCOPE_OUTLINK) — native regexp_replace tail, pinned
-    # behind a Generate barrier so the filter cascade below references the
-    # materialized column instead of re-evaluating the regexp chain per rule
+    # scope='outlink' chain (ParseOutputFormat.java:119 URLNormalizers
+    # SCOPE_OUTLINK), materialized once so the filter cascade below reads
+    # the column instead of re-evaluating the regexp chain per rule
     if cfg.parse_normalize_urls:  # ParseOutputFormat.java:99 (-noNormalize)
-        links = with_column_once(
-            normalize_inline(raw_links, "media_ref", "to_url").drop("media_ref"),
-            "to_url",
-            normalizers_for_loop_count(cfg.urlnormalizer_loop_count)
-            .post_basic_col(F.col("to_url"), "outlink"),
-        )
+        links = normalize_chain_split(
+            raw_links, "media_ref", "to_url", "outlink",
+            cfg.urlnormalizer_loop_count).drop("media_ref")
     else:
         links = raw_links.withColumnRenamed("media_ref", "to_url")
     links = (
@@ -999,7 +984,7 @@ def run_parse(
         .filter(F.col("to_url") != F.col("url"))  # self-link drop
     )
     if cfg.parse_filter_urls:  # ParseOutputFormat.java:95 (-noFilter)
-        links = links.filter(url_filter.col(F.col("to_url")))
+        links = links.filter(RegexUrlFilter().col(F.col("to_url")))
     if cfg.db_ignore_external_links:
         links = links.filter(host_col(F.col("to_url")) == host_col(F.col("url")))
     # dedupe (first occurrence) + per-page cap share ONE exchange: hash
@@ -1031,12 +1016,6 @@ def run_parse(
         links = links.join(n_all, "url")
     else:
         links = links.withColumn("n_div", F.col("n_out"))
-    # cache only when the caller will materialize links more than once
-    # (parse_data + linked rows). The crawl cycle materializes it exactly
-    # once (through parse_updates), where the cache write is pure overhead.
-    if cache_links:
-        links = links.cache()  # used by parse_data, OPIC distribution, linked rows
-
     # parse_data: title + meta directives + ordered outlinks per page
     # `meta` (general meta tags) rides into parse_data for the
     # parse-metatags -> index-metadata handoff (indexer._metatags_col)
@@ -1187,7 +1166,7 @@ def run_parse(
         "parse_meta": parse_meta,
         "docs_nested": docs_nested,  # cached — caller unpersists after the cycle
         "span_rows": span_rows,
-        "links": links,              # cached — caller unpersists after the cycle
+        "links": links,
         "documents": documents,
         "parse_text": ptext,
         "parse_data": parse_data,

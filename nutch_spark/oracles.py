@@ -205,7 +205,7 @@ SELECT a, b, hamming FROM (
 
 def _planes_values(planes: np.ndarray) -> str:
     """VALUES rows (tbl, weight, pv) — weight = 2^(n_planes-1-pi), matching
-    similarity.lsh_bucket_col's fold (first plane = MSB)."""
+    similarity._bucket_col's fold (first plane = MSB)."""
     n_tables, n_planes, _dim = planes.shape
     rows = []
     for t in range(n_tables):

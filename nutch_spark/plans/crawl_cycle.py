@@ -174,9 +174,6 @@ class CrawlDriver:
                 _timed, "A1:fetch_append",
                 lambda: self.fetch_t.append(fetch_out, tag=f"cycle-{cycle}"))
 
-            # cache_links=False: the cycle materializes links exactly once
-            # (inside parse_updates -> update_frontier), so the cache write —
-            # a full columnar copy of the highest-cardinality frame — is waste
             url_meta = None
             if cfg.urlmeta_tags:
                 # urlmeta page-side slice: this cycle's fetching pages with
@@ -201,8 +198,7 @@ class CrawlDriver:
             # from fetch_out through updatedb).
             parse_in = (fetch_out if cfg.fetcher_store_content or cfg.fetcher_parse
                         else fetch_out.limit(0))
-            parsed = run_parse(parse_in, self.raw_content, cfg, cache_links=False,
-                               url_meta=url_meta)
+            parsed = run_parse(parse_in, self.raw_content, cfg, url_meta=url_meta)
             obs_docs = Observation()
             docs_df = parsed["documents"].observe(obs_docs, F.count(F.lit(1)).alias("n"))
 
@@ -339,7 +335,6 @@ class CrawlDriver:
             fetchlist.unpersist()
             fetch_out.unpersist()
             parsed["docs_nested"].unpersist()
-            parsed["links"].unpersist()
             if _trace:
                 prev = t_start
                 spans = []

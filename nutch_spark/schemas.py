@@ -50,16 +50,6 @@ STATUS_NAMES = {
 }
 
 
-def has_db_status(status: int) -> bool:
-    """Reference: crawl/CrawlDatum.java:127-130."""
-    return 0x00 < status < 0x20
-
-
-def has_fetch_status(status: int) -> bool:
-    """Reference: crawl/CrawlDatum.java:132-135."""
-    return 0x20 < status < 0x40
-
-
 # ---------------------------------------------------------------------------
 # frontier — the URL state table (CrawlDb analogue; FIXTURES.md §5)
 # ---------------------------------------------------------------------------

@@ -19,8 +19,8 @@ Spark realization: `spark.read.format("binaryFile")` over the .arc.gz glob
 -> one mapInPandas kernel per file (an ARC file is one gzip-framed stream =
 one split, matching the reference's per-file record reader; parallelism
 comes from the many-files layout ARC archives ship in). The segment-creator
-step (normalize SCOPE_FETCHER + URL filter + content rows) is native/
-split-path DataFrame code downstream.
+step (normalize SCOPE_FETCHER via normalizers.normalize_chain_split + URL
+filter + content rows) is DataFrame code downstream.
 """
 
 from __future__ import annotations
@@ -126,24 +126,13 @@ def arc_to_segment(records: DataFrame, cfg=None) -> DataFrame:
     + URL-filter the record URL, resolve the content type (declared +
     magic), and emit content rows ready for the parse stage."""
     from nutch_spark.functions.content import resolve_mime_udf
-    from nutch_spark.functions.normalizers import (
-        normalizers_for_loop_count,
-        with_column_once,
-    )
-    from nutch_spark.functions.urls import RegexUrlFilter, normalize_inline
+    from nutch_spark.functions.normalizers import normalize_chain_split
+    from nutch_spark.functions.urls import RegexUrlFilter
 
-    ns = normalizers_for_loop_count(
-        getattr(cfg, "urlnormalizer_loop_count", 1) if cfg else 1)
-    flt = RegexUrlFilter()
-    out = (
-        with_column_once(
-            normalize_inline(records, "url", "norm_url"),
-            "norm_url",
-            ns.post_basic_col(F.col("norm_url"), "fetcher"),
-        )
-        .filter(F.col("norm_url").isNotNull())
-        .filter(flt.col(F.col("norm_url")))
-    )
+    out = normalize_chain_split(
+        records, "url", "norm_url", "fetcher",
+        cfg.urlnormalizer_loop_count if cfg else 1,
+    ).filter(RegexUrlFilter().col(F.col("norm_url")))
     return out.select(
         F.col("norm_url").alias("url"),
         resolve_mime_udf(

@@ -632,6 +632,56 @@ def test_urlnormalizer_loop_count_chain(spark):
     assert normalizers_for_loop_count(2) is ns2  # cached per count
 
 
+def test_urlnormalizer_loop_count_reaches_every_entry_point(spark, tmp_path):
+    """Every crawl entry point that normalizes a URL (inject, outlinks,
+    redirect targets, ARC import) passes cfg.urlnormalizer_loop_count to
+    the chain: the default rules turn '?&&x' into '?&x' on one pass and
+    into '?x' on two, and the URL filter accepts both."""
+    from nutch_spark.operators.fetch import build_redirect_chains
+    from nutch_spark.operators.inject import prepare_seeds
+    from nutch_spark.operators.parse import run_parse
+    from nutch_spark.sources.arc import arc_to_segment, read_arc, write_arc_file
+    from tests.test_meta_directives import _fetch_ok
+
+    target = "http://h001.example.com/p?&&x"
+    page = "http://h000.example.com/a.html"
+    seeds = spark.createDataFrame([(target, None)], S.SEEDS_SCHEMA)
+    raw = spark.createDataFrame(
+        [(page, "h000.example.com",
+          f'<html><body><p>t</p><a href="{target}">x</a></body></html>',
+          "text/html", page)],
+        "url string, host string, content string, content_type string, "
+        "base_url string")
+    fetch_out = _fetch_ok(spark, [page])
+    redirect = spark.createDataFrame(
+        [(page, "redir_perm", target)],
+        "url string, page_status string, redirect_to string")
+    wg = redirect.select(
+        "*", F.lit(0).alias("content_length"), F.lit(0).alias("declared_length"),
+        F.lit(0).cast("long").alias("signature_seed"))
+    rb = select_robots_rules(
+        _robots_df(spark, [("h001.example.com", "*", [], [], None)]), CrawlConfig())
+    write_arc_file(str(tmp_path / "t.arc.gz"), [{"url": target, "content": "<p>t</p>"}])
+    records = read_arc(spark, str(tmp_path / "*.arc.gz"))
+
+    def entry_point_urls(cfg):
+        parsed = run_parse(fetch_out, raw, cfg)
+        outlinks = [r.to_url for r in parsed["links"].collect()]
+        parsed["docs_nested"].unpersist()
+        chains = build_redirect_chains(redirect, wg, rb, cfg).collect()
+        return {
+            "inject": [r.url for r in prepare_seeds(seeds, cfg, 0).collect()],
+            "outlink": outlinks,
+            "redirect": [c.url for r in chains for c in r.redirect_chain],
+            "arc": [r.url for r in arc_to_segment(records, cfg).collect()],
+        }
+
+    for loop_count, want in ((1, "http://h001.example.com/p?&x"),
+                             (2, "http://h001.example.com/p?x")):
+        got = entry_point_urls(CrawlConfig(urlnormalizer_loop_count=loop_count))
+        assert got == {k: [want] for k in got}, (loop_count, got)
+
+
 def test_robots_tied_stanza_crawl_delay_deterministic(spark):
     """Two same-priority stanzas with different Crawl-Delays must resolve
     identically on every run (the virtual fetch schedule derives from the

@@ -291,7 +291,7 @@ def test_updatedb_merge_shuffles_no_frontier_side(spark, corpus_tables, cfg, tmp
                       corpus_tables["robots"], corpus_tables["raw_content"])
     fetched = drv.fetch_t.read(spark)  # driver-side rows: the frontier is the only file scan
     fetch_out = spark.createDataFrame(fetched.collect(), fetched.schema)
-    parsed = run_parse(fetch_out, corpus_tables["raw_content"], cfg, cache_links=False)
+    parsed = run_parse(fetch_out, corpus_tables["raw_content"], cfg)
 
     def merge(frontier):
         return update_frontier(frontier, fetch_out, parsed["parse_updates"], cfg,

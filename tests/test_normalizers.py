@@ -104,12 +104,11 @@ def test_scoped_chain_fallback_and_override():
 
 
 def test_chain_split_dataframe_path(spark):
-    ns = ScopedNormalizers()
     df = spark.createDataFrame(
         [("http://A.com/x/../index.html?PHPSESSID=zz",),
          ("http://b.com/ok.html",)],
         "u string",
     )
-    got = {r.n for r in normalize_chain_split(df, "u", "n", "outlink", ns).collect()}
+    got = {r.n for r in normalize_chain_split(df, "u", "n", "outlink").collect()}
     # basic: lowercase host + ../ resolution; regex: default page + session id
     assert got == {"http://a.com/", "http://b.com/ok.html"}

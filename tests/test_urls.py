@@ -155,15 +155,14 @@ def test_native_filter_chain_matches_python(spark):
 
 
 def test_normalize_split_matches_udf(spark):
-    """normalize_split (native check + python remainder) == full normalize."""
-    from pyspark.sql import functions as F
-
-    from nutch_spark.functions.urls import normalize_split, normalize_url
+    """normalize_inline (native check + python remainder, the basic stage
+    of the crawl's normalize_chain_split) == full normalize."""
+    from nutch_spark.functions.urls import normalize_inline, normalize_url
 
     df = spark.createDataFrame([(u,) for u in MIXED_URLS], "raw string")
     out = {
         r.raw: r.norm
-        for r in normalize_split(df, "raw", "norm").collect()
+        for r in normalize_inline(df, "raw", "norm").collect()
     }
     for u in MIXED_URLS:
         ref = normalize_url(u)

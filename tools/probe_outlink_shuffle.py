@@ -53,7 +53,7 @@ def main() -> None:
     fl = generate(fr, cfg, cur).cache()
     fo = run_fetch(fl, tables["web_graph"], tables["robots"], cfg, 1, cur).cache()
     fo.count()
-    parsed = run_parse(fo, tables["raw_content"], cfg, cache_links=False)
+    parsed = run_parse(fo, tables["raw_content"], cfg)
     parsed["docs_nested"].count()
 
     b0 = shuffle_write_bytes()

@@ -77,7 +77,7 @@ def main() -> None:
     frontier = drv.frontier()
     fl = generate(frontier, cfg, cur)
     fo = run_fetch(fl, tables["web_graph"], tables["robots"], cfg, 3, cur)
-    parsed = run_parse(fo, tables["raw_content"], cfg, cache_links=False)
+    parsed = run_parse(fo, tables["raw_content"], cfg)
     nf = update_frontier(frontier, fo, parsed["parse_updates"], cfg, cur,
                          include_new_flag=True)
     buf = io.StringIO()
