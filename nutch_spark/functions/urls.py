@@ -419,13 +419,3 @@ def choose_repr_url(src: str, dst: str, temp: bool) -> str:
         return dst if len(dst_file) < len(src_file) else src
     # 8) different hosts (or both root): fewer host labels wins (:439-443)
     return dst if jsplit_len(dst_host, ".") < jsplit_len(src_host, ".") else src
-
-
-# ---------------------------------------------------------------------------
-# query-param extraction (fork: util/URLUtil.java:516-552, used by
-# parse-url/.../TaobaoItemIndexProcessor.java:66-72)
-# ---------------------------------------------------------------------------
-
-def query_param_col(url_col, key: str):
-    """Native parse_url(url,'QUERY',key) — JVM-side, codegen-friendly."""
-    return F.parse_url(url_col, F.lit("QUERY"), F.lit(key))

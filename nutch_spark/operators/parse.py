@@ -37,7 +37,7 @@ from pyspark.sql import types as T
 
 from nutch_spark import schemas
 from nutch_spark.config import CrawlConfig
-from nutch_spark.functions.normalizers import normalize_chain_split
+from nutch_spark.functions.normalizers import normalize_chain_split, with_column_once
 from nutch_spark.functions.signatures import make_text_profile_udf
 from nutch_spark.functions.urls import RegexUrlFilter, host_col, normalize_url_udf
 from nutch_spark.operators.officeparse import extract_odf, extract_rtf
@@ -1110,33 +1110,40 @@ def run_parse(
         )
 
     # redirect targets -> linked rows (ParseOutputFormat.java:168-204 analogue)
+    # (both target UDFs are pinned behind a Generate barrier: a plain
+    # projection lets the isNotNull filter be pushed down as a second UDF
+    # evaluation)
     redirs = (
-        fetch_out.filter(F.col("redirect_to").isNotNull())
+        with_column_once(fetch_out.filter(F.col("redirect_to").isNotNull())
+                         .select(F.col("url").alias("from_url"), "redirect_to", "score"),
+                         "url", normalize_url_udf(F.col("redirect_to")))
+        .filter(F.col("url").isNotNull())
         .select(
-            normalize_url_udf(F.col("redirect_to")).alias("url"),
+            "url",
             F.lit(schemas.STATUS_LINKED).alias("kind"),
             F.col("score").alias("score"),
             F.lit(None).cast("string").alias("signature"),
             F.lit(None).cast("string").alias("anchor"),
-            F.col("url").alias("from_url"),
+            "from_url",
         )
-        .filter(F.col("url").isNotNull())
     )
 
     # meta-refresh targets -> linked rows (X7: HTMLMetaProcessor refresh ->
     # ParseStatus SUCCESS_REDIRECT -> ParseOutputFormat linked datum)
     refreshes = (
-        docs_nested.filter(F.col("refresh_to").isNotNull())
+        with_column_once(docs_nested.filter(F.col("refresh_to").isNotNull())
+                         .select("doc_id", "refresh_to"),
+                         "url", normalize_url_udf(F.col("refresh_to")))
+        .filter(F.col("url").isNotNull())
         .join(ok.select(F.col("url").alias("doc_id"), F.col("score")), "doc_id")
         .select(
-            normalize_url_udf(F.col("refresh_to")).alias("url"),
+            "url",
             F.lit(schemas.STATUS_LINKED).alias("kind"),
             F.col("score").alias("score"),
             F.lit(None).cast("string").alias("signature"),
             F.lit(None).cast("string").alias("anchor"),
             F.col("doc_id").alias("from_url"),
         )
-        .filter(F.col("url").isNotNull())
     )
 
     # parse-meta passthrough rows (X10, ParseOutputFormat.java:154-166):

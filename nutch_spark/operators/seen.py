@@ -26,8 +26,11 @@ URL (bloom FP <= ~0.14 % at k = 5), in bitmaps of at most 2^22 bits (512 KiB
 per Arrow row): one bucket up to 2^18 URLs. A cycle ORs into the previous
 sketch while `for_urls` of the new frontier equals its parameters and
 rebuilds it otherwise; capacity doubles on each rebuild, so rebuilds are
-amortized. Rows carry (fmt, buckets, bits, k); a sketch older than fmt 3
-(md5 lanes, or no parameter columns) reads as unusable and is rebuilt.
+amortized. Rows carry (fmt, buckets, bits, k), and so does the sketch's
+snapshot-log entry (`SketchParams.summary`), which the crawl loop compares
+without reading the sketch; a sketch older than fmt 3 (md5 lanes, or no
+parameter columns) or an entry without them reads as unusable and is
+rebuilt.
 
 Determinism: hashes are seed-fixed; bitmaps are pure functions of the
 inserted URL set and the parameters, so N-core and 4N-core runs build
@@ -84,6 +87,20 @@ class SketchParams:
         total_bits = capacity * _BITS_PER_SLOT
         buckets = max(1, total_bits // _MAX_BUCKET_BITS)
         return cls(buckets, total_bits // buckets, _K)
+
+    def summary(self) -> dict:
+        """These parameters with the row format, as recorded in the
+        snapshot-log entry of a sketch built at them."""
+        return {"fmt": SKETCH_FMT, "buckets": self.buckets, "bits": self.bits,
+                "k": self.k}
+
+    @classmethod
+    def from_summary(cls, summary: dict | None) -> SketchParams | None:
+        """Inverse of `summary`; None for an entry that records no
+        parameters or another format than SKETCH_FMT."""
+        if not summary or summary.get("fmt") != SKETCH_FMT:
+            return None
+        return cls(summary["buckets"], summary["bits"], summary["k"])
 
 
 def _bucket_col(buckets: int):

@@ -1,15 +1,18 @@
 """UpdateDb: the frontier state-machine merge (crawl/CrawlDbReducer.java:63-296).
 
 The reference co-groups old-frontier + crawl_fetch + crawl_parse rows by URL
-and runs a per-URL switch. Here the same semantics are one full-outer join
-plus a Catalyst `when()` chain — fully JVM-side, whole-stage-codegen, no
-Python in the hot path. (An applyInPandas variant would match the reference
-line-for-line but be ~10-100x slower; the when-chain is the same state
-machine, verified by the table-driven transition tests.)
+and runs a per-URL switch. Here the cycle's update rows (fetch, signature,
+linked, parse_meta) are one `unionByName` reduced by one `groupBy(url)`,
+then one full-outer join with the frontier plus a Catalyst `when()` chain
+— fully JVM-side, whole-stage-codegen, no Python in the hot path. (An
+applyInPandas variant would match the reference line-for-line but be
+~10-100x slower; the when-chain is the same state machine, verified by the
+table-driven transition tests.)
 
 Pieces:
 - linked-row aggregation capped at db.update.max.inlinks by score
-  (CrawlDbReducer.java:57-58,300-313 bounded priority queue -> window rank),
+  (CrawlDbReducer.java:57-58,300-313 bounded priority queue -> top K of
+  the collected scores),
 - signature/parse_meta overlay (:151-166),
 - status transitions (:181-283) incl. retry/gone backoff
   (AbstractFetchSchedule.java:105-141) and schedules T1/T2,
@@ -17,75 +20,26 @@ Pieces:
   (scoring/opic/OPICScoringFilter.java:90-98).
 
 Scale: the frontier side is the 10^10-row table; fetch/parse updates are
-topN-bounded per cycle. The join keys on url; with the frontier bucketed by
-url (Iceberg bucket spec) this is a storage-partitioned join with no
-frontier-side shuffle. Summation order of inlink scores is pinned
+topN-bounded per cycle. The updates side is a single shuffle on url, and
+its aggregate output stays hash-placed on url; with the frontier bucketed
+by url (Iceberg bucket spec) the merge is a storage-partitioned join that
+shuffles neither side again. Summation order of inlink scores is pinned
 (sort before sum) so runs are bit-identical across core counts.
+
+Memory: the reference's priority queue holds at most K inlinks per URL.
+The aggregate here collects all of a URL's linked scores from the cycle
+before it takes the top K, so per-URL memory is bounded by the inlinks the
+cycle produced — at most one per fetched page, since parse dedups
+(url, to_url) — not by K.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from nutch_spark import schemas
 from nutch_spark.config import CrawlConfig
 from nutch_spark.functions.urls import host_col
-
-
-def aggregate_linked(parse_updates: DataFrame, cfg: CrawlConfig) -> DataFrame:
-    """Top-K inlinks by score per target, then deterministic-order sum (A3).
-
-    A ``row_number`` window over url by score desc, filtered to K: Spark
-    plans a Partial ``WindowGroupLimit`` before the shuffle, so every map
-    task forwards at most K scores per url — the bounded-priority-queue
-    memory guarantee of CrawlDbReducer.java:300-313. The window's output
-    is already hash-placed on url, so the groupBy adds no Exchange. The
-    sum iterates the ascending-sorted top-K so float addition order is
-    pinned — cross-run/core-count bit-equality (SURVEY §7f). Only the
-    float score travels: the output (sum of the top-K scores + count) is
-    invariant to which of several rank-K score-ties survives, and the
-    reference's priority queue leaves tie order unspecified too.
-    """
-    w = Window.partitionBy("url").orderBy(F.desc("score"))
-    topk = (
-        parse_updates.filter(F.col("kind") == schemas.STATUS_LINKED)
-        .select("url", "score", F.row_number().over(w).alias("_r"))
-        .filter(F.col("_r") <= cfg.db_update_max_inlinks)
-        .groupBy("url")
-        .agg(F.array_sort(F.collect_list("score")).alias("arr"))
-    )
-    return topk.select(
-        "url",
-        F.aggregate(
-            "arr", F.lit(0.0), lambda acc, s: acc + s.cast("double")
-        ).cast("float").alias("link_score"),
-        F.size("arr").cast("long").alias("link_count"),
-    )
-
-
-def aggregate_linked_meta(parse_updates: DataFrame) -> DataFrame:
-    """Per target: the metadata map of the top-scoring inlink datum.
-
-    CrawlDbReducer.java:143-147 — with no fetch datum, `fetch =
-    linkList.get(0)` (the priority queue's highest-score linked datum) and
-    `result.set(fetch)` copies its metadata onto the new row; this is how
-    urlmeta tags reach never-fetched children (URLMetaScoringFilter
-    distributeScoreToOutlinks). The reference leaves score-ties
-    unspecified; ties are pinned here by greatest from_url so runs are
-    deterministic. One hash aggregate: max_by runs partially map-side, so
-    each map task ships one row per url, and only rows that actually
-    carry metadata enter it (at steady state the urlmeta frontier slice
-    is a tiny fraction of links)."""
-    linked = parse_updates.filter(
-        (F.col("kind") == schemas.STATUS_LINKED) & F.col("metadata").isNotNull()
-    )
-    key = F.struct(F.col("score"), F.col("from_url"))
-    return linked.groupBy("url").agg(F.max_by("metadata", key).alias("link_meta"))
-
-
-def aggregate_signatures(parse_updates: DataFrame) -> DataFrame:
-    sig = parse_updates.filter(F.col("kind") == schemas.STATUS_SIGNATURE)
-    return sig.groupBy("url").agg(F.max("signature").alias("parse_signature"))
 
 
 def mime_adaptive_interval(
@@ -131,59 +85,55 @@ def update_frontier(
 
     parse_meta (url, parse_meta map) carries configured parse metadata into
     the frontier's metadata (X10; CrawlDbReducer STATUS_PARSE_META overlay)."""
-    linked = aggregate_linked(parse_updates, cfg)
-    sigs = aggregate_signatures(parse_updates)
-    # urlmeta propagation: only when linked rows actually carry metadata
-    # (the column exists only when run_parse was handed a url_meta frame),
-    # so the default path adds no join and no shuffle payload
-    link_meta = (
-        aggregate_linked_meta(parse_updates)
-        if "metadata" in parse_updates.columns else None
-    )
-
-    # one fetch row per url (redirect re-fetches keep the last by seq):
-    # max_by hash-aggregate, not a row_number window — partial aggregation
-    # runs map-side (the shuffle ships <=1 row per url per input partition)
-    # and no per-partition sort; seq ties are unspecified either way, same
-    # as the reference's reducer iteration order
-    # seq wrapped in a struct: max_by skips rows whose ordering key is
-    # NULL — the kernel always sets seq, but a null row must degrade to
-    # "loses the argmax", never to "url vanishes from updatedb"
-    _f = F.max_by(
-        F.struct("fetch_status", "fetch_ts", "signature", "repr_url",
-                 "fetch_interval", "retries", "score"),
-        F.struct(F.col("seq")),
-    )
-    fetch = (
-        fetch_out.groupBy("url").agg(_f.alias("_f"))
-        .select(
-            "url",
-            F.col("_f.fetch_status").alias("fetch_status"),
-            F.col("_f.fetch_ts").alias("fetch_ts"),
-            F.col("_f.signature").alias("fetch_signature"),
-            F.col("_f.repr_url").alias("repr_url"),
-            F.col("_f.fetch_interval").alias("f_interval"),
-            F.col("_f.retries").alias("f_retries"),
-            F.col("_f.score").alias("f_score"),
-        )
-    )
-
-    updates = (
-        fetch.join(sigs, "url", "full_outer")
-        .join(linked, "url", "full_outer")
-    )
+    S = schemas
+    kind = F.col("kind")
+    is_linked = kind == S.STATUS_LINKED
+    # the co-group: every update kind is one row stream, null-padded to the
+    # union of their columns, so each aggregate below reads only its kind's
+    # rows and the whole updates side is a single shuffle on url
+    rows = fetch_out.select(
+        "url",
+        F.struct("fetch_status", "fetch_ts",
+                 F.col("signature").alias("fetch_signature"), "repr_url",
+                 F.col("fetch_interval").alias("f_interval"),
+                 F.col("retries").alias("f_retries"),
+                 F.col("score").alias("f_score")).alias("_f"),
+        F.struct("seq").alias("_seq"),
+    ).unionByName(parse_updates, allowMissingColumns=True)
     if parse_meta is not None:
-        updates = updates.join(parse_meta, "url", "full_outer")
-    else:
-        updates = updates.withColumn(
-            "parse_meta", F.lit(None).cast("map<string,string>")
-        )
-    if link_meta is not None:
-        updates = updates.join(link_meta, "url", "full_outer")
-    else:
-        updates = updates.withColumn(
-            "link_meta", F.lit(None).cast("map<string,string>")
-        )
+        rows = rows.unionByName(parse_meta, allowMissingColumns=True)
+    no_map = F.lit(None).cast("map<string,string>")
+    updates = rows.groupBy("url").agg(
+        # one fetch row per url (redirect re-fetches keep the last by seq);
+        # seq ties are unspecified, as in the reference's reducer. `_seq` is
+        # NULL exactly on non-fetch rows, which max_by skips; a fetch row's
+        # struct(seq) is never NULL, so a null seq only loses the argmax
+        F.max_by("_f", "_seq").alias("_f"),
+        F.max(F.when(kind == S.STATUS_SIGNATURE, F.col("signature")))
+        .alias("parse_signature"),
+        F.max(is_linked).alias("_linked"),
+        F.collect_list(F.when(is_linked, F.col("score"))).alias("_scores"),
+        # at most one parse_meta row per url (one per parsed document)
+        (F.first("parse_meta", ignorenulls=True) if parse_meta is not None
+         else no_map).alias("parse_meta"),
+        # urlmeta (CrawlDbReducer.java:143-147): with no fetch datum the new
+        # row copies the top-score linked datum's metadata; the reference
+        # leaves score ties unspecified, pinned here by greatest from_url.
+        # The column exists only when run_parse was handed a url_meta frame
+        (F.max_by("metadata", F.when(is_linked & F.col("metadata").isNotNull(),
+                                     F.struct("score", "from_url")))
+         if "metadata" in parse_updates.columns else no_map).alias("link_meta"),
+    )
+    # OPIC inlinks capped at db.update.max.inlinks by score
+    # (CrawlDbReducer.java:57-58,300-313), summed over the ascending top K so
+    # float addition order is pinned: bit-identical across core counts
+    top_k = F.reverse(F.slice(F.sort_array("_scores", asc=False), 1,
+                              cfg.db_update_max_inlinks))
+    link_sum = F.aggregate(top_k, F.lit(0.0), lambda acc, s: acc + s.cast("double"))
+    updates = updates.select(
+        "url", "_f.*", "parse_signature", "parse_meta", "link_meta",
+        F.when(F.col("_linked"), link_sum.cast("float")).alias("link_score"),
+    )
 
     if frontier is not None:
         old = frontier.select(
@@ -218,7 +168,6 @@ def update_frontier(
     has_link = F.col("link_score").isNotNull()
 
     fs = F.col("fetch_status")
-    S = schemas
 
     interval_s = F.coalesce(F.col("o_interval"), F.col("f_interval"),
                             F.lit(cfg.db_fetch_interval_default))

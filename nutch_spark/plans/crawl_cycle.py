@@ -24,7 +24,7 @@ from nutch_spark.operators.generate import generate, mark_generated
 from nutch_spark.operators.inject import inject
 from nutch_spark.operators.parse import run_parse
 from nutch_spark.operators.seen import (SketchParams, build_seen_sketch,
-                                        sketch_params, update_seen_sketch)
+                                        update_seen_sketch)
 from nutch_spark.operators.updatedb import update_frontier
 from nutch_spark.storage import Catalog
 
@@ -97,8 +97,9 @@ class CrawlDriver:
         # seed the seen sketch: the incremental per-cycle OR requires the
         # invariant sketch ⊇ frontier (bloom negatives short-circuit the
         # exact join, so the sketch must cover every frontier URL)
-        self.sketch_t.commit(build_seen_sketch(self.frontier(), SketchParams.for_urls(n)),
-                             tag="inject")
+        params = SketchParams.for_urls(n)
+        self.sketch_t.commit(build_seen_sketch(self.frontier(), params),
+                             tag="inject", params=params.summary())
         return n
 
     def run_cycle(self, cycle: int) -> CycleResult:
@@ -279,20 +280,22 @@ class CrawlDriver:
             # this cycle started from: after a crash past A4 the newest is the
             # crashed attempt's, which already holds this cycle's new URLs. A
             # redo's writes reuse the `cycle-N` tags and so replace the crashed
-            # attempt's snapshots (storage install()). A base not sized for
-            # the new frontier (outgrown, shrunk, old format) or no base at
-            # all: rebuild from the whole snapshot, restoring sketch ⊇ frontier.
+            # attempt's snapshots (storage install()). The base's parameters
+            # come from its log entry, so the check reads no sketch row. A
+            # base not sized for the new frontier (outgrown, shrunk, old
+            # format, no recorded parameters) or no base at all: rebuild
+            # from the whole snapshot, restoring sketch ⊇ frontier.
             committed = self.frontier_t.read_pending(self.spark, pending)
             base = self.sketch_t.by_tag(frontier_snap.tag)
-            prev_sketch = (self.sketch_t.read(self.spark, snapshot_id=base.snapshot_id)
-                           if base else None)
             want = SketchParams.for_urls(new_n)
-            if sketch_params(prev_sketch) == want:
+            if base and SketchParams.from_summary(base.params) == want:
                 new_sketch = update_seen_sketch(
-                    prev_sketch, committed.filter(F.col("is_new")).select("url"), want)
+                    self.sketch_t.read(self.spark, snapshot_id=base.snapshot_id),
+                    committed.filter(F.col("is_new")).select("url"), want)
             else:
                 new_sketch = build_seen_sketch(committed, want)
-            self.sketch_t.commit(new_sketch, tag=f"cycle-{cycle}")
+            self.sketch_t.commit(new_sketch, tag=f"cycle-{cycle}",
+                                 params=want.summary())
             _mark("A4:sketch_commit")
 
             # metrics + lineage (north_rule: per-partition rows). The metrics

@@ -47,7 +47,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # plan the pre-shuffle top-K (Partial WindowGroupLimit) for every
         # rank filter, not only K <= 1000: the generator's topN/partitions and
-        # db.update.max.inlinks (10,000) are above Spark's default
+        # LinkDb's db.max.inlinks (10,000) are above Spark's default
         .config("spark.sql.optimizer.windowGroupLimitThreshold", "2147483647")
         # reliable checkpoints (checkpoints.iter_checkpoint) are deleted once
         # their DataFrame is garbage-collected; read only at context start

@@ -46,6 +46,9 @@ class Snapshot:
     # Iceberg snapshot-summary analogue: row count recorded at commit time
     # (from the writer's Observation) so readers never pay a count() scan
     row_count: int | None = None
+    # writer-defined layout parameters (the seen sketch's fmt/buckets/bits/k),
+    # recorded at commit time for the same reason
+    params: dict | None = None
 
 
 class SnapshotTable:
@@ -97,9 +100,13 @@ class SnapshotTable:
         h = hashlib.md5(self.root.encode()).hexdigest()[:8]
         return f"{self.name}_{h}_snap{sid:06d}"
 
-    def commit(self, df: DataFrame, tag: str | None = None) -> Snapshot:
-        """Write df as a new full snapshot and atomically install it."""
-        return self.install(self.prepare(df, tag=tag))
+    def commit(self, df: DataFrame, tag: str | None = None,
+               params: dict | None = None) -> Snapshot:
+        """Write df as a new full snapshot and atomically install it,
+        recording `params` in its log entry."""
+        pending = self.prepare(df, tag=tag)
+        pending["params"] = params
+        return self.install(pending)
 
     def prepare(self, data: DataFrame | list[dict], tag: str | None = None,
                 bucket_by: str | None = None, append: bool = False) -> dict:

@@ -46,11 +46,48 @@ def test_three_cycle_crawl_discovers_web(spark, corpus_tables, cfg, tmp_path):
         sketch = sketch_t.read(spark, snapshot_id=snap.snapshot_id)
         params[snap.tag] = sketch_params(sketch)
         assert params[snap.tag] == SketchParams.for_urls(fsnap.row_count), snap.tag
+        # the log entry records the parameters the sketch was built at
+        assert SketchParams.from_summary(snap.params) == params[snap.tag], snap.tag
         urls = front_t.read(spark, snapshot_id=fsnap.snapshot_id).select("url")
         misses = probe_seen_flags(urls, sketch).filter(~F.col("maybe_seen")).count()
         assert misses == 0, snap.tag
     assert list(params) == ["inject", "cycle-1", "cycle-2", "cycle-3"]
     assert params["inject"] != params["cycle-3"]
+
+
+def test_sketch_entry_without_params_rebuilds(spark, corpus_tables, cfg, tmp_path,
+                                              monkeypatch):
+    """A4 compares the parameters recorded in the base sketch's log entry
+    with those the new frontier needs, reading no sketch row. An entry that
+    records none (a catalog written before they were recorded) takes the
+    rebuild branch, even where the base's parameters would fit, and the
+    rebuilt sketch covers the frontier and records its parameters."""
+    from nutch_spark.plans import crawl_cycle
+
+    root = str(tmp_path / "cat")
+    args = (corpus_tables["seeds"], corpus_tables["web_graph"],
+            corpus_tables["robots"], corpus_tables["raw_content"])
+    crawl(spark, root, cfg, *args, depth=2)  # cycle 3 keeps this sketch size
+    sketch_t = Catalog(root).table("seen_sketch")
+    log = sketch_t._load_log()
+    recorded = SketchParams.from_summary(log[-1].pop("params"))
+    sketch_t._install_log(log)
+
+    calls = []
+    for name in ("build_seen_sketch", "update_seen_sketch"):
+        real = getattr(crawl_cycle, name)
+        monkeypatch.setattr(crawl_cycle, name,
+                            lambda *a, _n=name, _f=real: calls.append(_n) or _f(*a))
+    CrawlDriver(spark, root, cfg, *args[1:]).run_cycle(3)
+
+    n = Catalog(root).table("frontier").latest().row_count
+    assert recorded == SketchParams.for_urls(n)  # an OR would have fit
+    assert calls == ["build_seen_sketch"]
+    snap = sketch_t.latest()
+    assert SketchParams.from_summary(snap.params) == SketchParams.for_urls(n)
+    urls = Catalog(root).table("frontier").read(spark).select("url")
+    sketch = sketch_t.read(spark, snapshot_id=snap.snapshot_id)
+    assert probe_seen_flags(urls, sketch).filter(~F.col("maybe_seen")).count() == 0
 
 
 def test_resume_from_checkpoint_identical_seen_set(spark, corpus_tables, cfg, tmp_path):

@@ -116,6 +116,23 @@ def test_run_parse_honors_directives(spark):
         parsed["links"].unpersist()
 
 
+def test_redirect_and_refresh_targets_normalized_once(spark):
+    """Each redirect or meta-refresh target crosses into the Python
+    normalizer once: the isNotNull filter on the UDF's output must not be
+    pushed down as a second ArrowEvalPython over the same column."""
+    web = SyntheticWeb(n_hosts=8, pages_per_host=3, mega_factor=2)
+    fetch_out = _fetch_ok(spark, list(_meta_urls(8).values()))
+    parsed = run_parse(fetch_out, web.to_spark(spark)["raw_content"], CrawlConfig())
+    try:
+        plan = parsed["parse_updates"]._jdf.queryExecution().optimizedPlan().toString()
+        evals = [line for line in plan.splitlines() if "ArrowEvalPython" in line]
+        for col in ("refresh_to", "redirect_to"):
+            assert sum(f"normalize_url_udf({col}#" in e for e in evals) == 1, evals
+    finally:
+        parsed["docs_nested"].unpersist()
+        parsed["links"].unpersist()
+
+
 def test_index_static_tld_metatag_fields(spark):
     """I3 leftovers: tld suffix field, metatag.* (lowercased, index.parse.md
     filtered), index-static constants (incl. malformed-entry drop)."""

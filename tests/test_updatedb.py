@@ -135,6 +135,43 @@ def test_inlink_cap_top_k(spark):
     assert abs(out[0].score - 0.7) < 1e-6  # 0.4 + 0.3
 
 
+@pytest.mark.parametrize("urlmeta", [False, True], ids=["default", "urlmeta"])
+def test_updates_side_is_one_shuffle(spark, tmp_path, urlmeta):
+    """updatedb is one co-group, as CrawlDbReducer's one reduce per url:
+    every update kind (fetch, signature, linked, and with urlmeta_tags +
+    db_parsemeta_to_crawldb also link_meta and parse_meta) is unioned and
+    aggregated in one shuffle. Its output is hash-placed on url, so the
+    merge with the bucketed frontier needs no further Exchange: one Exchange
+    and one SortMergeJoin in the whole plan."""
+    from nutch_spark.storage import SnapshotTable
+
+    cfg = CrawlConfig(urlmeta_tags=("dept",) if urlmeta else (),
+                      db_parsemeta_to_crawldb=("dept",) if urlmeta else ())
+    url, new = "http://a.com/x.html", "http://new.com/x.html"
+    t = SnapshotTable(str(tmp_path), "frontier")
+    t.install(t.prepare(mk_old(spark, [{"url": url}]), tag="t", bucket_by="url"))
+    fetch = mk_fetch(spark, [{"url": url, "fetch_status": S.STATUS_FETCH_SUCCESS}])
+    meta = T.MapType(T.StringType(), T.StringType())
+    schema = T.StructType(list(S.PARSE_UPDATE_SCHEMA.fields)
+                          + ([T.StructField("metadata", meta)] if urlmeta else []))
+    rows = [(url, S.STATUS_SIGNATURE, None, "aa" * 16, None, None),
+            (new, S.STATUS_LINKED, 0.5, None, "a", url)]
+    upd = spark.createDataFrame(
+        [r + (({"dept": "x"},) if urlmeta else ()) for r in rows], schema)
+    parse_meta = (spark.createDataFrame([(url, {"dept": "y"})],
+                                        T.StructType([T.StructField("url", T.StringType()),
+                                                      T.StructField("parse_meta", meta)]))
+                  if urlmeta else None)
+    out = update_frontier(t.read(spark), fetch, upd, cfg, T0, parse_meta=parse_meta)
+    got = {r.url: r.metadata for r in out.collect()}
+    assert got == ({url: {"dept": "y"}, new: {"dept": "x"}} if urlmeta
+                   else {url: {}, new: None})
+    final = (out._jdf.queryExecution().executedPlan().toString()
+             .split("== Initial Plan ==")[0])
+    assert final.count("Exchange") == 1, final
+    assert final.count("SortMergeJoin") == 1, final
+
+
 def test_gone_backoff_and_retry_delay(spark):
     cfg = CrawlConfig()
     old = mk_old(spark, [

@@ -1,7 +1,7 @@
 """urlmeta plugin (plugin/urlmeta URLMetaScoringFilter.java:63-85 +
 URLMetaIndexingFilter.java:84-100): configured datum-metadata keys
 propagate from pages to outlinked children and surface as index fields.
-Also covers aggregate_linked's exact top-K sum on a mega-hub target."""
+Also covers updatedb's exact top-K inlink sum on a mega-hub target."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,10 +18,18 @@ def _pu(spark, rows):
     )
 
 
+def _empty_fetch(spark):
+    return spark.createDataFrame(
+        [], "url string, host string, fetch_status int, fetch_ts long, "
+            "seq long, repr_url string, signature string, content_length int, "
+            "truncated boolean, score float, fetch_interval int, retries int, "
+            "partition_id int")
+
+
 def test_linked_meta_top_scoring_inlink_wins(spark):
     """CrawlDbReducer.java:143-147: the new row copies the top-score linked
     datum; score ties pinned by greatest from_url."""
-    from nutch_spark.operators.updatedb import aggregate_linked_meta
+    from nutch_spark.operators.updatedb import update_frontier
 
     L = schemas.STATUS_LINKED
     rows = [
@@ -31,14 +39,16 @@ def test_linked_meta_top_scoring_inlink_wins(spark):
         # tie on score: greatest from_url wins
         ("http://c.example.com/y", L, 5.0, None, "", "http://a.example.com/", {"dept": "a"}),
         ("http://c.example.com/y", L, 5.0, None, "", "http://z.example.com/", {"dept": "z"}),
-        # no metadata-carrying inlink at all -> no row
+        # no metadata-carrying inlink at all -> no link metadata
         ("http://c.example.com/z", L, 9.0, None, "", "http://a.example.com/", None),
     ]
-    got = {r.url: r.link_meta for r in
-           aggregate_linked_meta(_pu(spark, rows)).collect()}
+    out = update_frontier(None, _empty_fetch(spark), _pu(spark, rows),
+                          CrawlConfig(urlmeta_tags=("dept",)), 1000)
+    got = {r.url: r.metadata for r in out.collect()}
     assert got == {
         "http://c.example.com/x": {"dept": "b"},
         "http://c.example.com/y": {"dept": "z"},
+        "http://c.example.com/z": None,
     }
 
 
@@ -61,12 +71,7 @@ def test_update_frontier_new_row_inherits_existing_keeps_own(spark):
         ("http://old.example.com/", L, 1.0, None, "", "http://p.example.com/",
          {"dept": "theirs"}),
     ])
-    empty_fetch = spark.createDataFrame(
-        [], "url string, host string, fetch_status int, fetch_ts long, "
-            "seq long, repr_url string, signature string, content_length int, "
-            "truncated boolean, score float, fetch_interval int, retries int, "
-            "partition_id int")
-    out = update_frontier(frontier, empty_fetch, pu,
+    out = update_frontier(frontier, _empty_fetch(spark), pu,
                           CrawlConfig(urlmeta_tags=("dept",)), 1000)
     meta = {r.url: r.metadata for r in out.collect()}
     assert meta["http://new.example.com/"] == {"dept": "news"}
@@ -135,24 +140,28 @@ def test_urlmeta_index_field(spark):
 
 def test_aggregate_linked_salt_config_and_skew_bound(spark):
     """VERDICT r3 item 7: a mega-hub target with inlinks >> K still sums
-    exactly the top-K scores, and the top-K window plus the sum aggregate
-    share one shuffle (the window output is already hash-placed on url)."""
-    from nutch_spark.operators.updatedb import aggregate_linked
+    exactly the top-K scores, and the whole updates side is one shuffle.
+    The hub is a new linked-only row, so its score is its inlink sum."""
+    from nutch_spark.operators.updatedb import update_frontier
 
     L = schemas.STATUS_LINKED
     k = 16
     n = 4000  # >> K
-    rows = [("http://hub.example.com/", L, float((i * 37) % 1000) + 0.5, None,
-             "", f"http://p{i}.example.com/", None) for i in range(n)]
     cfg = CrawlConfig(db_update_max_inlinks=k)
-    got = aggregate_linked(_pu(spark, rows), cfg).collect()[0]
+
+    def hub(score_of):
+        rows = [("http://hub.example.com/", L, score_of(i), None, "",
+                 f"http://p{i}.example.com/", None) for i in range(n)]
+        return update_frontier(None, _empty_fetch(spark), _pu(spark, rows), cfg, 1000)
+
+    df = hub(lambda i: float((i * 37) % 1000) + 0.5)
+    got = df.collect()[0]
     scores = sorted((float((i * 37) % 1000) + 0.5) for i in range(n))[-k:]
-    assert got.link_count == k
-    assert abs(got.link_score - sum(scores)) < 1e-3
+    assert abs(got.score - sum(scores)) < 1e-3
+    # exactly K inlinks counted: unit scores sum to K
+    assert hub(lambda i: 1.0).collect()[0].score == k
     # one Exchange in the final plan (AQE's string also holds the Initial
     # Plan — count the final only)
-    df = aggregate_linked(_pu(spark, rows), cfg)
-    df.collect()
     final = df._jdf.queryExecution().executedPlan().toString() \
         .split("== Initial Plan ==")[0]
     assert final.count("Exchange") == 1
