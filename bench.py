@@ -291,10 +291,8 @@ def main_scaling() -> dict:
     # is multi-tenant and its deliverable capacity drifts between runs
     caps_pre = cpu_capacity((n, n4))
     runs = {}
-    stage_times = {}
     for cores in (n, n4):
-        env = dict(os.environ, SPARK_GRAFT_CPUS=str(cores), BENCH_PARTS="32",
-                   BENCH_STAGE_TIMES="1")
+        env = dict(os.environ, SPARK_GRAFT_CPUS=str(cores), BENCH_PARTS="32")
         p = subprocess.run(
             [sys.executable, os.path.abspath(__file__), "--crawl-only"],
             env=env, capture_output=True, text=True, timeout=7200,
@@ -305,12 +303,6 @@ def main_scaling() -> dict:
                 f"scaling sub-run at {cores} cores produced no JSON "
                 f"(rc={p.returncode}); stderr tail: {p.stderr[-500:]}")
         runs[cores] = json.loads(lines[-1])
-        # per-stage wall times ("[cycle N stages] A1:x=1.2s ...") so each
-        # attempt shows WHICH stage failed to scale, not just the total
-        stage_times[cores] = [
-            ln.split("] ", 1)[1]
-            for ln in p.stdout.splitlines() if ln.startswith("[cycle")
-        ]
     caps_post = cpu_capacity((n, n4))
     caps = {k: round((caps_pre[k] + caps_post[k]) / 2, 3) for k in caps_pre}
     bw = mem_bandwidth_capacity((n, n4))
@@ -336,7 +328,6 @@ def main_scaling() -> dict:
         "bw_normalized_efficiency": round((thr_4n / thr_n) / bw_ratio, 3) if thr_n else 0.0,
         "target": 0.8,
         "pass": eff >= 0.8,
-        "stage_times": stage_times,
     }
 
 

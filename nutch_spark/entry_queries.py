@@ -902,8 +902,7 @@ SELECT q_id, nn_id, cosine, rk FROM (
 
 
 def q_events_hourly(spark, sf_dir):
-    """Streaming-analog windowed aggregation: hourly event counts by type
-    (the batch equivalent of the structured-streaming frontier monitor)."""
+    """Batch windowed aggregation: hourly event counts by type."""
     ev = load(spark, sf_dir, "events")
     return ev.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("hour"), F.col("event_type")

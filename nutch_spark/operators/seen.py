@@ -20,6 +20,11 @@ The north_rule demands the explicit performance layer:
   frontier, so bloom false positives are recovered, never dropped. The
   frontier anti-join's left side shrinks by the novelty rate.
 
+Who reads it: the crawl loop writes the sketch every cycle (A4), but no
+crawl stage reads it; updatedb finds new URLs through its own merge with
+the frontier. The readers are the callers of `probe_seen_flags` and
+`new_urls`: perfbench's no-false-negative check and the tests.
+
 Sizing: `SketchParams.for_urls(n)` takes a capacity that is a power of two
 >= 2n (at least 64) at 8 bits per slot, so a sketch holds >= 16 bits per
 URL (bloom FP <= ~0.14 % at k = 5), in bitmaps of at most 2^22 bits (512 KiB

@@ -11,7 +11,6 @@ north_rule's "resumable mid-cycle with per-partition lineage + metrics".
 
 from __future__ import annotations
 
-import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
@@ -94,46 +93,40 @@ class CrawlDriver:
         n = int(obs.get["n"])
         pending["row_count"] = n
         self.frontier_t.install(pending)
-        # seed the seen sketch: the incremental per-cycle OR requires the
-        # invariant sketch ⊇ frontier (bloom negatives short-circuit the
-        # exact join, so the sketch must cover every frontier URL)
+        # seed the seen sketch: the incremental per-cycle OR keeps the
+        # invariant sketch ⊇ frontier. No crawl stage reads the sketch; its
+        # readers are the callers of seen.probe_seen_flags / new_urls
+        # (perfbench's no-false-negative check and the tests), where a
+        # bloom negative skips the exact join, so the sketch must cover
+        # every frontier URL
         params = SketchParams.for_urls(n)
         self.sketch_t.commit(build_seen_sketch(self.frontier(), params),
                              tag="inject", params=params.summary())
         return n
 
     def run_cycle(self, cycle: int) -> CycleResult:
-        """One generate->fetch->parse->updatedb cycle.
+        """One generate->fetch->parse->updatedb cycle, staged like the
+        reference's job sequence: the fetcher writes its segment
+        (crawl_fetch), and parse and the crawldb update read it back
+        (crawl/CrawlDb.java:90-99).
+
+        - A1, on the driver thread: generate -> fetch, appended as the
+          `cycle-N` snapshot of fetch_status.
+        - Plan build: parse, the updatedb merge and the fetch metrics, each
+          over a scan of that snapshot's own files. No plan re-embeds the
+          generate -> fetch lineage, and none can see a recomputed fetch
+          that differs from the committed one.
+        - A2 (documents commit), A3 (frontier write) and A5 (metrics
+          collect) run concurrently: their job-submission, codegen and
+          committer fixed costs coincide instead of summing.
+        - A4 (sketch commit), the metrics and lineage log appends, then A6
+          (frontier install): the pointer swap that marks the cycle
+          complete.
 
         Row counts for lineage ride along with the write actions via
-        Observation instead of separate .count() passes — each stage
-        materializes exactly once (7 actions/cycle instead of 11; driver
-        barriers are the serial fraction the scaling criterion punishes).
-        Independent actions overlap: A1 (fetch append) runs while the
-        driver constructs the parse/updatedb plans, then A2 (documents
-        commit), A3 (frontier write) and A5 (metrics collect) run
-        concurrently — their job-submission/codegen/committer fixed costs
-        coincide instead of summing, and on a real cluster the concurrent
-        jobs fill executor slots a single job's tail stages leave idle.
+        Observation instead of separate .count() passes.
         """
         t_start = time.time()
-        _marks: list[tuple[str, float]] = []
-        _spans: dict[str, float] = {}
-        _trace = os.environ.get("BENCH_STAGE_TIMES")
-
-        def _mark(label: str) -> None:
-            if _trace:
-                _marks.append((label, time.time()))
-
-        def _timed(label: str, fn):
-            # per-thread stage duration (wall inside the worker; stages in
-            # one overlap group share the clock, so durations can sum past
-            # the group's wall — that gap IS the overlap win)
-            t = time.time()
-            out = fn()
-            _spans[label] = time.time() - t
-            return out
-
         cfg = self.cfg
         cur = self.t0_ms + cycle * CYCLE_VIRTUAL_MS
         # NOT cached: the frontier is the highest-cardinality table in the
@@ -150,6 +143,7 @@ class CrawlDriver:
         frontier_n = frontier_snap.row_count
 
         obs_gen, obs_fetch = Observation(), Observation()
+        # cached: run_fetch's redirect chains and mark_generated re-read it
         fetchlist = (
             generate(frontier, cfg, cur, resolver=self.resolver)
             .observe(obs_gen, F.count(F.lit(1)).alias("n"))
@@ -159,205 +153,171 @@ class CrawlDriver:
             run_fetch(fetchlist, self.web_graph, self.robots, cfg, cycle, cur,
                       resolver=self.resolver)
             .observe(obs_fetch, F.count(F.lit(1)).alias("n"))
-            .cache()
         )
-        # the append materializes fetchlist + fetch_out and yields all counts
-        _mark("plan:gen+fetch")
-        # A1 runs in a worker thread while the driver constructs the parse +
-        # updatedb plans below: several seconds of pure py4j plan-building
-        # that previously serialized after the fetch job now overlap it.
-        # (Spark's scheduler accepts jobs from any thread; on a real cluster
-        # concurrent jobs additionally fill executor slots a single job's
-        # committer/tail stages leave idle.)
-        pool = ThreadPoolExecutor(max_workers=3, thread_name_prefix=f"cycle{cycle}")
-        try:
-            fut_a1 = pool.submit(
-                _timed, "A1:fetch_append",
-                lambda: self.fetch_t.append(fetch_out, tag=f"cycle-{cycle}"))
+        # A1: the append materializes fetchlist + fetch_out and yields both
+        # counts. Every later stage scans the segment's own files with the
+        # schema A1 wrote (no schema-inference job).
+        segment = self.fetch_t.append(fetch_out, tag=f"cycle-{cycle}")
+        fetched = self.fetch_t.read_files(self.spark, segment, fetch_out.schema)
+        n_gen = int(obs_gen.get["n"])
+        n_fetch = int(obs_fetch.get["n"])
 
-            url_meta = None
-            if cfg.urlmeta_tags:
-                # urlmeta page-side slice: this cycle's fetching pages with
-                # their configured tags (join keys on the bucketed frontier's
-                # url — narrow projection, non-empty maps only)
-                tags = list(cfg.urlmeta_tags)
-                url_meta = (
-                    frontier.select(
-                        "url",
-                        F.map_filter(
-                            F.coalesce(F.col("metadata"),
-                                       F.create_map().cast("map<string,string>")),
-                            lambda k, _: k.isin(*tags),
-                        ).alias("urlmeta"),
-                    )
-                    .filter(F.size(F.map_keys(F.col("urlmeta"))) > 0)
+        url_meta = None
+        if cfg.urlmeta_tags:
+            # urlmeta page-side slice: this cycle's fetching pages with
+            # their configured tags (join keys on the bucketed frontier's
+            # url — narrow projection, non-empty maps only)
+            tags = list(cfg.urlmeta_tags)
+            url_meta = (
+                frontier.select(
+                    "url",
+                    F.map_filter(
+                        F.coalesce(F.col("metadata"),
+                                   F.create_map().cast("map<string,string>")),
+                        lambda k, _: k.isin(*tags),
+                    ).alias("urlmeta"),
                 )
-            # fetcher.store.content=false AND fetcher.parse=false
-            # (Fetcher.java:1065,1090): nothing stored content and nothing
-            # parsed in-fetch, so the segment has no content for a parse pass —
-            # the parse stage sees zero rows (status transitions still flow
-            # from fetch_out through updatedb).
-            parse_in = (fetch_out if cfg.fetcher_store_content or cfg.fetcher_parse
-                        else fetch_out.limit(0))
-            parsed = run_parse(parse_in, self.raw_content, cfg, url_meta=url_meta)
-            obs_docs = Observation()
-            docs_df = parsed["documents"].observe(obs_docs, F.count(F.lit(1)).alias("n"))
+                .filter(F.size(F.map_keys(F.col("urlmeta"))) > 0)
+            )
+        # fetcher.store.content=false AND fetcher.parse=false
+        # (Fetcher.java:1065,1090): nothing stored content and nothing
+        # parsed in-fetch, so the segment has no content for a parse pass —
+        # the parse stage sees zero rows (status transitions still flow
+        # from the segment through updatedb).
+        parse_in = (fetched if cfg.fetcher_store_content or cfg.fetcher_parse
+                    else fetched.limit(0))
+        parsed = run_parse(parse_in, self.raw_content, cfg, url_meta=url_meta)
+        obs_docs = Observation()
+        docs_df = parsed["documents"].observe(obs_docs, F.count(F.lit(1)).alias("n"))
 
-            # generate.update.crawldb (Generator.java:582-612): stamp _ngt_ on
-            # the generated rows BEFORE the merge so rows the fetch pass never
-            # produced output for (timelimit / throughput-kill purges) stay
-            # protected by crawl.gen.delay next cycle. Fetched rows shed the
-            # stamp in the merge (CrawlDbReducer.java:293). The left join keys
-            # on url, so the bucketed frontier side still shows no Exchange —
-            # only the topN-bounded fetchlist side shuffles.
-            merge_frontier = (mark_generated(frontier, fetchlist, cur)
-                              if cfg.gen_update_crawldb else frontier)
-            new_frontier = update_frontier(
-                merge_frontier, fetch_out, parsed["parse_updates"], cfg, cur,
-                include_new_flag=True, parse_meta=parsed.get("parse_meta"))
+        # generate.update.crawldb (Generator.java:582-612): stamp _ngt_ on
+        # the generated rows BEFORE the merge so rows the fetch pass never
+        # produced output for (timelimit / throughput-kill purges) stay
+        # protected by crawl.gen.delay next cycle. Fetched rows shed the
+        # stamp in the merge (CrawlDbReducer.java:293). The left join keys
+        # on url, so the bucketed frontier side still shows no Exchange —
+        # only the topN-bounded fetchlist side shuffles.
+        merge_frontier = (mark_generated(frontier, fetchlist, cur)
+                          if cfg.gen_update_crawldb else frontier)
+        new_frontier = update_frontier(
+            merge_frontier, fetched, parsed["parse_updates"], cfg, cur,
+            include_new_flag=True, parse_meta=parsed.get("parse_meta"))
 
-            # Phase-1 frontier write (prepare, not install): the bucketed
-            # snapshot write IS the single materialization of the updatedb
-            # merge. The previous shape cached the merged frontier — a full
-            # columnar copy of the highest-cardinality table per cycle (at
-            # 10^10 rows, the worst possible frame to duplicate) — then
-            # re-scanned the cache for the final write. `is_new` rides into
-            # the snapshot (an RLE-compressed boolean, ~free in parquet) so
-            # the sketch update below reads it back with a pushed filter;
-            # frontier() drops it for every other consumer. The pointer
-            # install — the cycle-completeness marker resume keys on — stays
-            # the LAST step of the cycle (A6), exactly as before.
-            obs_front = Observation()
-            front_df = new_frontier.observe(obs_front, F.count(F.lit(1)).alias("n"))
+        # Phase-1 frontier write (prepare, not install): the bucketed
+        # snapshot write IS the single materialization of the updatedb
+        # merge. The previous shape cached the merged frontier — a full
+        # columnar copy of the highest-cardinality table per cycle (at
+        # 10^10 rows, the worst possible frame to duplicate) — then
+        # re-scanned the cache for the final write. `is_new` rides into
+        # the snapshot (an RLE-compressed boolean, ~free in parquet) so
+        # the sketch update below reads it back with a pushed filter;
+        # frontier() drops it for every other consumer. The pointer
+        # install — the cycle-completeness marker resume keys on — stays
+        # the LAST step of the cycle (A6).
+        obs_front = Observation()
+        front_df = new_frontier.observe(obs_front, F.count(F.lit(1)).alias("n"))
 
-            # all plans for the cycle are built; join A1 (counts become safe to
-            # read), then run the three independent actions CONCURRENTLY:
-            #   A2 documents commit   (reads fetch_out cache + parse kernel)
-            #   A3 frontier write     (updatedb merge -> bucketed snapshot)
-            #   A5 metrics collect    (~1 row/partition over the fetch_out cache)
-            # A2 and A3 share the parse kernel through the docs_nested cache
-            # (block-level locks make the second job wait per partition, not
-            # recompute). Their fixed costs — job submission, codegen compile,
-            # output-committer passes — are driver/tail-serial and previously
-            # summed; overlapped they largely coincide. Crash semantics are
-            # unchanged: every one of these precedes the A6 pointer install
-            # that marks the cycle complete, exactly as in the serial order.
-            fut_a1.result()
-            _mark("plan:parse+updatedb(overlaps A1)")
-            n_gen = int(obs_gen.get["n"])
-            n_fetch = int(obs_fetch.get["n"])
+        def _docs_commit() -> int:
+            self.documents_t.commit(docs_df, tag=f"cycle-{cycle}")
+            return int(obs_docs.get["n"])
 
-            def _docs_commit() -> int:
-                self.documents_t.commit(docs_df, tag=f"cycle-{cycle}")
-                return int(obs_docs.get["n"])
+        def _frontier_write() -> dict:
+            p = self.frontier_t.prepare(front_df, tag=f"cycle-{cycle}",
+                                        bucket_by="url")
+            # snapshot summary: next cycle's frontier_n
+            p["row_count"] = int(obs_front.get["n"])
+            return p
 
-            def _frontier_write() -> dict:
-                p = self.frontier_t.prepare(front_df, tag=f"cycle-{cycle}",
-                                            bucket_by="url")
-                # snapshot summary: next cycle's frontier_n
-                p["row_count"] = int(obs_front.get["n"])
-                return p
+        def _metrics() -> list[dict]:
+            return [r.asDict()
+                    for r in fetch_metrics(fetched, cycle, cur).collect()]
 
-            def _metrics() -> list[dict]:
-                return [r.asDict()
-                        for r in fetch_metrics(fetch_out, cycle, cur).collect()]
-
-            fut_docs = pool.submit(_timed, "A2:documents_commit", _docs_commit)
-            fut_front = pool.submit(_timed, "A3:frontier_write", _frontier_write)
-            fut_met = pool.submit(_timed, "A5:metrics_collect", _metrics)
+        # A2, A3 and A5 run concurrently. A2 and A3 share the parse kernel
+        # through the docs_nested cache (block-level locks make the second
+        # job wait per partition, not recompute). Crash semantics are those
+        # of the serial order: every one of them precedes the A6 pointer
+        # install that marks the cycle complete. Leaving the block waits
+        # for all three, so an error never leaves an orphaned write racing
+        # a crawl() redo on the same snapshot log (the pointer-swap log is
+        # single-writer-per-table by design, not lock-protected).
+        with ThreadPoolExecutor(max_workers=3,
+                                thread_name_prefix=f"cycle{cycle}") as pool:
+            fut_docs = pool.submit(_docs_commit)
+            fut_front = pool.submit(_frontier_write)
+            fut_met = pool.submit(_metrics)
             n_parsed = fut_docs.result()
             pending = fut_front.result()
             met_rows = fut_met.result()
-            new_n = pending["row_count"]
-            _mark("A2+A3+A5:overlap_group")
+        new_n = pending["row_count"]
 
-            # seen sketch updated INCREMENTALLY: only this cycle's new URLs are
-            # OR'd into the previous cycle's bitmaps (O(new) per cycle, not
-            # O(frontier) — at 10^10 frontier URLs the full rebuild was a
-            # per-cycle scan of the whole crawl history). Source = the pending
-            # snapshot's files, column-pruned to (url, is_new) with the filter
-            # pushed to the scan. Base = the sketch tagged like the frontier
-            # this cycle started from: after a crash past A4 the newest is the
-            # crashed attempt's, which already holds this cycle's new URLs. A
-            # redo's writes reuse the `cycle-N` tags and so replace the crashed
-            # attempt's snapshots (storage install()). The base's parameters
-            # come from its log entry, so the check reads no sketch row. A
-            # base not sized for the new frontier (outgrown, shrunk, old
-            # format, no recorded parameters) or no base at all: rebuild
-            # from the whole snapshot, restoring sketch ⊇ frontier.
-            committed = self.frontier_t.read_pending(self.spark, pending)
-            base = self.sketch_t.by_tag(frontier_snap.tag)
-            want = SketchParams.for_urls(new_n)
-            if base and SketchParams.from_summary(base.params) == want:
-                new_sketch = update_seen_sketch(
-                    self.sketch_t.read(self.spark, snapshot_id=base.snapshot_id),
-                    committed.filter(F.col("is_new")).select("url"), want)
-            else:
-                new_sketch = build_seen_sketch(committed, want)
-            self.sketch_t.commit(new_sketch, tag=f"cycle-{cycle}",
-                                 params=want.summary())
-            _mark("A4:sketch_commit")
+        # seen sketch updated INCREMENTALLY: only this cycle's new URLs are
+        # OR'd into the previous cycle's bitmaps (O(new) per cycle, not
+        # O(frontier) — at 10^10 frontier URLs the full rebuild was a
+        # per-cycle scan of the whole crawl history). Source = the pending
+        # snapshot's files, column-pruned to (url, is_new) with the filter
+        # pushed to the scan. Base = the sketch tagged like the frontier
+        # this cycle started from: after a crash past A4 the newest is the
+        # crashed attempt's, which already holds this cycle's new URLs. A
+        # redo's writes reuse the `cycle-N` tags and so replace the crashed
+        # attempt's snapshots (storage install()). The base's parameters
+        # come from its log entry, so the check reads no sketch row. A
+        # base not sized for the new frontier (outgrown, shrunk, old
+        # format, no recorded parameters) or no base at all: rebuild
+        # from the whole snapshot, restoring sketch ⊇ frontier.
+        committed = self.frontier_t.read_files(self.spark, pending)
+        base = self.sketch_t.by_tag(frontier_snap.tag)
+        want = SketchParams.for_urls(new_n)
+        if base and SketchParams.from_summary(base.params) == want:
+            new_sketch = update_seen_sketch(
+                self.sketch_t.read(self.spark, snapshot_id=base.snapshot_id),
+                committed.filter(F.col("is_new")).select("url"), want)
+        else:
+            new_sketch = build_seen_sketch(committed, want)
+        self.sketch_t.commit(new_sketch, tag=f"cycle-{cycle}",
+                             params=want.summary())
 
-            # metrics + lineage (north_rule: per-partition rows). The metrics
-            # aggregate (A5, collected in the overlap group above — ~1 row per
-            # partition over the cached fetch output) lands via a driver-side
-            # pyarrow write — one Spark job instead of two write jobs + two
-            # serial output-committer passes per cycle.
-            if met_rows:
-                self.metrics_t.append_rows(met_rows, tag=f"cycle-{cycle}")
-            self.lineage_t.append_rows(
-                [
-                    {"cycle": cycle, "stage": s, "rows_in": ri, "rows_out": ro}
-                    for s, ri, ro in (
-                        ("generate", frontier_n, n_gen),
-                        ("fetch", n_gen, n_fetch),
-                        ("parse", n_fetch, n_parsed),
-                        ("updatedb", frontier_n + n_fetch, new_n),
-                    )
-                ],
-                tag=f"cycle-{cycle}",
-            )
+        # metrics + lineage (north_rule: per-partition rows). The metrics
+        # aggregate (A5, collected above — ~1 row per partition over the
+        # segment) lands via a driver-side pyarrow write — one Spark job
+        # instead of two write jobs + two serial output-committer passes
+        # per cycle.
+        if met_rows:
+            self.metrics_t.append_rows(met_rows, tag=f"cycle-{cycle}")
+        self.lineage_t.append_rows(
+            [
+                {"cycle": cycle, "stage": s, "rows_in": ri, "rows_out": ro}
+                for s, ri, ro in (
+                    ("generate", frontier_n, n_gen),
+                    ("fetch", n_gen, n_fetch),
+                    ("parse", n_fetch, n_parsed),
+                    ("updatedb", frontier_n + n_fetch, new_n),
+                )
+            ],
+            tag=f"cycle-{cycle}",
+        )
 
-            _mark("A5b:log_appends")
-            # atomic install — THE pointer swap that marks the cycle complete.
-            # The bucketed data files were written in A3; this step is a
-            # driver-side JSON rename, no Spark job.
-            self.frontier_t.install(pending)
-            _mark("A6:frontier_install")
+        # atomic install — THE pointer swap that marks the cycle complete.
+        # The bucketed data files were written in A3; this step is a
+        # driver-side JSON rename, no Spark job.
+        self.frontier_t.install(pending)
 
-            # snapshot GC (CrawlDb.install old-dir rotation / Iceberg
-            # expire_snapshots analogue): state tables only — at 10^10 rows
-            # every retained frontier snapshot is a full copy of the crawl
-            # state, so unbounded retention is itself a scale bug. Runs AFTER
-            # install so a crash mid-expire still leaves the committed cycle
-            # intact; keep >= 2 preserves current + old like the reference.
-            if cfg.snapshot_keep > 0:
-                self.frontier_t.expire_snapshots(cfg.snapshot_keep, self.spark)
-                self.sketch_t.expire_snapshots(cfg.snapshot_keep, self.spark)
+        # snapshot GC (CrawlDb.install old-dir rotation / Iceberg
+        # expire_snapshots analogue): state tables only — at 10^10 rows
+        # every retained frontier snapshot is a full copy of the crawl
+        # state, so unbounded retention is itself a scale bug. Runs AFTER
+        # install so a crash mid-expire still leaves the committed cycle
+        # intact; keep >= 2 preserves current + old like the reference.
+        if cfg.snapshot_keep > 0:
+            self.frontier_t.expire_snapshots(cfg.snapshot_keep, self.spark)
+            self.sketch_t.expire_snapshots(cfg.snapshot_keep, self.spark)
 
-            fetchlist.unpersist()
-            fetch_out.unpersist()
-            parsed["docs_nested"].unpersist()
-            if _trace:
-                prev = t_start
-                spans = []
-                for label, ts in _marks:
-                    spans.append(f"{label}={ts - prev:.2f}s")
-                    prev = ts
-                spans += [f"{k}={v:.2f}s(thread)" for k, v in _spans.items()]
-                print(f"[cycle {cycle} stages] " + " ".join(spans), flush=True)
-            return CycleResult(
-                cycle=cycle, generated=n_gen, fetched=n_fetch, parsed=n_parsed,
-                frontier_size=new_n, new_urls=new_n - frontier_n,
-                wall_s=time.time() - t_start,
-            )
-        finally:
-            # an error anywhere above lets in-flight worker actions
-            # FINISH before it propagates: a crawl() redo never races
-            # an orphaned append/prepare on the same snapshot log/dir
-            # (the pointer-swap log is single-writer-per-table by
-            # design, not lock-protected)
-            pool.shutdown(wait=True)
+        fetchlist.unpersist()
+        parsed["docs_nested"].unpersist()
+        return CycleResult(
+            cycle=cycle, generated=n_gen, fetched=n_fetch, parsed=n_parsed,
+            frontier_size=new_n, new_urls=new_n - frontier_n,
+            wall_s=time.time() - t_start,
+        )
 
 
 def crawl(spark: SparkSession, catalog_root: str, cfg: CrawlConfig,

@@ -29,6 +29,7 @@ import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -193,12 +194,18 @@ class SnapshotTable:
         os.makedirs(path, exist_ok=True)
         pq.write_table(table, os.path.join(path, "part-00000.parquet"))
 
-    def read_pending(self, spark: SparkSession, pending: dict) -> DataFrame:
-        """Scan a prepare()d-but-not-installed snapshot's data files."""
-        snap = Snapshot(**pending)
+    def read_files(self, spark: SparkSession, snap: Snapshot | dict,
+                   schema: StructType | None = None) -> DataFrame:
+        """Scan one snapshot's own data files: an installed one, or a
+        prepare()d one not yet installed. Never the append chain read()
+        unions. `schema`, the schema the writer wrote, spares a plain
+        snapshot's scan the schema-inference job."""
+        if isinstance(snap, dict):
+            snap = Snapshot(**snap)
         if snap.bucket_col:
             return self._read_bucketed(spark, snap)
-        return spark.read.parquet(snap.path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(snap.path)
 
     def install(self, pending: dict) -> Snapshot:
         """Phase 2 of every write: add a prepare()d snapshot to the log in
@@ -255,9 +262,7 @@ class SnapshotTable:
             if snap is None:
                 raise KeyError(f"table {self.name} has no snapshots")
         if not snap.append:
-            if snap.bucket_col:
-                return self._read_bucketed(spark, snap)
-            return spark.read.parquet(snap.path)
+            return self.read_files(spark, snap)
         # append snapshot: union every append since the last full commit
         paths = []
         for e in self.snapshots():

@@ -157,6 +157,7 @@ def test_crawl_ordering_deterministic(spark, corpus_tables, cfg, tmp_path):
 # cycle order (A1 fetch append, A2 documents commit, A3 frontier write,
 # A4 sketch commit, A5 metrics collect, A6 frontier install).
 CRASH_POINTS = (
+    ("fetch_t", "append"),              # A1, before any later plan exists
     ("documents_t", "commit"),          # after A1
     ("frontier_t", "prepare"),          # after A1, A2
     ("sketch_t", "commit"),             # after A1-A3, A5
@@ -339,6 +340,41 @@ def test_updatedb_merge_shuffles_no_frontier_side(spark, corpus_tables, cfg, tmp
     plain = spark.read.parquet(drv.frontier_t.latest().path).drop("is_new")
     assert any("Exchange" in n for n in _frontier_side_of_join(merge(plain)))
     parsed["docs_nested"].unpersist()
+
+
+def test_updatedb_plan_reads_the_fetch_segment(spark, corpus_tables, cfg, tmp_path,
+                                               monkeypatch):
+    """A3's plan starts from the fetch segment A1 committed, as the
+    reference's updatedb reads crawl_fetch: its executed plan scans the
+    frontier snapshot once (the merge's own side) and this cycle's
+    fetch_status snapshot, instead of re-embedding the generate -> fetch
+    lineage down to the frontier scan in every consumer of the fetch."""
+    root = str(tmp_path / "cat")
+    args = (corpus_tables["seeds"], corpus_tables["web_graph"],
+            corpus_tables["robots"], corpus_tables["raw_content"])
+    crawl(spark, root, cfg, *args, depth=1)
+    drv = CrawlDriver(spark, root, cfg, *args[1:])
+    frontier_scan = drv.frontier_t.latest().table_name
+    plans = []
+    real = drv.frontier_t.prepare
+
+    def prepare(df, *a, **kw):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, *a, **kw)
+
+    monkeypatch.setattr(drv.frontier_t, "prepare", prepare)
+    # scan nodes abbreviate their file locations to this many characters
+    key = "spark.sql.maxMetadataStringLength"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "100000")
+    try:
+        drv.run_cycle(2)
+    finally:
+        spark.conf.set(key, old)
+    (plan,) = plans
+    segment = drv.fetch_t.by_tag("cycle-2").path
+    assert plan.count(frontier_scan) == 1, plan.count(frontier_scan)
+    assert plan.count(segment) >= 1
 
 
 def test_snapshot_expiry_keeps_resume_intact(spark, corpus_tables, cfg, tmp_path):
