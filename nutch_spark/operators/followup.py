@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from nutch_spark.checkpoints import iter_checkpoint
 from nutch_spark.config import CrawlConfig
 from nutch_spark.functions.urls import host_col
+from nutch_spark.schemas import empty_frame
 
 
 def intended_outlinks_by_depth(depth: int, cfg: CrawlConfig) -> int:
@@ -48,7 +49,7 @@ def select_followup_outlinks(links: DataFrame, depth: int, cfg: CrawlConfig) -> 
     depth+1 (Fetcher.java:1160-1192). Effective per-page cap = num.links in
     outlink order; same-host filter when ignore_external."""
     if cfg.follow_outlinks_depth <= 0 or depth >= cfg.follow_outlinks_depth:
-        return links.sparkSession.createDataFrame([], "url string, from_url string")
+        return empty_frame(links.sparkSession, "url string, from_url string")
     out = links
     if cfg.follow_outlinks_ignore_external:  # :1178-1182
         out = out.filter(host_col(F.col("to_url")) == host_col(F.col("url")))

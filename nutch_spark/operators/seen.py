@@ -51,6 +51,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from nutch_spark.schemas import empty_frame
+
 SKETCH_FMT = 3
 
 SKETCH_SCHEMA = T.StructType(
@@ -138,9 +140,8 @@ def update_seen_sketch(sketch: DataFrame | None, new_urls_df: DataFrame,
     One cogroup kernel call per bucket; buckets without new URLs pass their
     bitmap through untouched."""
     bits, k = params.bits, params.k
-    spark = new_urls_df.sparkSession
     if sketch is None:
-        sketch = spark.createDataFrame([], SKETCH_SCHEMA)
+        sketch = empty_frame(new_urls_df.sparkSession, SKETCH_SCHEMA)
     urls_b = (new_urls_df.select("url", *_lane_cols())
               .withColumn("bucket", _bucket_col(params.buckets)))
 

@@ -322,10 +322,14 @@ class CrawlDriver:
 
 def crawl(spark: SparkSession, catalog_root: str, cfg: CrawlConfig,
           seeds: DataFrame, web_graph: DataFrame, robots: DataFrame,
-          raw_content: DataFrame, depth: int, t0_ms: int = T0_DEFAULT) -> list[CycleResult]:
+          raw_content: DataFrame, depth: int, t0_ms: int = T0_DEFAULT,
+          resolver: DataFrame | None = None) -> list[CycleResult]:
     """Run (or resume) a depth-cycle crawl. Safe to re-invoke after a kill:
-    completed cycles are skipped via snapshot tags."""
-    drv = CrawlDriver(spark, catalog_root, cfg, web_graph, robots, raw_content, t0_ms)
+    completed cycles are skipped via snapshot tags. `resolver` is the
+    (host, ip) table a byIP `partition_mode` or `fetcher_queue_mode` needs
+    (see `CrawlDriver`)."""
+    drv = CrawlDriver(spark, catalog_root, cfg, web_graph, robots, raw_content,
+                      t0_ms, resolver=resolver)
     drv.bootstrap(seeds)
     done = drv.last_completed_cycle()
     results = []

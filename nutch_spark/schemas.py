@@ -6,7 +6,18 @@ protocol/Content.java:45-69, parse/ParseData.java, FIXTURES.md.
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+
+
+def empty_frame(spark: SparkSession, schema: T.StructType | str) -> DataFrame:
+    """No rows of `schema` (a StructType or DDL string), planned in the JVM:
+    `createDataFrame([], schema)` scans a PythonRDD, a Python job of its
+    own on every action. Every column comes out nullable."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    return spark.range(0).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields])
 
 # ---------------------------------------------------------------------------
 # CrawlDatum status codes (reference: crawl/CrawlDatum.java:48-87)

@@ -6,7 +6,11 @@ Every knob here is chosen for the 1000-executor / 100 TB target and merely
 - Arrow on (all Python crosses the boundary in columnar batches),
 - speculation off (politeness: a host's partition must never run twice
   concurrently — reference: fetcher/Fetcher.java:1457),
-- UTC session timezone so epoch arithmetic matches the DuckDB oracle.
+- UTC session timezone so epoch arithmetic matches the DuckDB oracle,
+- Python workers forked from `nutch_spark.pydaemon`, PySpark's daemon with
+  a guard that stops each task re-reading the directory of the zip pyspark
+  is imported from (~0.25 s per task); the engine's import root is on the
+  workers' PYTHONPATH so that daemon starts before any --py-files land.
 """
 
 from __future__ import annotations
@@ -92,6 +96,8 @@ def get_spark(
         # seconds per query for it. Off: errors lose the user-code line
         # pointer, nothing else changes.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # fork Python workers from the engine's daemon (see pydaemon.py)
+        .config("spark.python.daemon.module", "nutch_spark.pydaemon")
     )
     # ad-hoc overrides for experiments/cluster tuning:
     # SPARK_GRAFT_CONF="spark.io.compression.codec=zstd;spark.foo=bar"
@@ -100,4 +106,21 @@ def get_spark(
         builder = builder.config(k.strip(), v.strip())
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # every Python function the session builds takes its worker environment
+    # from sc.environment, which already holds any spark.executorEnv.PYTHONPATH
+    # set by the caller, spark-submit --conf or spark-defaults
+    env = spark.sparkContext.environment
+    env["PYTHONPATH"] = _worker_pythonpath(env.get("PYTHONPATH"))
+    return spark
+
+
+def _worker_pythonpath(user: str | None) -> str:
+    """`user`'s entries, then the directory or zip this package is imported
+    from, which `python -m nutch_spark.pydaemon` needs before the task's
+    --py-files are added to the worker's path."""
+    entries = [e for e in (user or "").split(os.pathsep) if e]
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if root not in entries:
+        entries.append(root)
+    return os.pathsep.join(entries)

@@ -377,6 +377,39 @@ def test_updatedb_plan_reads_the_fetch_segment(spark, corpus_tables, cfg, tmp_pa
     assert plan.count(segment) >= 1
 
 
+def test_byip_crawl_partitions_by_resolved_address(spark, corpus_tables, cfg,
+                                                   tmp_path, monkeypatch):
+    """`crawl(resolver=)` reaches generate: with every host resolved to one
+    address, a byIP crawl puts the whole fetchlist in one partition, and
+    no stage warns about a byHost fallback."""
+    import warnings
+
+    from nutch_spark.plans import crawl_cycle
+
+    fetchlists = []
+    real = crawl_cycle.generate
+
+    def generate(*a, **kw):
+        fl = real(*a, **kw)
+        fetchlists.append(fl.select("host", "partition_id").distinct().collect())
+        return fl
+
+    monkeypatch.setattr(crawl_cycle, "generate", generate)
+    resolver = (corpus_tables["web_graph"].select("host").distinct()
+                .withColumn("ip", F.lit("10.0.0.1")))
+    ip_cfg = CrawlConfig(**{**cfg.__dict__, "partition_mode": "byIP",
+                            "fetcher_queue_mode": "byIP"})
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        crawl(spark, str(tmp_path / "cat"), ip_cfg, corpus_tables["seeds"],
+              corpus_tables["web_graph"], corpus_tables["robots"],
+              corpus_tables["raw_content"], depth=1, resolver=resolver)
+    assert not [w for w in caught if "byIP" in str(w.message)]
+    (rows,) = fetchlists
+    assert len({r.host for r in rows}) > 1
+    assert len({r.partition_id for r in rows}) == 1
+
+
 def test_snapshot_expiry_keeps_resume_intact(spark, corpus_tables, cfg, tmp_path):
     """snapshot_keep GC (CrawlDb.install current+old rotation / Iceberg
     expire_snapshots analogue): state tables keep only the newest K

@@ -133,3 +133,20 @@ def test_sketch_params_for_urls():
         prev = p
     assert SketchParams.for_urls(1 << 18).buckets == 1
     assert SketchParams.for_urls((1 << 18) + 1).buckets == 2
+
+
+def test_sketch_build_runs_no_python_scan(spark):
+    """The empty base of a full build is planned in the JVM: no
+    `Scan ExistingRDD` (a PythonRDD job of its own), and the same bitmaps
+    as a build over a `createDataFrame([])` base."""
+    from nutch_spark.operators.seen import SKETCH_SCHEMA, update_seen_sketch
+
+    urls = spark.range(300).select(
+        F.concat(F.lit("http://h"), (F.col("id") % 7).cast("string"),
+                 F.lit(".com/p/"), F.col("id").cast("string")).alias("url"))
+    sketch = build_seen_sketch(urls, P)
+    plan = sketch._jdf.queryExecution().executedPlan().toString()
+    assert "Scan ExistingRDD" not in plan, plan
+    rows = {(r.bucket, bytes(r.bitmap), r.n_urls) for r in sketch.collect()}
+    rdd_base = update_seen_sketch(spark.createDataFrame([], SKETCH_SCHEMA), urls, P)
+    assert rows == {(r.bucket, bytes(r.bitmap), r.n_urls) for r in rdd_base.collect()}

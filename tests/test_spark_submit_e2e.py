@@ -34,11 +34,11 @@ def pyzip(tmp_path_factory):
     return str(z)
 
 
-def _submit(args, timeout=600):
+def _submit(args, timeout=600, cwd=REPO, env=None):
     cmd = [SPARK_SUBMIT, "--master", "local[4]",
            "--conf", "spark.driver.memory=4g"] + args
-    return subprocess.run(cmd, cwd=REPO, capture_output=True, text=True,
-                          timeout=timeout)
+    return subprocess.run(cmd, cwd=cwd, env=env, capture_output=True,
+                          text=True, timeout=timeout)
 
 
 def test_crawl_loop_via_spark_submit(pyzip, tmp_path):
@@ -81,3 +81,35 @@ def test_nutch_tool_readdb_via_spark_submit(pyzip, tmp_path, spark):
     assert set(rows) == {1, 2, 3}  # one stats row per crawl status
     assert sum(r.n for r in rows.values()) == 3
     assert rows[1].max_score == 2.5 and rows[3].max_retries == 1
+
+
+def test_udf_job_via_spark_submit_outside_the_repo(pyzip, tmp_path):
+    """A --py-files job started from a directory without the package: the
+    workers' daemon (`python -m nutch_spark.pydaemon`) must import the
+    engine from the shipped zip, not from the working directory."""
+    job = tmp_path / "udf_job.py"
+    job.write_text("""
+import json
+import pandas as pd
+from pyspark.sql import functions as F
+from nutch_spark.session import get_spark
+
+spark = get_spark("submit-udf", master="local[2]")
+
+@F.pandas_udf("string")
+def where(s: pd.Series) -> pd.Series:
+    from nutch_spark import pydaemon
+    info = json.dumps([pydaemon.installed(), pydaemon.__file__])
+    return s.map(lambda _: info)
+
+rows = spark.range(0, 4, 1, 2).select(where(F.col("id").cast("string")).alias("w"))
+print(json.dumps(sorted({r.w for r in rows.collect()})))
+""")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    p = _submit(["--py-files", pyzip, str(job)], cwd=str(tmp_path), env=env)
+    assert p.returncode == 0, p.stderr[-3000:]
+    (line,) = [ln for ln in p.stdout.splitlines() if ln.startswith("[")]
+    (info,) = json.loads(line)
+    installed, module_file = json.loads(info)
+    assert installed
+    assert module_file.startswith(pyzip), module_file
