@@ -22,8 +22,8 @@ from nutch_spark.operators.fetch import fetch_metrics, run_fetch
 from nutch_spark.operators.generate import generate, mark_generated
 from nutch_spark.operators.inject import inject
 from nutch_spark.operators.parse import run_parse
-from nutch_spark.operators.seen import (SketchParams, build_seen_sketch,
-                                        update_seen_sketch)
+from nutch_spark.operators.seen import (SKETCH_SCHEMA, SketchParams,
+                                        build_seen_sketch, update_seen_sketch)
 from nutch_spark.operators.updatedb import update_frontier
 from nutch_spark.storage import Catalog
 
@@ -268,8 +268,10 @@ class CrawlDriver:
         base = self.sketch_t.by_tag(frontier_snap.tag)
         want = SketchParams.for_urls(new_n)
         if base and SketchParams.from_summary(base.params) == want:
+            # the base is a plain snapshot of SKETCH_SCHEMA: scanned with
+            # it, it costs no schema-inference job on the serial tail
             new_sketch = update_seen_sketch(
-                self.sketch_t.read(self.spark, snapshot_id=base.snapshot_id),
+                self.sketch_t.read_files(self.spark, base, SKETCH_SCHEMA),
                 committed.filter(F.col("is_new")).select("url"), want)
         else:
             new_sketch = build_seen_sketch(committed, want)
