@@ -37,8 +37,12 @@ class CrawlConfig:
     # already handed to a fetcher (generate.curTime is the cur_time_ms
     # argument threaded through generate(), not a conf knob)
     gen_update_crawldb: bool = False
-    partition_mode: str = "byHost"           # partition.url.mode
-    fetcher_queue_mode: str = "byHost"       # fetcher.queue.mode (byHost|byDomain|byIP)
+    # partition.url.mode (byHost|byDomain|byIP): the unit generate hashes
+    # into the logical partition_id that topN and the caps count in
+    partition_mode: str = "byHost"
+    # fetcher.queue.mode (byHost|byDomain|byIP): the politeness-queue unit;
+    # run_fetch places the fetchlist one unit per fetch task
+    fetcher_queue_mode: str = "byHost"
     partition_seed: int = 42                 # partition.url.seed (fixed for reproducibility)
     num_partitions: int = 32                 # reducer count analogue
     # state-table snapshot retention (CrawlDb.install keeps current + old
@@ -227,13 +231,6 @@ class CrawlConfig:
         # generate.max.per.host back-compat (Generator.java:142-148)
         if self.gen_max_count == -1 and self.gen_max_per_host != -1:
             self.gen_max_count = self.gen_max_per_host
-
-    @property
-    def politeness_key(self) -> str:
-        """Column used as the politeness/queue unit (host by default)."""
-        return {"byHost": "host", "byDomain": "domain", "byIP": "host"}[
-            self.partition_mode
-        ]
 
 
 DEFAULT = CrawlConfig()

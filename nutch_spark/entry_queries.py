@@ -240,12 +240,12 @@ def q_partition_byip(spark, sf_dir):
     table (operators/resolve.py) — deterministic md5 fixture standing in
     for the batched-resolution table (no DNS in this sandbox); ~25% of
     hosts stay unresolved to exercise the UnknownHostException fallback."""
-    from nutch_spark.operators.resolve import fake_resolver, with_resolved_keys
+    from nutch_spark.operators.resolve import fake_resolver, politeness_key
 
     f = derived_frontier(spark, sf_dir)
     res = fake_resolver(f.select("host"))
-    keyed = with_resolved_keys(f, res)
-    return keyed.groupBy("pkey").agg(F.count(F.lit(1)).alias("n_urls"))
+    keyed, key = politeness_key(f, "byIP", res)
+    return keyed.groupBy(key).agg(F.count(F.lit(1)).alias("n_urls"))
 
 
 SQL_PARTITION_BYIP = f"""

@@ -278,10 +278,10 @@ def normalize_chain_split(df: DataFrame, in_col: str, out_col: str,
     barrier — already-normal URLs never cross into Python, and the regexp
     chain runs exactly once per row however many filter rules read it.
     Callers: inject (prepare_seeds, scope inject), outlinks (run_parse,
-    scope outlink), redirect targets (build_redirect_chains, scope
-    fetcher) and ARC import (arc_to_segment, scope fetcher). loop_count is
-    urlnormalizer.loop.count. NULL or rejected in_col rows yield NULL
-    out_col."""
+    scope outlink), redirect targets (build_redirect_chains and run_parse's
+    redirect and meta-refresh linked rows, scope fetcher) and ARC import
+    (arc_to_segment, scope fetcher). loop_count is urlnormalizer.loop.count.
+    NULL or rejected in_col rows yield NULL out_col."""
     from nutch_spark.functions.urls import normalize_inline
 
     ns = normalizers_for_loop_count(loop_count)

@@ -19,9 +19,12 @@ with per-host FIFO queues, N worker threads, and a politeness clock
 Here the "network" is the deterministic web_graph corpus, so fetching is a
 pure function and the politeness clock is a *virtual* clock simulated inside
 one `mapInPandas` kernel per partition. Politeness is guaranteed structurally:
-the fetchlist is hash-partitioned by host (crawl/URLPartitioner.java:36-93),
-so a host never appears in two partitions, and within the partition the
-kernel enforces the queue discipline. Determinism: same input partition ->
+run_fetch is the one place that places the fetchlist. It hash-partitions it
+on the fetcher.queue.mode unit (host, registered domain or resolved address;
+operators/resolve.py), so a queue never spans two fetch tasks, and within
+the task the kernel enforces the queue discipline. The generator's
+partition.url.mode decides only the logical partition_id its topN counts
+in (crawl/URLPartitioner.java:36-93). Determinism: same input partition ->
 same virtual schedule -> same fetch order, at ANY core count (this is what
 makes the N-vs-4N scaling run produce identical output).
 """
@@ -41,6 +44,7 @@ from nutch_spark import schemas
 from nutch_spark.config import CrawlConfig
 from nutch_spark.corpus import page_signature
 from nutch_spark.functions.urls import choose_repr_url, host_col
+from nutch_spark.operators.resolve import politeness_key
 
 FETCH_OUT_SCHEMA = T.StructType(
     list(schemas.FETCH_SCHEMA.fields)
@@ -690,8 +694,8 @@ def run_fetch(
     start_ms: int,
     resolver: DataFrame | None = None,
 ) -> DataFrame:
-    """Join the fetchlist with the simulated web + robots, then run the
-    politeness kernel per host-partition.
+    """Join the fetchlist with the simulated web + robots, place it one
+    politeness-queue unit per task, then run the politeness kernel.
 
     Scale notes: robots is per-host (small) -> broadcast. web_graph at 100 TB
     is the content store; the join is an equi-join on url that AQE handles
@@ -723,45 +727,25 @@ def run_fetch(
     if cfg.http_redirect_max > 0:
         # R5: pre-join each redirecting row's normalized+filtered target
         # chain so the kernel can follow it in-thread (Fetcher.java:826-942)
-        seed = fetchlist.select("url").join(wg, "url", "left").select(
-            "url", "page_status", "redirect_to"
-        )
+        seed = fl.select("url", "page_status", "redirect_to")
         fl = fl.join(build_redirect_chains(seed, wg, rb, cfg), "url", "left")
 
     # fetcher.queue.mode (Fetcher.java FetchItemQueues queueMode): the
-    # politeness-queue unit. byDomain shares one queue across a domain's
-    # hosts; byIP shares one across an address's vhosts, keyed by the
-    # injectable resolution table (operators/resolve.py) with host
-    # fallback on unresolved rows. The kernel reads `queue_key` when
-    # present; in-kernel redirect targets queue by host (no resolver at
-    # that point — the reference's UnknownHostException path).
-    qmode = cfg.fetcher_queue_mode
-    if qmode == "byIP" and resolver is None:
-        import warnings
+    # politeness-queue unit (operators/resolve.py). The kernel reads
+    # `queue_key` when present; in-kernel redirect targets queue by host
+    # (no resolver at that point — the reference's UnknownHostException
+    # path).
+    fl, key = politeness_key(fl, cfg.fetcher_queue_mode, resolver)
+    if key != "host":
+        fl = fl.withColumnRenamed(key, "queue_key")
+        key = "queue_key"
 
-        warnings.warn(
-            "fetcher_queue_mode='byIP' with no resolver table: queueing "
-            "byHost (pass resolver= to run_fetch()/CrawlDriver)",
-            stacklevel=2)
-    if qmode == "byIP" and resolver is not None:
-        fl = (
-            fl.join(resolver.select("host", "ip"), "host", "left")
-            .withColumn("queue_key", F.coalesce(F.col("ip"), F.col("host")))
-            .drop("ip")
-        )
-    elif qmode == "byDomain":
-        from nutch_spark.functions.urls import domain_udf
-
-        fl = fl.withColumn("queue_key", domain_udf(F.col("url")))
-
-    # politeness placement: one queue unit -> one partition, spread by
-    # sort_hash (P1/P3/P4). Repartition on the HIGH-CARDINALITY queue key
-    # (host by default), not on the logical partition_id: hashing a 0..n-1
-    # id into n buckets collides (measured: 18/32 buckets filled, 2x skew)
-    # while hash(host) balances; the politeness invariant (one queue unit
-    # -> one physical partition) holds either way.
-    place = F.col("queue_key") if "queue_key" in fl.columns else F.col("host")
-    fl = fl.repartition(cfg.num_partitions, place).sortWithinPartitions(
+    # politeness placement, the fetchlist's only one: one queue unit -> one
+    # fetch task, spread by sort_hash (P1/P3/P4). Repartition on the
+    # HIGH-CARDINALITY queue key, not on the logical partition_id: hashing
+    # a 0..n-1 id into n buckets collides (measured: 18/32 buckets filled,
+    # 2x skew) while hash(host) balances.
+    fl = fl.repartition(cfg.num_partitions, F.col(key)).sortWithinPartitions(
         "sort_hash", "url"
     )
     kernel = fetch_partition_kernel(cfg, cycle, start_ms)

@@ -10,10 +10,13 @@ Reference semantics (crawl/Generator.java):
   within partition_id, NOT a global orderBy (which wouldn't scale anyway).
 - per-host/domain cap (:277-313): generate.max.count per host, overflow
   spilling to up to maxNumSegments segments.
-- politeness partitioning (crawl/URLPartitioner.java:36-93): partition by
-  hash(host) ^ seed so one host lands in exactly one partition.
-- intra-partition order (:369-398): byte-reversed 31-hash of the URL so
-  same-host URLs spread apart inside a partition.
+- partitioning (crawl/URLPartitioner.java:36-93): the logical
+  partition_id is hash(unit) ^ seed over the partition.url.mode unit, and
+  topN and the caps apply per partition_id. The generator only selects:
+  run_fetch places the fetchlist, one fetcher.queue.mode unit per fetch
+  task, as the reference's fetcher groups a partition into queues.
+- intra-partition order (:369-398): the sort_hash column, a byte-reversed
+  31-hash of the URL so same-host URLs spread apart inside a fetch task.
 
 Scale design: each selection is one `row_number` window under a rank filter,
 which Spark plans as a Partial `WindowGroupLimit` before the shuffle: every
@@ -29,7 +32,8 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from nutch_spark import schemas
 from nutch_spark.config import CrawlConfig
-from nutch_spark.functions.urls import domain_udf, fetch_order_hash_udf
+from nutch_spark.functions.urls import fetch_order_hash_udf
+from nutch_spark.operators.resolve import politeness_key
 
 GENERATE_TIME_KEY = "_ngt_"  # crawl/Generator.java:64
 
@@ -83,36 +87,29 @@ def select_due(frontier: DataFrame, cfg: CrawlConfig, cur_time_ms: int) -> DataF
     return df
 
 
+def _stamp_generated(cur_time_ms: int):
+    """metadata with GENERATE_TIME_KEY set to the generate time (G6)."""
+    return F.map_concat(
+        F.map_filter(
+            F.coalesce(F.col("metadata"), F.create_map().cast("map<string,string>")),
+            lambda k, _: k != GENERATE_TIME_KEY,
+        ),
+        F.create_map(F.lit(GENERATE_TIME_KEY), F.lit(str(cur_time_ms))),
+    )
+
+
 def generate(frontier: DataFrame, cfg: CrawlConfig, cur_time_ms: int,
              resolver: DataFrame | None = None) -> DataFrame:
-    """Produce the fetchlist: due rows, topN per partition, host caps,
-    politeness partitioning, hash-ordered within partition."""
+    """Select the fetchlist: due rows, topN per logical partition, host
+    caps, and the sort_hash fetch order. Physical placement is run_fetch's
+    (one fetcher.queue.mode unit per fetch task)."""
     due = select_due(frontier, cfg, cur_time_ms)
 
-    # byDomain mode (URLPartitioner.java:36-93 PARTITION_MODE_DOMAIN):
-    # derive the registered domain once. byIP (URLPartitioner.java:79-86)
-    # keys on the resolved address from an injectable (host, ip) resolver
-    # table (operators/resolve.py — no DNS here, and per-record lookups
-    # would not scale anyway); unresolved or resolver-less rows fall back
-    # to host, the reference's UnknownHostException path.
-    needs_domain = "byDomain" in (cfg.partition_mode, cfg.gen_count_mode)
-    if needs_domain and "domain" not in due.columns:
-        due = due.withColumn("domain", domain_udf(F.col("url")))
-    if cfg.partition_mode == "byIP" and resolver is not None:
-        from nutch_spark.operators.resolve import with_resolved_keys
-
-        due = with_resolved_keys(due, resolver)
-        key = F.col("pkey")
-    else:
-        if cfg.partition_mode == "byIP":
-            import warnings
-
-            warnings.warn(
-                "partition_mode='byIP' with no resolver table: falling "
-                "back to byHost (pass resolver= to generate()/CrawlDriver)",
-                stacklevel=2)
-        key = F.col(cfg.politeness_key) if cfg.politeness_key in due.columns else F.col("host")
-    df = due.withColumn("partition_id", partition_expr(key, cfg))
+    # logical reducer id on the partition.url.mode unit (byIP: `resolver`
+    # is the (host, ip) table, operators/resolve.py); the key column rides
+    # along so a fetch queueing on the same unit reuses it
+    due, key = politeness_key(due, cfg.partition_mode, resolver)
+    df = due.withColumn("partition_id", partition_expr(F.col(key), cfg))
 
     limit = max(1, cfg.topn // cfg.num_partitions)  # Generator.java:141
 
@@ -121,9 +118,11 @@ def generate(frontier: DataFrame, cfg: CrawlConfig, cur_time_ms: int,
         # per-host/domain cap (G4/G5): a cap key's first max.count rows by
         # score go to segment 1, the next max.count to segment 2, ... up to
         # maxNumSegments; rows past that allowance are not generated
-        kcol = F.col("domain") if cfg.gen_count_mode == "byDomain" else F.col("host")
+        cap = "host"
+        if cfg.gen_count_mode == "byDomain":
+            df, cap = politeness_key(df, "byDomain", None)
         allowance = cfg.gen_max_count * cfg.gen_max_num_segments
-        w_cap = Window.partitionBy("partition_id", kcol).orderBy(*order)
+        w_cap = Window.partitionBy("partition_id", cap).orderBy(*order)
         df = (
             df.withColumn("host_rank", F.row_number().over(w_cap))
             .filter(F.col("host_rank") <= allowance)
@@ -143,33 +142,9 @@ def generate(frontier: DataFrame, cfg: CrawlConfig, cur_time_ms: int,
     ).drop("rank")
 
     # record generate time (G6) so the next cycle's gen-delay gate sees it
-    df = df.withColumn(
-        "metadata",
-        F.map_concat(
-            F.map_filter(
-                F.coalesce(F.col("metadata"), F.create_map().cast("map<string,string>")),
-                lambda k, _: k != GENERATE_TIME_KEY,
-            ),
-            F.create_map(F.lit(GENERATE_TIME_KEY), F.lit(str(cur_time_ms))),
-        ),
-    )
-
-    # --- politeness placement + intra-partition spread (P1/P3/P4) ---
-    # physical placement hashes the politeness unit (balanced across all
-    # partitions; byDomain co-locates a domain's hosts — a superset of the
-    # per-host politeness invariant); partition_id stays the LOGICAL reducer
-    # id for topN semantics + metrics
-    if cfg.partition_mode == "byDomain" and "domain" in df.columns:
-        place = F.col("domain")
-    elif "pkey" in df.columns:  # byIP: co-locate every vhost of an address
-        place = F.col("pkey")
-    else:
-        place = F.col("host")
-    df = df.withColumn("sort_hash", fetch_order_hash_udf(F.col("url")))
-    df = df.repartition(cfg.num_partitions, place).sortWithinPartitions(
-        "sort_hash", "url"
-    )
-    return df.drop("pkey")
+    df = df.withColumn("metadata", _stamp_generated(cur_time_ms))
+    # intra-partition spread (P4): run_fetch sorts on it
+    return df.withColumn("sort_hash", fetch_order_hash_udf(F.col("url")))
 
 
 def mark_generated(frontier: DataFrame, fetchlist: DataFrame, cur_time_ms: int) -> DataFrame:
@@ -180,14 +155,8 @@ def mark_generated(frontier: DataFrame, fetchlist: DataFrame, cur_time_ms: int) 
     # fetchlist side when the frontier is bucket-stored by url
     gen = fetchlist.select("url").withColumn("_was_generated", F.lit(True))
     out = frontier.join(gen, "url", "left")
-    stamped = F.map_concat(
-        F.map_filter(
-            F.coalesce(F.col("metadata"), F.create_map().cast("map<string,string>")),
-            lambda k, _: k != GENERATE_TIME_KEY,
-        ),
-        F.create_map(F.lit(GENERATE_TIME_KEY), F.lit(str(cur_time_ms))),
-    )
     return out.withColumn(
         "metadata",
-        F.when(F.col("_was_generated"), stamped).otherwise(F.col("metadata")),
+        F.when(F.col("_was_generated"), _stamp_generated(cur_time_ms))
+        .otherwise(F.col("metadata")),
     ).drop("_was_generated")

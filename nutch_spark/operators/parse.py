@@ -37,9 +37,9 @@ from pyspark.sql import types as T
 
 from nutch_spark import schemas
 from nutch_spark.config import CrawlConfig
-from nutch_spark.functions.normalizers import normalize_chain_split, with_column_once
+from nutch_spark.functions.normalizers import normalize_chain_split
 from nutch_spark.functions.signatures import make_text_profile_udf
-from nutch_spark.functions.urls import RegexUrlFilter, host_col, normalize_url_udf
+from nutch_spark.functions.urls import RegexUrlFilter, host_col
 from nutch_spark.operators.officeparse import extract_odf, extract_rtf
 from nutch_spark.operators.pdfparse import extract_pdf, extract_text_outlinks
 from nutch_spark.operators.swfparse import extract_swf
@@ -1109,41 +1109,29 @@ def run_parse(
             F.lit(None).cast("string").alias("from_url"),
         )
 
-    # redirect targets -> linked rows (ParseOutputFormat.java:168-204 analogue)
-    # (both target UDFs are pinned behind a Generate barrier: a plain
-    # projection lets the isNotNull filter be pushed down as a second UDF
-    # evaluation)
-    redirs = (
-        with_column_once(fetch_out.filter(F.col("redirect_to").isNotNull())
-                         .select(F.col("url").alias("from_url"), "redirect_to", "score"),
-                         "url", normalize_url_udf(F.col("redirect_to")))
-        .filter(F.col("url").isNotNull())
-        .select(
-            "url",
-            F.lit(schemas.STATUS_LINKED).alias("kind"),
-            F.col("score").alias("score"),
-            F.lit(None).cast("string").alias("signature"),
-            F.lit(None).cast("string").alias("anchor"),
-            "from_url",
-        )
-    )
+    # redirect and meta-refresh targets -> linked rows (ParseOutputFormat.java
+    # :168-204 analogue; X7: HTMLMetaProcessor refresh -> ParseStatus
+    # SUCCESS_REDIRECT -> linked datum), through the crawl's one URL path:
+    # the fetcher-scope chain and the URL filter, and a target equal to its
+    # source is dropped (handleRedirect, Fetcher.java:963-1024, same-url
+    # stop at :985)
+    def targets(df: DataFrame, src: str, raw: str) -> DataFrame:
+        t = normalize_chain_split(df, raw, "url", "fetcher", cfg.urlnormalizer_loop_count)
+        return t.filter(RegexUrlFilter().col(F.col("url")) & (F.col("url") != F.col(src)))
 
-    # meta-refresh targets -> linked rows (X7: HTMLMetaProcessor refresh ->
-    # ParseStatus SUCCESS_REDIRECT -> ParseOutputFormat linked datum)
+    link_cols = [F.lit(schemas.STATUS_LINKED).alias("kind"), F.col("score"),
+                 F.lit(None).cast("string").alias("signature"),
+                 F.lit(None).cast("string").alias("anchor")]
+    redirs = targets(
+        fetch_out.filter(F.col("redirect_to").isNotNull())
+        .select(F.col("url").alias("from_url"), "redirect_to", "score"),
+        "from_url", "redirect_to",
+    ).select("url", *link_cols, "from_url")
     refreshes = (
-        with_column_once(docs_nested.filter(F.col("refresh_to").isNotNull())
-                         .select("doc_id", "refresh_to"),
-                         "url", normalize_url_udf(F.col("refresh_to")))
-        .filter(F.col("url").isNotNull())
+        targets(docs_nested.filter(F.col("refresh_to").isNotNull())
+                .select("doc_id", "refresh_to"), "doc_id", "refresh_to")
         .join(ok.select(F.col("url").alias("doc_id"), F.col("score")), "doc_id")
-        .select(
-            "url",
-            F.lit(schemas.STATUS_LINKED).alias("kind"),
-            F.col("score").alias("score"),
-            F.lit(None).cast("string").alias("signature"),
-            F.lit(None).cast("string").alias("anchor"),
-            F.col("doc_id").alias("from_url"),
-        )
+        .select("url", *link_cols, F.col("doc_id").alias("from_url"))
     )
 
     # parse-meta passthrough rows (X10, ParseOutputFormat.java:154-166):

@@ -17,37 +17,55 @@ the politeness key, exactly the reference's UnknownHostException path.
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame, functions as F
 
-
-def politeness_key_expr(resolved: bool):
-    """Key the partitioner hashes: resolved address if present, else host
-    (URLPartitioner.java:79-86 fallback semantics)."""
-    return F.coalesce(F.col("ip"), F.col("host")) if resolved else F.col("host")
+from nutch_spark.functions.urls import domain_udf, host_col
 
 
-def with_resolved_keys(df: DataFrame, resolver: DataFrame | None) -> DataFrame:
-    """Attach `pkey` (politeness/partition key) to a host-bearing frame.
+def politeness_key(df: DataFrame, mode: str,
+                   resolver: DataFrame | None) -> tuple[DataFrame, str]:
+    """Attach the politeness unit of `mode` to a host-bearing frame and
+    return (frame, key column). The one derivation of the unit: generate
+    keys its logical partition_id on `partition_mode`
+    (URLPartitioner.java:36-93) and run_fetch its queues and placement on
+    `fetcher_queue_mode` (Fetcher.java FetchItemQueues queueMode).
 
-    The join is a plain host-equi join: at 10^10 URLs the resolver table is
-    ~|distinct hosts| (orders of magnitude smaller than the frontier but far
-    beyond broadcast size), so both sides hash on host — callers that know
-    the resolver is small can pass F.broadcast(resolver). Missing hosts keep
-    ip NULL and fall back to the host key.
+    - byHost: `host`.
+    - byDomain: `domain`, the registered domain.
+    - byIP: `pkey`, the resolved address, or the host where the resolver
+      has none (URLPartitioner.java:79-86, the UnknownHostException path).
+      The join is a plain host-equi join: at 10^10 URLs the resolver table
+      is ~|distinct hosts|, far beyond broadcast size, so both sides hash
+      on host. With no resolver table the key is the host, with a warning.
+
+    A key column the frame already carries is reused, so a fetchlist
+    generated under the fetch's mode pays one domain_udf or one resolver
+    join, not two.
     """
-    if resolver is None:
-        return df.withColumn("pkey", F.col("host"))
-    res = resolver.select("host", "ip")
-    out = df.join(res, "host", "left")
-    return out.withColumn("pkey", politeness_key_expr(True)).drop("ip")
+    if mode == "byDomain":
+        if "domain" not in df.columns:
+            df = df.withColumn("domain", domain_udf(F.col("url")))
+        return df, "domain"
+    if mode != "byIP":
+        return df, "host"
+    if "pkey" not in df.columns:
+        if resolver is None:
+            warnings.warn(
+                "byIP politeness key with no resolver table: keying by host "
+                "(pass resolver= to generate()/run_fetch()/CrawlDriver)",
+                stacklevel=3)
+            return df, "host"
+        df = (df.join(resolver.select("host", "ip"), "host", "left")
+              .withColumn("pkey", F.coalesce(F.col("ip"), F.col("host"))).drop("ip"))
+    return df, "pkey"
 
 
 def resolve_urls(urls: DataFrame, resolver: DataFrame | None,
                  url_col: str = "url") -> DataFrame:
     """ResolveUrls analogue (tools/ResolveUrls.java): per-URL resolution
     report — url, host, ip, resolved — as a DataFrame instead of log lines."""
-    from nutch_spark.functions.urls import host_col
-
     df = urls.select(F.col(url_col).alias("url"))
     df = df.withColumn("host", host_col(F.col("url")))
     if resolver is None:

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, functions as F
 from nutch_spark import schemas
 from nutch_spark.config import CrawlConfig
 from nutch_spark.functions.urls import host_col
+from nutch_spark.operators.generate import GENERATE_TIME_KEY
 
 
 def mime_adaptive_interval(
@@ -284,7 +285,7 @@ def update_frontier(
     # drop the generate-time key after a completed cycle (CrawlDbReducer:289-293)
     meta_base = F.when(
         F.col("o_metadata").isNotNull() & has_fetch,
-        F.map_filter(F.col("o_metadata"), lambda k, _: k != F.lit("_ngt_")),
+        F.map_filter(F.col("o_metadata"), lambda k, _: k != GENERATE_TIME_KEY),
     ).otherwise(F.col("o_metadata"))
     # repr-URL from redirects rides in metadata['_repr_'] (C4;
     # CrawlDatum metadata key Nutch.WRITABLE_REPR_URL_KEY,

@@ -143,12 +143,15 @@ class CrawlDriver:
         frontier_n = frontier_snap.row_count
 
         obs_gen, obs_fetch = Observation(), Observation()
-        # cached: run_fetch's redirect chains and mark_generated re-read it
-        fetchlist = (
-            generate(frontier, cfg, cur, resolver=self.resolver)
-            .observe(obs_gen, F.count(F.lit(1)).alias("n"))
-            .cache()
-        )
+        fetchlist = generate(frontier, cfg, cur, resolver=self.resolver).observe(
+            obs_gen, F.count(F.lit(1)).alias("n"))
+        if cfg.gen_update_crawldb or cfg.http_redirect_max > 0:
+            # cached only for a second reader: mark_generated in A3, or the
+            # redirect chains' seed, which every hop re-plans. run_fetch
+            # alone reads it in one pass, where a cache of the unplaced
+            # fetchlist only adds a job (it keeps all of generate's shuffle
+            # partitions)
+            fetchlist = fetchlist.cache()
         fetch_out = (
             run_fetch(fetchlist, self.web_graph, self.robots, cfg, cycle, cur,
                       resolver=self.resolver)

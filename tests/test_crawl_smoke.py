@@ -181,6 +181,36 @@ def test_fetcher_queue_modes_share_politeness_clock(spark, corpus_tables, cfg):
     assert n3 == 6 and b3 - a3 <= 3 * d
 
 
+@pytest.mark.parametrize("pm, qm, domain_udfs, resolver_joins", [
+    ("byHost", "byHost", 0, 0),
+    ("byDomain", "byDomain", 1, 0),
+    ("byIP", "byIP", 0, 1),
+    ("byDomain", "byHost", 1, 0),
+])
+def test_fetchlist_placed_once_per_mode_pair(spark, corpus_tables, cfg, pm, qm,
+                                             domain_udfs, resolver_joins):
+    """URLPartitioner puts a politeness unit's URLs in one fetch task and
+    the fetcher queues them inside it: generate selects, run_fetch places.
+    Over generate -> fetch the fetchlist is repartitioned once, and the
+    politeness key both stages share is derived once."""
+    import re
+
+    frontier = spark.createDataFrame(
+        inject(None, corpus_tables["seeds"], cfg, T0).collect(), schemas.FRONTIER_SCHEMA)
+    hosts = sorted(r.host for r in frontier.select("host").distinct().collect())
+    resolver = spark.createDataFrame([(h, f"10.0.0.{i // 2}") for i, h in enumerate(hosts)],
+                                     "host string, ip string")
+    mcfg = CrawlConfig(**{**cfg.__dict__, "partition_mode": pm, "fetcher_queue_mode": qm})
+    out = run_fetch(generate(frontier, mcfg, T0, resolver=resolver),
+                    corpus_tables["web_graph"], corpus_tables["robots"], mcfg, 1, T0,
+                    resolver=resolver)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("REPARTITION_BY_NUM") == 1, plan
+    assert len(re.findall(r"ArrowEvalPython \[domain_udf", plan)) == domain_udfs, plan
+    # each resolver join scans the resolver's (host, ip) rows once
+    assert len(re.findall(r"ExistingRDD\[host#\d+,ip#\d+\]", plan)) == resolver_joins, plan
+
+
 def test_parse_seed_file_metadata_values_and_duplicates(spark, tmp_path):
     """Injector.java splits key=value ONCE (value keeps embedded '=') and
     duplicate keys are last-wins via Map.put — a limit-less split

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from nutch_spark import schemas
 from nutch_spark.config import CrawlConfig
+from nutch_spark.operators.fetch import run_fetch
 from nutch_spark.operators.generate import GENERATE_TIME_KEY, generate, select_due
 
 T0 = 1_700_000_000_000
@@ -149,7 +150,7 @@ def test_generated_marked_with_ngt(spark):
     assert md[GENERATE_TIME_KEY] == str(T0)
 
 
-def test_byip_vhosts_colocate_and_unresolved_falls_back(spark):
+def test_byip_vhosts_colocate_and_unresolved_falls_back(spark, corpus_tables):
     """URLPartitioner.java:79-86 byIP: two vhosts on one address share a
     partition key; a host missing from the resolver keeps its host key
     (the UnknownHostException path)."""
@@ -175,10 +176,13 @@ def test_byip_vhosts_colocate_and_unresolved_falls_back(spark):
     byhost_pid = {r.host: r.pid for r in byhost
                   .groupBy("host").agg(F.first("partition_id").alias("pid")).collect()}
     assert pid["c.com"][0] == byhost_pid["c.com"]
-    # physical placement follows the resolved key too
-    phys = {r.host: r.parts for r in fl
-            .withColumn("p", F.spark_partition_id()).groupBy("host")
-            .agg(F.collect_set("p").alias("parts")).collect()}
+    # the fetch places the fetchlist: byIP queues put the vhosts of one
+    # address in one fetch task
+    fq = CrawlConfig(**{**cfg.__dict__, "fetcher_queue_mode": "byIP"})
+    fo = run_fetch(fl, corpus_tables["web_graph"], corpus_tables["robots"], fq, 1, T0,
+                   resolver=resolver)
+    phys = {r.host: r.parts for r in fo.groupBy("host")
+            .agg(F.collect_set("partition_id").alias("parts")).collect()}
     assert phys["a.com"] == phys["b.com"] and len(phys["a.com"]) == 1
     # byIP without a resolver table degrades to byHost (declared fallback)
     nores = generate(frontier, cfg, T0)
