@@ -10,7 +10,12 @@ Every knob here is chosen for the 1000-executor / 100 TB target and merely
 - Python workers forked from `nutch_spark.pydaemon`, PySpark's daemon with
   a guard that stops each task re-reading the directory of the zip pyspark
   is imported from (~0.25 s per task); the engine's import root is on the
-  workers' PYTHONPATH so that daemon starts before any --py-files land.
+  workers' PYTHONPATH so that daemon starts before any --py-files land,
+- a generated-code cache that holds a whole crawl cycle's classes, so the
+  next cycle reuses them instead of compiling them again,
+- on a local master, one C2 JIT compiler thread instead of the JVM's
+  default two on 4 cores, so warm-up compiles take fewer of the cores the
+  tasks run on.
 """
 
 from __future__ import annotations
@@ -98,7 +103,20 @@ def get_spark(
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # fork Python workers from the engine's daemon (see pydaemon.py)
         .config("spark.python.daemon.module", "nutch_spark.pydaemon")
+        # keep every class a crawl cycle generates: its plans compile ~150
+        # (stage iterators, projections, orderings), more than Spark's
+        # default cache of 100, so each cycle evicted the last one's and
+        # compiled them all again (~15 ms each; PLANS §7.13). Static: read
+        # when the session's JVM starts
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
+    if master.startswith("local"):
+        # one JVM runs the driver and every task, next to the Python
+        # workers: in its first minute the JIT's two C2 threads took
+        # 13 CPU-s of a 9 s cycle on 4 cores. One C2 thread warms up
+        # more slowly and leaves a core to the tasks. A caller's own
+        # defaultJavaOptions or extraJavaOptions take precedence
+        builder = builder.config("spark.driver.defaultJavaOptions", "-XX:CICompilerCount=2")
     # ad-hoc overrides for experiments/cluster tuning:
     # SPARK_GRAFT_CONF="spark.io.compression.codec=zstd;spark.foo=bar"
     for pair in filter(None, os.environ.get("SPARK_GRAFT_CONF", "").split(";")):
